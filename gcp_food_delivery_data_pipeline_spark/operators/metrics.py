@@ -29,7 +29,11 @@ def run_counts(
     status_col: str = "status",
     delivered_value: str = "delivered",
 ) -> Counts:
-    """C1+C2+C3 in a single aggregation job (one scan, map-side combine)."""
+    """C1+C2+C3 in a single aggregation job (one scan, map-side combine).
+
+    The pipeline counts C1-C3 as ``observe`` metrics on its write job
+    (``pipeline.process_batch``); this is the reference implementation
+    the tests check those counts against."""
     row = cleaned.agg(
         F.count(F.lit(1)).alias("total"),
         F.count(F.when(F.col(status_col) == delivered_value, 1)).alias("delivered"),

@@ -2,9 +2,7 @@
 
 Reference: ``beam.Filter(lambda row: row.split(',')[8] == "delivered")``
 and its complement (code/beam.py:123-135). Here both branches are plain
-Catalyst filters over a shared (persisted) parent, so the scan+clean is
-computed once and each branch's predicate is pushed as far down as the
-optimizer can prove safe.
+Catalyst filters over one parent.
 
 Note the equality is exact post-lowercase: ``"not delivered"`` does NOT
 equal ``"delivered"`` and lands in the *other* branch — an invariant the
@@ -24,6 +22,11 @@ def split_by_status(
 
     NULL statuses land in *other* (they fail the equality), matching the
     reference where a missing field never equals ``"delivered"``.
+
+    The pipeline does not run this split: it writes both tables in one
+    pass with the status class as a partition column
+    (``sources.writers.write_status_fanout``). This is the reference
+    implementation the tests check that fan-out against.
     """
     delivered = df.filter(F.col(status_col) == delivered_value)
     other = df.filter(

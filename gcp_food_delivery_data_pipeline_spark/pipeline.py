@@ -1,32 +1,30 @@
 """Batch pipeline entry point — the reference's whole dataflow graph
-(SURVEY.md §2.8) as one Spark job group.
+(SURVEY.md §2.8) as one Spark job.
 
 Reference graph (code/beam.py:109-193): read → P1..P4 → fan-out to
 {F1→count→sink, F2→count→sink, global count}. Beam executes all five
 terminal edges in one run; Spark's equivalent here is ONE write job:
 the status split is a partition column of a single fan-out write and
-the three counts are ``observe`` metrics on the same job — the whole
-reference graph in one source pass (see ``run_pipeline``; the
-three-action form and its cache trade-off are kept behind
-``single_pass=False``).
+the three counts are ``observe`` metrics on the same job. That job is
+``process_batch``; the batch pipeline (``run_pipeline``) and every
+streaming micro-batch (``streaming.stream``) run it.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark import StorageLevel
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_food_delivery_data_pipeline_spark.config import log_counts
 from gcp_food_delivery_data_pipeline_spark.operators.clean import clean_orders
-from gcp_food_delivery_data_pipeline_spark.operators.metrics import Counts, run_counts
-from gcp_food_delivery_data_pipeline_spark.operators.split import split_by_status
+from gcp_food_delivery_data_pipeline_spark.operators.metrics import Counts
 from gcp_food_delivery_data_pipeline_spark.sources.readers import read_orders_csv
 from gcp_food_delivery_data_pipeline_spark.sources.writers import (
+    BATCH_MODE_ID,
     with_ingest_date,
-    write_status_table,
+    write_status_fanout,
 )
 
 
@@ -37,90 +35,60 @@ class PipelineResult:
     other_path: str
 
 
-def run_pipeline(
-    spark: SparkSession,
-    input_path: str,
-    output_dir: str,
-    single_pass: bool = True,
-    persist: bool = False,
-) -> PipelineResult:
-    """Clean one batch of orders, split by status, append both tables,
-    and return the three run counts (reference entry point B, §3.2).
+def _table_paths(output_dir: str) -> tuple[str, str]:
+    return f"{output_dir}/delivered_orders", f"{output_dir}/other_status_orders"
 
-    ``single_pass=True`` (default) runs the ENTIRE graph — both sinks
-    and all three counts — as one source pass: the status class is a
-    leading partition column of one fan-out write
+
+def process_batch(
+    raw_df: DataFrame, output_dir: str, batch_id: int = BATCH_MODE_ID
+) -> Counts:
+    """Clean one batch of raw orders, write both status tables under
+    ``output_dir`` and return the three run counts — the whole graph as
+    ONE Spark job.
+
+    The status class is a leading partition column of one fan-out write
     (``write_status_fanout``) and C1-C3 ride the same job via
-    ``DataFrame.observe`` (exactly-once metrics, collected when the
-    write action completes — no separate count job). At 100 TB that is
-    one scan instead of three.
-
-    ``single_pass=False`` keeps the three-action form (two filtered
-    writes + one count job). ``persist`` then optionally caches the
-    fan-out point — measured at 1M rows / 13 string columns the
-    columnar cache is a double loss (build costs ~5× the regex
-    projection it saves; the write reading the cache is slower than
-    re-parsing the CSV: 56s cached vs 11.6s recomputed vs 7s
-    single-pass, local[32]), so it defaults off and exists for
-    genuinely expensive upstreams.
+    ``DataFrame.observe`` (collected when the write completes — no
+    separate count job). ``batch_id`` names the tables' leaf and, by the
+    writers' one rule, whether the write appends (``BATCH_MODE_ID``) or
+    replaces that leaf (a stream micro-batch id, so a replay is
+    idempotent).
     """
-    raw = read_orders_csv(spark, input_path)
     # drop_malformed=False: the reference counts C1-C3 on cleaned_data
     # BEFORE the len<12 drop (the guard lives in to_json at the sink,
     # code/beam.py:50-51,140-162) — so counts include short rows and
     # only the sinks exclude them.
-    cleaned = with_ingest_date(clean_orders(raw, drop_malformed=False))
-    delivered_path = f"{output_dir}/delivered_orders"
-    other_path = f"{output_dir}/other_status_orders"
+    cleaned = with_ingest_date(clean_orders(raw_df, drop_malformed=False))
+    obs = Observation("c1_c3")
+    observed = cleaned.observe(
+        obs,
+        F.count(F.lit(1)).alias("total"),
+        F.count(F.when(F.col("status") == "delivered", 1)).alias("delivered"),
+        F.count(
+            F.when(
+                (F.col("status") != "delivered") | F.col("status").isNull(),
+                1,
+            )
+        ).alias("other"),
+    )
+    sink_ready = observed.filter(~F.col("is_short")).drop("is_short")
+    write_status_fanout(sink_ready, *_table_paths(output_dir), batch_id=batch_id)
+    got = obs.get
+    counts = Counts(
+        total=got["total"], delivered=got["delivered"], other=got["other"]
+    )
+    # S6 parity: reference logs the three counts (code/beam.py:140-162).
+    log_counts(counts.total, counts.delivered, counts.other)
+    return counts
 
-    if single_pass:
-        from pyspark.sql import Observation
 
-        from gcp_food_delivery_data_pipeline_spark.sources.writers import (
-            write_status_fanout,
-        )
-
-        obs = Observation("c1_c3")
-        observed = cleaned.observe(
-            obs,
-            F.count(F.lit(1)).alias("total"),
-            F.count(F.when(F.col("status") == "delivered", 1)).alias(
-                "delivered"
-            ),
-            F.count(
-                F.when(
-                    (F.col("status") != "delivered")
-                    | F.col("status").isNull(),
-                    1,
-                )
-            ).alias("other"),
-        )
-        sink_ready = observed.filter(~F.col("is_short")).drop("is_short")
-        write_status_fanout(sink_ready, delivered_path, other_path)
-        got = obs.get
-        counts = Counts(
-            total=got["total"], delivered=got["delivered"], other=got["other"]
-        )
-        log_counts(counts.total, counts.delivered, counts.other)
-        return PipelineResult(
-            counts=counts,
-            delivered_path=delivered_path,
-            other_path=other_path,
-        )
-
-    if persist:
-        cleaned.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        sink_ready = cleaned.filter(~F.col("is_short")).drop("is_short")
-        delivered, other = split_by_status(sink_ready)
-        write_status_table(delivered, delivered_path)
-        write_status_table(other, other_path)
-        counts = run_counts(cleaned)
-        # S6 parity: reference logs the three counts (code/beam.py:140-162).
-        log_counts(counts.total, counts.delivered, counts.other)
-    finally:
-        if persist:
-            cleaned.unpersist()
+def run_pipeline(
+    spark: SparkSession, input_path: str, output_dir: str
+) -> PipelineResult:
+    """Clean one batch of orders, split by status, append both tables,
+    and return the three run counts (reference entry point B, §3.2)."""
+    counts = process_batch(read_orders_csv(spark, input_path), output_dir)
+    delivered_path, other_path = _table_paths(output_dir)
     return PipelineResult(
         counts=counts, delivered_path=delivered_path, other_path=other_path
     )

@@ -7,10 +7,12 @@ code/beam.py:167-193). Spark equivalent: parquet tables partitioned by
 (the reference partitions by LOAD time, not the order's ``date``
 column), ``batch_id`` identifying the producing run.
 
-ONE layout for batch and streaming (round-1 defect fix): batch runs
-append under ``batch_id=<run id>``; streaming micro-batches OVERWRITE
-their own ``(ingest_date, batch_id)`` partitions via dynamic partition
-overwrite — replayed batches are idempotent, and a plain
+ONE layout for batch and streaming, and ONE rule for how a write lands
+(``_replaces_leaf``), derived from ``batch_id`` alone: batch runs
+(``BATCH_MODE_ID``) append, matching the reference's WRITE_APPEND;
+a streaming micro-batch id (>= 0) replaces its own
+``(ingest_date, batch_id)`` leaf, so a replayed batch rewrites the
+rows it wrote before instead of adding to them. A plain
 ``spark.read.parquet(root)`` reads tables produced by either mode.
 
 Scale notes:
@@ -21,6 +23,8 @@ Scale notes:
 """
 
 from __future__ import annotations
+
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,30 +41,31 @@ BATCH_MODE_ID = -1  # batch runs; streaming micro-batch ids are >= 0
 COMPACTED_BATCH_ID = -2  # rows merged by compact_table
 
 
+def _replaces_leaf(batch_id: int) -> bool:
+    """The append-or-replace rule of every status-table write: a
+    streaming micro-batch id (>= 0) replaces its own ``(ingest_date,
+    batch_id)`` leaf; ``BATCH_MODE_ID`` appends. Stream ids never equal
+    ``BATCH_MODE_ID`` or ``COMPACTED_BATCH_ID``, so a replace can never
+    clobber batch-written or compacted rows sharing the table."""
+    return batch_id >= 0
+
+
 def write_status_table(
-    df: DataFrame,
-    path: str,
-    batch_id: int = BATCH_MODE_ID,
-    idempotent: bool = False,
+    df: DataFrame, path: str, batch_id: int = BATCH_MODE_ID
 ) -> None:
     """Day-partitioned parquet write (S3/S4 semantics).
 
-    ``idempotent=False`` (batch): plain append — repeated batch runs
-    accumulate, matching the reference's WRITE_APPEND. Batch writes
-    default to ``batch_id=-1``: streaming micro-batch ids are
-    non-negative, so a stream's dynamic overwrite of its own
-    ``(ingest_date, batch_id)`` partitions can never clobber
-    batch-written rows sharing the table.
-    ``idempotent=True`` (streaming replay): dynamic partition overwrite
-    — only the ``(ingest_date, batch_id)`` partitions present in ``df``
-    are replaced, so re-processing a micro-batch cannot duplicate rows.
+    ``BATCH_MODE_ID`` appends — repeated batch runs accumulate. A stream
+    id uses dynamic partition overwrite: only the ``(ingest_date,
+    batch_id)`` partitions present in ``df`` are replaced, so
+    re-processing a micro-batch cannot duplicate rows.
     """
     if "ingest_date" not in df.columns:
         df = with_ingest_date(df)
     if "batch_id" not in df.columns:
         df = df.withColumn("batch_id", F.lit(batch_id))
     writer = df.write.partitionBy(*PARTITION_COLS)
-    if idempotent:
+    if _replaces_leaf(batch_id):
         writer = writer.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         )
@@ -97,8 +102,8 @@ def compact_table(
     partition but KEEPS the ``(ingest_date, batch_id)`` directory
     layout: dropping the column entirely would leave the table with two
     conflicting partition schemas the moment the next micro-batch
-    appends (Spark refuses to read such a mix), and streaming's dynamic
-    overwrite of its own non-negative batch ids can never clobber the
+    appends (Spark refuses to read such a mix), and a stream batch's
+    replace of its own non-negative batch-id leaf can never clobber the
     compacted partition.
 
     Swap protocol: write to ``<path>.compact_tmp`` → rename original to
@@ -198,17 +203,32 @@ def write_status_fanout(
 
     ``write_status_table`` twice scans (and cleans) the source twice —
     each branch re-reads everything and filters. Here the split key
-    becomes a leading partition column: one write job lays the rows out
-    as ``<tmp>/_status_class={delivered,other}/ingest_date=D/batch_id=N/
-    part-*.parquet``, then each leaf directory's files are renamed into
-    the corresponding table root (file moves are metadata ops on
-    HDFS/local; part file names are run-unique UUIDs, so appending into
-    a leaf that already exists cannot collide). Result is byte- and
-    layout-identical to two ``write_status_table`` appends — readers
-    see the same ``(ingest_date, batch_id)`` partitioning — for half
-    the source passes. On object stores without atomic rename, point
-    the two tables at a manifest-based format instead (same caveat as
-    ``compact_table``).
+    becomes a leading partition column: one write job stages the rows
+    as ``<stage>/_status_class={delivered,other}/ingest_date=D/
+    batch_id=N/part-*.parquet``, where ``<stage>`` is a sibling of
+    ``delivered_path`` unique to this call (concurrent writers never
+    share or delete each other's staged files), removed in ``finally``.
+    Each staged leaf is then published into its table root by the
+    ``_replaces_leaf`` rule:
+
+    * append (``BATCH_MODE_ID``): the leaf's files are renamed into the
+      destination leaf (part file names are run-unique UUIDs, so
+      appending into a leaf that already exists cannot collide);
+    * replace (a stream id): the destination leaf is deleted and the
+      staged leaf directory is renamed into its place.
+
+    Result is layout-identical to two ``write_status_table`` calls —
+    readers see the same ``(ingest_date, batch_id)`` partitioning — for
+    half the source passes. File moves are metadata ops on HDFS/local;
+    on object stores without atomic rename, point the two tables at a
+    manifest-based format instead (same caveat as ``compact_table``).
+
+    Crash consistency: publishing is one rename per leaf (replace) or
+    per file (append), not one atomic step. A stream batch that fails
+    part-way is repaired by its replay, which replaces every leaf again.
+    A batch-mode retry after a partial publish is NOT: the leaves it had
+    already published stay, and the retry appends them a second time —
+    that needs a commit marker.
 
     NULL statuses land in *other* (``split_by_status`` parity): the
     partition value for NULL-vs-``delivered`` comparison is computed
@@ -219,53 +239,52 @@ def write_status_fanout(
     if "batch_id" not in df.columns:
         df = df.withColumn("batch_id", F.lit(batch_id))
     spark = df.sparkSession
-    tmp = delivered_path + ".fanout_tmp"
-    fs, jtmp = _hadoop_fs(spark, tmp)
-    if fs.exists(jtmp):
-        fs.delete(jtmp, True)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    stage = f"{delivered_path}.fanout_tmp-{uuid.uuid4().hex}"
+    fs, jstage = _hadoop_fs(spark, stage)
+    replace = _replaces_leaf(batch_id)
     cls = F.when(
         F.col(status_col) == delivered_value, F.lit("delivered")
     ).otherwise(F.lit("other"))
-    (
-        df.withColumn(_FANOUT_CLASS_COL, cls)
-        .write.partitionBy(_FANOUT_CLASS_COL, *PARTITION_COLS)
-        .mode("overwrite")
-        .parquet(tmp)
-    )
-    jvm = spark._jvm
-    for side, root in (("delivered", delivered_path), ("other", other_path)):
-        jroot = jvm.org.apache.hadoop.fs.Path(root)
-        if not fs.exists(jroot):
-            fs.mkdirs(jroot)
-        side_dir = jvm.org.apache.hadoop.fs.Path(
-            tmp, f"{_FANOUT_CLASS_COL}={side}"
+    try:
+        (
+            df.withColumn(_FANOUT_CLASS_COL, cls)
+            .write.partitionBy(_FANOUT_CLASS_COL, *PARTITION_COLS)
+            .parquet(stage)
         )
-        if fs.exists(side_dir):
-            for date_st in fs.listStatus(side_dir):
-                if not date_st.isDirectory():
-                    continue
-                date_name = date_st.getPath().getName()
-                for batch_st in fs.listStatus(date_st.getPath()):
-                    dest_dir = jvm.org.apache.hadoop.fs.Path(
-                        jroot, f"{date_name}/{batch_st.getPath().getName()}"
-                    )
-                    if not fs.exists(dest_dir):
-                        fs.mkdirs(dest_dir)
-                    for f_st in fs.listStatus(batch_st.getPath()):
-                        name = f_st.getPath().getName()
-                        if not fs.rename(
-                            f_st.getPath(),
-                            jvm.org.apache.hadoop.fs.Path(dest_dir, name),
-                        ):
-                            raise IOError(
-                                f"write_status_fanout: cannot move {name} "
-                                f"into {dest_dir}"
-                            )
-        # _SUCCESS marker per table, matching a direct write
-        fs.create(
-            jvm.org.apache.hadoop.fs.Path(jroot, "_SUCCESS"), True
-        ).close()
-    fs.delete(jtmp, True)
+        for side, root in (("delivered", delivered_path), ("other", other_path)):
+            jroot = Path(root)
+            side_dir = Path(jstage, f"{_FANOUT_CLASS_COL}={side}")
+            leaves = [
+                leaf.getPath()
+                for date in (fs.listStatus(side_dir) if fs.exists(side_dir) else [])
+                if date.isDirectory()
+                for leaf in fs.listStatus(date.getPath())
+            ]
+            for leaf in leaves:
+                dest = Path(
+                    jroot, f"{leaf.getParent().getName()}/{leaf.getName()}"
+                )
+                if replace:
+                    if fs.exists(dest):
+                        fs.delete(dest, True)
+                    fs.mkdirs(dest.getParent())
+                    moves = [(leaf, dest)]
+                else:
+                    fs.mkdirs(dest)
+                    moves = [
+                        (f.getPath(), Path(dest, f.getPath().getName()))
+                        for f in fs.listStatus(leaf)
+                    ]
+                for src, dst in moves:
+                    if not fs.rename(src, dst):
+                        raise IOError(
+                            f"write_status_fanout: cannot move {src} to {dst}"
+                        )
+            # _SUCCESS marker per table, matching a direct write
+            fs.create(Path(jroot, "_SUCCESS"), True).close()
+    finally:
+        fs.delete(jstage, True)
 
 
 def avro_available(spark: SparkSession) -> bool:

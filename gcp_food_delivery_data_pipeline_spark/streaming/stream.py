@@ -13,11 +13,12 @@ source file BEFORE the job is known to succeed (airflow_pipe.py:53-54 —
 a crash loses the file). Here the checkpoint records files only after
 the micro-batch commits, and archival happens post-commit.
 
-Each micro-batch runs the same fan-out as the batch pipeline via
-``foreachBatch`` (2 partitioned appends + 3 counts over one cached
-micro-batch — Beam's one-graph-many-sinks shape). foreachBatch is
-at-least-once per sink, so replayed batches are made idempotent by
-overwriting a per-batch subdirectory keyed by ``batch_id``.
+Each micro-batch runs the batch pipeline's single job via
+``foreachBatch`` — ``pipeline.process_batch``: one fan-out write with
+C1-C3 observed on the same job (Beam's one-graph-many-sinks shape).
+foreachBatch is at-least-once per sink; a replayed batch is idempotent
+because a micro-batch id replaces its own ``(ingest_date, batch_id)``
+leaf instead of appending (the writers' rule, sources/writers.py).
 """
 
 from __future__ import annotations
@@ -25,58 +26,11 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from gcp_food_delivery_data_pipeline_spark.config import log_counts
-from gcp_food_delivery_data_pipeline_spark.operators.clean import clean_orders
-from gcp_food_delivery_data_pipeline_spark.operators.metrics import run_counts
-from gcp_food_delivery_data_pipeline_spark.operators.split import split_by_status
+from gcp_food_delivery_data_pipeline_spark.operators.metrics import Counts
+from gcp_food_delivery_data_pipeline_spark.pipeline import process_batch
 from gcp_food_delivery_data_pipeline_spark.schema import RAW_SCHEMA_WITH_CORRUPT
-from gcp_food_delivery_data_pipeline_spark.sources.writers import (
-    with_ingest_date,
-    write_status_table,
-)
-
-
-def _process_batch_fn(
-    output_dir: str,
-    on_counts: Callable[[int, "object"], None] | None,
-) -> Callable[[DataFrame, int], None]:
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        # Pre-drop frame: reference counts before the len<12 guard
-        # (code/beam.py:140-162 vs :50-51) — sinks exclude short rows,
-        # counts include them.
-        cleaned = with_ingest_date(
-            clean_orders(batch_df, drop_malformed=False)
-        ).persist()
-        try:
-            sink_ready = cleaned.filter(~F.col("is_short")).drop("is_short")
-            delivered, other = split_by_status(sink_ready)
-            # Idempotent replay: dynamic partition overwrite of this
-            # batch's (ingest_date, batch_id) partitions — same table
-            # layout as batch-mode writes (sources/writers.py).
-            write_status_table(
-                delivered,
-                f"{output_dir}/delivered_orders",
-                batch_id=batch_id,
-                idempotent=True,
-            )
-            write_status_table(
-                other,
-                f"{output_dir}/other_status_orders",
-                batch_id=batch_id,
-                idempotent=True,
-            )
-            counts = run_counts(cleaned)
-            # S6 parity: per-batch count log lines (code/beam.py:140-162).
-            log_counts(counts.total, counts.delivered, counts.other)
-            if on_counts is not None:
-                on_counts(batch_id, counts)
-        finally:
-            cleaned.unpersist()
-
-    return process
 
 
 def run_stream(
@@ -87,7 +41,7 @@ def run_stream(
     archive_dir: str | None = None,
     trigger: dict | None = None,
     max_files_per_trigger: int = 1,
-    on_counts: Callable[[int, "object"], None] | None = None,
+    on_counts: Callable[[int, Counts], None] | None = None,
 ) -> StreamingQuery:
     """Start the incremental pipeline over a watched directory.
 
@@ -108,16 +62,16 @@ def run_stream(
         )
     stream = reader.csv(input_dir)
 
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        counts = process_batch(batch_df, output_dir, batch_id)
+        if on_counts is not None:
+            on_counts(batch_id, counts)
+
     writer = (
-        stream.writeStream.foreachBatch(_process_batch_fn(output_dir, on_counts))
+        stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
     )
     writer = writer.trigger(**(trigger or {"availableNow": True}))
     return writer.start()
 
-
-def read_status_table(spark: SparkSession, output_dir: str, table: str) -> DataFrame:
-    """Read back a status table — batch- and stream-produced tables
-    share one ``(ingest_date, batch_id)`` layout (sources/writers.py)."""
-    return spark.read.parquet(f"{output_dir}/{table}")

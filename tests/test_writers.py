@@ -62,7 +62,7 @@ def test_append_after_compaction_stays_readable(spark, tmp_path):
     compact_table(spark, out, target_files_per_partition=1)
 
     # the next streaming micro-batch appends with its own batch_id
-    write_status_table(df, out, batch_id=2, idempotent=True)
+    write_status_table(df, out, batch_id=2)
 
     back = read_status_table(spark, out)
     assert back.count() == 300
@@ -156,3 +156,30 @@ def test_write_status_fanout_matches_two_table_writes(spark, tmp_path):
     write_status_fanout(df, f"{fan}/delivered", f"{fan}/other")
     assert spark.read.parquet(f"{fan}/delivered").count() == 4
     assert spark.read.parquet(f"{fan}/other").count() == 4
+
+
+def test_write_status_fanout_leaves_other_staging_alone(spark, tmp_path):
+    """Each fan-out stages into a directory of its own: another writer's
+    in-flight files at the old fixed staging path survive, and the
+    tables hold exactly this call's rows."""
+    from gcp_food_delivery_data_pipeline_spark.sources.writers import (
+        write_status_fanout,
+    )
+
+    fan = str(tmp_path / "fan")
+    foreign = f"{fan}/delivered.fanout_tmp/_status_class=other/part-0.parquet"
+    os.makedirs(os.path.dirname(foreign))
+    open(foreign, "w").close()
+
+    df = spark.createDataFrame(
+        [(1, "delivered"), (2, "on the way"), (3, None)], ["order_id", "status"]
+    )
+    write_status_fanout(df, f"{fan}/delivered", f"{fan}/other")
+
+    assert os.path.exists(foreign)
+    assert sorted(os.listdir(fan)) == ["delivered", "delivered.fanout_tmp", "other"]
+    got = {
+        side: sorted(r.order_id for r in spark.read.parquet(f"{fan}/{side}").collect())
+        for side in ("delivered", "other")
+    }
+    assert got == {"delivered": [1], "other": [2, 3]}
