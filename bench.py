@@ -731,18 +731,6 @@ def main() -> None:
         else src_start == src_end
     )
     detail["source_snapshot"] = {"start": src_start, "end": src_end}
-    # Cache-release hygiene (VERDICT r14 next #7): a silently failing
-    # unpersist would reintroduce the per-round cache leak; surface
-    # the in-process ring here so the round that breaks release()
-    # sees it in its own bench artifact.
-    try:
-        from gcp_food_delivery_data_pipeline_spark.checkpointing import (
-            RELEASE_FAILURES,
-        )
-
-        detail["release_failures"] = list(RELEASE_FAILURES)
-    except Exception:  # noqa: BLE001 — diagnostics, never fatal
-        detail["release_failures"] = None
     if errors:
         detail["errors"] = errors
     detail_path = os.path.join(

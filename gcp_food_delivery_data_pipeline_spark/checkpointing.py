@@ -1,243 +1,69 @@
-"""Durability-parameterized lineage materialization (VERDICT r11 #4).
+"""Lineage materialization with one deployment-wide durability setting.
 
 Every iterative / release-point operator in this engine truncates
-lineage with ``localCheckpoint(eager=True)`` — the fastest option on a
-healthy cluster, but local-checkpoint blocks DIE WITH THEIR EXECUTOR:
-at 1000 executors, executor loss is routine, and a long PageRank /
-containment-dedup job *fails* instead of recomputing. Until round 12
-that caveat lived in docstrings as prose ("a production run would use
-reliable ``checkpoint``"); this module makes it a parameter.
+lineage through ``materialize``. Which Spark call does the cut is a
+property of the DEPLOYMENT, not of the call site, so it is read from
+one session conf, ``spark.foodPipeline.checkpointMode``:
 
-Modes (``materialize(df, mode=...)``):
-
-* ``'local'`` — ``df.localCheckpoint(eager)``. Today's default and the
-  historical behavior at every call site: fastest (blocks stay on the
-  executors that computed them, no FS round-trip), NOT fault-tolerant.
-* ``'reliable'`` — ``df.checkpoint(eager)``. Blocks are written to the
+* ``'local'`` (default) — ``df.localCheckpoint(eager)``: fastest
+  (blocks stay on the executors that computed them, no FS
+  round-trip), but the blocks DIE WITH THEIR EXECUTOR, so a long loop
+  fails instead of recomputing when an executor is lost.
+* ``'reliable'`` — ``df.checkpoint(eager)``: blocks are written to the
   SparkContext checkpoint directory (HDFS / object store on a real
   cluster), so the job survives executor loss at the price of one
-  write+read of the materialized data per checkpoint. Fails fast with
-  an actionable error if ``setCheckpointDir`` was never called —
-  Spark's own error for that case surfaces deep in a job stage.
-* ``'persist'`` — ``StorageLevel.MEMORY_AND_DISK`` persist (+
-  ``count()`` when ``eager``). Lost blocks are recomputed FROM LINEAGE
-  on executor failure — fault-tolerant without needing a distributed
-  checkpoint FS — but the logical plan is NOT truncated, so per-round
-  plan growth makes this fit for short loops and one-shot pins, not
-  deep iteration (plan-depth analysis cost grows every round).
+  write+read of the materialized data per cut. Fails fast with an
+  actionable error if ``setCheckpointDir`` was never called — Spark's
+  own error for that case surfaces deep in a job stage.
 
-Two caveats of ``'persist'`` are handled here, not left to callers
-(ADVICE r12):
-
-* **Nondeterministic pin sites must not trust lineage recompute.**
-  Some release points exist precisely to freeze a nondeterministic
-  step — e.g. ``corpus._global_ordered_rank_and_prefix`` pins a
-  ``repartitionByRange`` (SAMPLED boundaries) + ``spark_partition_id``
-  frame so its two consumers see ONE partitioning. Under ``'persist'``
-  a lost block recomputes from that sampled lineage and consumers can
-  disagree again — the exact corrupted-global-ranks bug the pin fixed,
-  reintroduced on the multi-executor deployment the mode targets. Such
-  sites pass ``nondeterministic=True`` and a resolved ``'persist'`` is
-  DOWNGRADED to a mode whose blocks are never recomputed from lineage:
-  ``'reliable'`` when a checkpoint dir is configured, else ``'local'``
-  (with a ``RuntimeWarning`` so the durability loss is visible).
-* **Loops must not leak cache-manager entries.** ``'persist'`` is the
-  only mode whose blocks occupy a session-lifetime cache entry until
-  unpersisted. Iterative operators (PageRank ~10 rounds,
-  ``connected_components`` up to 25, one BPE cut per merge) pass the
-  superseded state frame as ``replaces=``; after the new frame is
-  eagerly materialized the old one is ``release()``-d — a no-op for
-  ``'local'``/``'reliable'`` outputs (their blocks are not cache
-  entries; for ``'local'`` they are also NOT recomputable, so
-  ``release`` deliberately never touches them).
-
-Mode resolution order (``resolve_mode``): an explicit ``mode=``
-argument wins; else the session conf ``spark.foodPipeline.
-checkpointMode`` (so a deployment flips the whole engine to
-``'reliable'`` with one conf, no call-site changes); else ``'local'``.
-
-All three modes are result-identical by construction — they choose
-where materialized blocks live, never what is computed (and the
-nondeterministic downgrade exists to keep that true under block loss).
-Pinned by ``tests/test_checkpoint_modes.py`` (hash-identical results
-across modes on the graph loop, containment dedup, and two-phase rank
-pin).
+A cluster with a durable checkpoint FS sets the conf to ``'reliable'``
+once; no call site changes. Both modes truncate lineage and neither
+recomputes a pin from lineage, so they are result-identical by
+construction (pinned by ``tests/test_checkpoint_modes.py``), including
+at pins that freeze a nondeterministic step such as sampled range
+boundaries.
 """
 
 from __future__ import annotations
 
-import logging
-import warnings
-
 from pyspark.sql import DataFrame
 
 CONF_KEY = "spark.foodPipeline.checkpointMode"
-VALID_MODES = ("local", "reliable", "persist")
+VALID_MODES = ("local", "reliable")
 
-_LOG = logging.getLogger(__name__)
-
-#: ``release()`` failures observed this process (VERDICT r13 #4): the
-#: except arm keeps its no-raise contract (hygiene is best-effort),
-#: but a PERSISTENT unpersist failure — e.g. a future Spark API change
-#: making ``storageLevel`` raise — would silently reintroduce the
-#: per-round cache leak r13 fixed. Each failure is appended here
-#: (capped) and logged at DEBUG, so a leak investigation has a signal
-#: to find instead of silence.
+# Always empty: the engine releases no cached frames. Traced perfbench runs read it.
 RELEASE_FAILURES: list[str] = []
-_RELEASE_FAILURES_CAP = 100
 
 
-def resolve_mode(df: DataFrame, mode: str | None = None) -> str:
-    """Explicit arg > session conf ``spark.foodPipeline.checkpointMode``
-    > ``'local'``. Raises ``ValueError`` on an unknown mode so a typo'd
-    conf fails at the release point, not as silently-local behavior."""
-    if mode is None:
-        try:
-            mode = df.sparkSession.conf.get(CONF_KEY, "local")
-        except Exception:  # noqa: BLE001 — connect-mode conf quirks
-            mode = "local"
+def _resolve_mode(df: DataFrame) -> str:
+    """Session conf ``spark.foodPipeline.checkpointMode``, default
+    ``'local'``. Raises ``ValueError`` on any other value so a typo'd
+    conf fails at the first cut, not as silently-local behavior."""
+    try:
+        mode = df.sparkSession.conf.get(CONF_KEY, "local")
+    except Exception:  # noqa: BLE001 — connect-mode conf quirks
+        mode = "local"
     if mode not in VALID_MODES:
         raise ValueError(
             f"checkpoint mode {mode!r} not in {VALID_MODES} "
-            f"(arg or session conf {CONF_KEY})"
+            f"(session conf {CONF_KEY})"
         )
     return mode
 
 
-def release(df: DataFrame | None) -> None:
-    """Free the cache entry of a frame previously returned by
-    ``materialize`` under ``'persist'`` mode. Safe to call on ANY
-    frame: only cache-manager-registered frames (``df.storageLevel``
-    reports memory/disk) are unpersisted — ``'local'``/``'reliable'``
-    outputs are LogicalRDD views with no cache entry, so they pass
-    through untouched (unpersisting a local checkpoint would destroy
-    blocks that are NOT recomputable). No-op on ``None``.
-
-    Failures never raise (callers run this on every return path), but
-    they are NOT silent: each is recorded in ``RELEASE_FAILURES`` and
-    logged at DEBUG, so a persistent unpersist failure — the one way
-    the per-round cache leak could quietly come back — leaves a
-    trace."""
-    if df is None:
-        return
+def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Cut ``df``'s lineage per the session's durability mode: with no
+    conf set this IS ``df.localCheckpoint(eager)``."""
+    if _resolve_mode(df) == "local":
+        return df.localCheckpoint(eager=eager)
     try:
-        lvl = df.storageLevel
-        if lvl.useMemory or lvl.useDisk:
-            df.unpersist()
-    except Exception as ex:  # noqa: BLE001 — hygiene is best-effort
-        if len(RELEASE_FAILURES) < _RELEASE_FAILURES_CAP:
-            RELEASE_FAILURES.append(f"{type(ex).__name__}: {ex}"[:200])
-        _LOG.debug("checkpointing.release failed (leak risk): %s", ex)
-
-
-def own_result(
-    out: DataFrame,
-    mode: str | None = None,
-    pins: tuple[DataFrame, ...] | list[DataFrame] = (),
-) -> DataFrame:
-    """Make the frame an operator RETURNS the releasable handle under
-    ``'persist'`` mode (ADVICE r13): operators whose result is a lazy
-    derivation of their final pin (a filter / rename / union over it)
-    would otherwise leave that pin's cache entry unreachable — the
-    caller holds the derivation, whose plan doesn't match the cached
-    subtree, so no ``release()`` the caller can issue frees it.
-
-    Under a resolved ``'persist'``: eagerly persist ``out`` itself,
-    then ``release()`` every internal pin in ``pins`` — the caller now
-    holds exactly one cache entry, and it is theirs to free. Under
-    ``'local'`` / ``'reliable'``: returns ``out`` untouched (those
-    pins hold no cache-manager entries, so nothing leaks and the
-    historical zero-extra-materialization plan is preserved
-    bit-for-bit)."""
-    if resolve_mode(out, mode) != "persist":
-        return out
-    out = materialize(out, eager=True, mode="persist")
-    for p in pins:
-        release(p)
-    return out
-
-
-def materialize(
-    df: DataFrame,
-    eager: bool = True,
-    mode: str | None = None,
-    nondeterministic: bool = False,
-    replaces: DataFrame | None = None,
-) -> DataFrame:
-    """Cut/pin ``df``'s lineage per the resolved durability mode.
-
-    Drop-in for the historical ``df.localCheckpoint(eager=...)`` call
-    sites: with no explicit ``mode`` and no session conf this IS
-    ``localCheckpoint`` — zero behavior change for existing callers.
-
-    ``nondeterministic=True`` marks a pin whose lineage recompute may
-    differ run-to-run (sampled range boundaries, partition ids): a
-    resolved ``'persist'`` is downgraded to ``'reliable'`` (checkpoint
-    dir configured) or ``'local'`` (with a warning) — see the module
-    docstring.
-
-    ``replaces=`` names the frame this materialization supersedes in
-    an iterative loop: after the new frame is EAGERLY materialized the
-    old one is ``release()``-d, so ``'persist'`` loops don't
-    accumulate one session-lifetime cache entry per round. Only pass
-    frames this operator itself materialized — never a caller's input
-    (releasing a caller's persisted frame would clobber their cache).
-    ``replaces=`` REQUIRES ``eager=True``: releasing the old frame
-    before the new one is built would force a full-lineage recompute,
-    so a non-eager call cannot honor the release — it raises instead
-    of silently leaking the superseded entry (ADVICE r13).
-    """
-    if replaces is not None and not eager:
-        raise ValueError(
-            "materialize(replaces=...) requires eager=True: a lazy "
-            "pin cannot release the superseded frame (the new blocks "
-            "don't exist yet), and skipping the release silently "
-            "would leak its cache entry"
+        ckpt_dir = df.sparkSession.sparkContext.getCheckpointDir()
+    except Exception:  # noqa: BLE001 — older API shape
+        ckpt_dir = None
+    if not ckpt_dir:
+        raise RuntimeError(
+            "checkpoint mode 'reliable' needs a checkpoint "
+            "directory: call spark.sparkContext.setCheckpointDir("
+            "'hdfs://... or file:///...') first"
         )
-    mode = resolve_mode(df, mode)
-    if mode == "persist" and nondeterministic:
-        try:
-            ckpt_dir = df.sparkSession.sparkContext.getCheckpointDir()
-        except Exception:  # noqa: BLE001 — older API shape
-            ckpt_dir = None
-        if ckpt_dir:
-            mode = "reliable"
-        else:
-            warnings.warn(
-                "checkpoint mode 'persist' downgraded to 'local' at a "
-                "nondeterministic pin site (lineage recompute could "
-                "change the pinned partitioning); set a checkpoint "
-                "dir to get 'reliable' durability here",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            mode = "local"
-    if mode == "local":
-        out = df.localCheckpoint(eager=eager)
-    elif mode == "reliable":
-        spark = df.sparkSession
-        try:
-            ckpt_dir = spark.sparkContext.getCheckpointDir()
-        except Exception:  # noqa: BLE001 — older API shape
-            ckpt_dir = None
-        if not ckpt_dir:
-            raise RuntimeError(
-                "checkpoint mode 'reliable' needs a checkpoint "
-                "directory: call spark.sparkContext.setCheckpointDir("
-                "'hdfs://... or file:///...') first"
-            )
-        out = df.checkpoint(eager=eager)
-    else:
-        # 'persist': fault-tolerant via lineage recompute; plan NOT
-        # cut. DETERMINISTIC lineage only — see nondeterministic=.
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        if eager:
-            out.count()
-    if replaces is not None:
-        # The new blocks exist (eager is guaranteed by the guard
-        # above), so the superseded frame's cache entry is pure leak
-        # now.
-        release(replaces)
-    return out
+    return df.checkpoint(eager=eager)

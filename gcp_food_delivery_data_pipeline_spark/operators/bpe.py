@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 
 from gcp_food_delivery_data_pipeline_spark.checkpointing import (
     materialize as _ckpt,
-    release as _release,
 )
 from gcp_food_delivery_data_pipeline_spark.operators.text import (
     adjacent_pairs,
@@ -102,7 +101,7 @@ def bpe_train(
     """Learn up to ``n_merges`` BPE merges from the corpus; stops early
     when the best remaining pair occurs fewer than ``min_count`` times
     (merging hapax pairs only memorizes noise)."""
-    # lineage cut durability follows the session conf
+    # one lineage cut per merge; durability follows the session conf
     # spark.foodPipeline.checkpointMode (default localCheckpoint)
     wt = _ckpt(word_symbol_table(df, text_col))
     merges: list[tuple[str, str]] = []
@@ -120,14 +119,8 @@ def bpe_train(
         wt = _ckpt(
             wt.select(
                 "word", "n", apply_merge("syms", left, right).alias("syms")
-            ),
-            # one cut per merge: without the release a 'persist'-mode
-            # training run leaks one cache entry per learned merge
-            replaces=wt,
+            )
         )
-    # the symbol table is training state only — nothing returned
-    # references it, so its 'persist' entry is freed on exit
-    _release(wt)
     return merges
 
 

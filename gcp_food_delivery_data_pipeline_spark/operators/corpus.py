@@ -188,7 +188,6 @@ def _global_ordered_rank_and_prefix(
     order_cols: list,
     val: Column,
     val2: Column | None = None,
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Two-phase distributed global rank + exclusive prefix sum over a
     total order: range-repartition on the order key, rank/prefix-sum
@@ -216,16 +215,12 @@ def _global_ordered_rank_and_prefix(
     # two consumers can see DIFFERENT partition boundaries and the
     # offsets no longer match the local ranks: corrupted global ranks
     # that vary run-to-run (observed once at sf0.1 under a loaded
-    # session). localCheckpoint makes both consumers read the same
-    # materialized partitions unconditionally; checkpoint_mode (or the
-    # spark.foodPipeline.checkpointMode conf) picks its durability —
-    # see checkpointing.py. nondeterministic=True: a 'persist' here
-    # would recompute lost blocks FROM the sampled-boundary lineage
-    # and the two consumers could disagree on _part again — exactly
-    # the bug this pin exists to prevent — so persist is downgraded
-    # to a never-recomputed mode (reliable if a checkpoint dir is
-    # set, else local).
-    r = _ckpt(r, mode=checkpoint_mode, nondeterministic=True)
+    # session). The lineage cut makes both consumers read the same
+    # materialized partitions unconditionally. Both durability modes
+    # of the spark.foodPipeline.checkpointMode conf are safe here:
+    # neither recomputes the pin from its sampled-boundary lineage
+    # (see checkpointing.py).
+    r = _ckpt(r)
     w_local = Window.partitionBy("_part").orderBy(*order_cols)
     local = r.withColumn("_lrank", F.row_number().over(w_local)).withColumn(
         "_lbefore",

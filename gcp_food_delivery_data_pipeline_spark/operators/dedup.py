@@ -34,8 +34,6 @@ from pyspark.sql import functions as F
 
 from gcp_food_delivery_data_pipeline_spark.checkpointing import (
     materialize as _ckpt,
-    own_result as _own,
-    release as _release,
 )
 from gcp_food_delivery_data_pipeline_spark.operators.scale import (
     ensure_min_partitions,
@@ -353,7 +351,7 @@ def simhash_near_dup_pairs(
     # concurrent single-task stages each re-paid the full token-fold
     # (~8 s apiece at sf0.1). Split the input to cluster width BEFORE
     # the expensive projection, then materialize the narrow
-    # (id, simhash) frame ONCE (durability per checkpoint_mode conf);
+    # (id, simhash) frame ONCE (durability per checkpointMode conf);
     # every branch now reads blocks.
     src = ensure_min_partitions(df.select(id_col, text_col))
     sh = _ckpt(
@@ -889,7 +887,6 @@ def lsh_candidate_pairs(
     shingle_k: int = 3,
     cache_signatures: bool = True,
     impl: str = "arrow",
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Near-duplicate CANDIDATE pairs via LSH banding.
 
@@ -1008,9 +1005,10 @@ def lsh_candidate_pairs(
         # (ContextCleaner frees them on drop) instead of occupying a
         # cache-manager entry until someone remembers to unpersist —
         # the session-lifetime-leak class the round-9 review flagged
-        # on prefix_similarity_join. checkpoint_mode='reliable' makes
-        # this release point survive executor loss (checkpointing.py).
-        result = _ckpt(result, mode=checkpoint_mode)
+        # on prefix_similarity_join. The checkpointMode conf set to
+        # 'reliable' makes this cut survive executor loss
+        # (checkpointing.py).
+        result = _ckpt(result)
         with_sig.unpersist()
     return result
 
@@ -1049,7 +1047,6 @@ def connected_components(
     vertices: DataFrame,
     id_col: str = "doc_id",
     max_iterations: int = 25,
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Transitive dup clustering: label every vertex with the MINIMUM id
     reachable through the near-dup pair graph (A~B, B~C ⇒ one cluster,
@@ -1077,14 +1074,12 @@ def connected_components(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionAll(
             pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        ),
-        mode=checkpoint_mode,
+        )
     )
     labels = _ckpt(
         vertices.select(
             F.col(id_col).alias("id"), F.col(id_col).alias("comp")
-        ),
-        mode=checkpoint_mode,
+        )
     )
     for _ in range(max_iterations):
         neighbor = edges.join(
@@ -1093,8 +1088,7 @@ def connected_components(
         new_labels = _ckpt(
             labels.unionByName(neighbor)
             .groupBy("id")
-            .agg(F.min("comp").alias("comp")),
-            mode=checkpoint_mode,
+            .agg(F.min("comp").alias("comp"))
         )
         changed = (
             new_labels.join(
@@ -1103,25 +1097,11 @@ def connected_components(
             .filter(F.col("comp") != F.col("comp_old"))
             .count()
         )
-        # The changed-count above is the last reader of the old label
-        # frame; under 'persist' free its cache entry NOW so the loop
-        # holds at most two label generations, not one per round
-        # (no-op under 'local'/'reliable' — see checkpointing.release).
-        _release(labels)
         labels = new_labels
         if changed == 0:
             break
-    _release(edges)
-    # The rename is a derivation over the loop's final label pin:
-    # under 'persist' re-pin it as the caller's one releasable entry
-    # and free the internal pin (ADVICE r13); no-op — and the
-    # historical plan — under 'local'/'reliable'.
-    return _own(
-        labels.select(
-            F.col("id").alias(id_col), F.col("comp").alias("component")
-        ),
-        checkpoint_mode,
-        (labels,),
+    return labels.select(
+        F.col("id").alias(id_col), F.col("comp").alias("component")
     )
 
 
@@ -1688,7 +1668,6 @@ def incremental_dedup(
     num_hashes: int = 64,
     bands: int = 32,
     shingle_k: int = 3,
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Dedup a NEW batch against an EXISTING corpus: drop every batch
     document whose shingle-Jaccard with ANY corpus document reaches
@@ -1732,14 +1711,12 @@ def incremental_dedup(
     c_sig = _ckpt(
         _minhash_frame_arrow(
             corpus, text_col, id_col, num_hashes, shingle_k
-        ),
-        mode=checkpoint_mode,
+        )
     )
     b_sig = _ckpt(
         _minhash_frame_arrow(
             batch, text_col, id_col, num_hashes, shingle_k
-        ),
-        mode=checkpoint_mode,
+        )
     )
     c_band = _band_hashes(c_sig, bands, rows)
     b_band = _band_hashes(b_sig, bands, rows)
@@ -1849,7 +1826,6 @@ def containment_join(
     id_col: str = "doc_id",
     threshold: float = 0.8,
     k: int = 3,
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """EXACT asymmetric containment join: ordered pairs (a, b) where
     C(a→b) = |Sa ∩ Sb| / |Sa| >= threshold over k-token shingle sets —
@@ -1906,16 +1882,13 @@ def containment_join(
     speculatively should defer the call, not the action; (2)
     ``localCheckpoint`` blocks are NOT fault-tolerant — they truncate
     lineage, so losing an executor that holds blocks fails the query
-    instead of recomputing (a ``persist(MEMORY_AND_DISK)`` subtree
-    would recompute; a reliable ``checkpoint()`` to HDFS/object
-    storage would survive). On a 1000-executor run where executor
-    loss is routine, pass ``checkpoint_mode='reliable'`` (after
+    instead of recomputing. On a 1000-executor run where executor
+    loss is routine, set the session conf
+    ``spark.foodPipeline.checkpointMode=reliable`` (after
     ``spark.sparkContext.setCheckpointDir(...)``; durable, one extra
-    write) or ``checkpoint_mode='persist'`` (recomputes from lineage
-    on loss) — since round 12 that swap is this parameter (or the
-    session conf ``spark.foodPipeline.checkpointMode``), not a code
-    edit; the single-JVM bench harness here cannot lose an executor,
-    so the zero-copy local form is the right local[32] default. (The
+    write per cut); the single-JVM bench harness here cannot lose an
+    executor, so the zero-copy local form is the right local[32]
+    default. (The
     ``prefix_similarity_join`` ≤64-vocab single-long bitmask verify
     does NOT transfer here: it bounds the TOKEN universe, while this
     operator's verify sets are k-token SHINGLES — a 31-token corpus
@@ -1937,7 +1910,7 @@ def containment_join(
         .filter(F.size("_tk") > 0)
         .select("_id", shingles_from_tokens(F.col("_tk"), k).alias("_sh"))
     )
-    sh = _ckpt(sh, mode=checkpoint_mode)
+    sh = _ckpt(sh)
 
     rows = sh.select("_id", F.explode("_sh").alias("_str")).select(
         "_id", _shingle_hash(F.col("_str")).alias("_s")

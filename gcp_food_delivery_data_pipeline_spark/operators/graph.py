@@ -17,27 +17,20 @@ Scale notes (100 TB / 1000 executors):
   sf0.1: 10 PageRank rounds 10.8 s → 5.2 s from this plus the
   skip-redundant-copy rule below, identical ranks.
 * ``localCheckpoint(eager=True)`` per round bounds plan depth and
-  memory; a production run on a shared cluster passes
-  ``checkpoint_mode='reliable'`` (or sets the session conf
-  ``spark.foodPipeline.checkpointMode``) to survive executor loss
-  across a long loop — every loop in this module threads the mode
-  through ``checkpointing.materialize`` (result-identical by
-  construction; pinned by tests/test_checkpoint_modes.py).
+  memory. Every cut goes through ``checkpointing.materialize``, so a
+  cluster that must survive executor loss across a long loop sets the
+  session conf ``spark.foodPipeline.checkpointMode=reliable`` once and
+  every loop here writes its cuts to the checkpoint dir
+  (result-identical by construction; pinned by
+  tests/test_checkpoint_modes.py).
 * When the caller hands in an ALREADY-materialized edge list (a
   narrow projection over a checkpointed RDD — e.g. a memoized shared
-  edge table), ``_materialize`` skips the redundant second copy:
-  re-deriving a projection of a materialized RDD is free, copying
-  millions of edge rows again is not. An EXPLICIT
-  ``checkpoint_mode='reliable'`` bypasses the skip (ADVICE r12): the
-  caller asked for blocks that survive executor loss, and a
-  caller-materialized view's blocks are executor-local — honoring the
-  request costs one copy. Conf-defaulted 'reliable' keeps the skip:
-  the caller materialized the input themselves, so its durability is
-  the caller's choice (documented on every ``checkpoint_mode`` kwarg).
-* Superseded loop state is handed back via ``replaces=`` so the
-  ``'persist'`` mode never accumulates one cache-manager entry per
-  round (see ``checkpointing.materialize``); loop-lifetime static
-  pins (edge fractions, node sets) are ``release()``-d on return.
+  edge table), ``_materialize`` skips the redundant second copy under
+  ``'local'``: re-deriving a projection of a materialized RDD is free,
+  copying millions of edge rows again is not. Under ``'reliable'`` the
+  skip is off: a caller-materialized view's blocks may be
+  executor-local, and the deployment asked for every cut to be
+  durable, which costs one copy.
 * No driver-side collection: the driver holds loop control only.
 """
 
@@ -47,44 +40,30 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gcp_food_delivery_data_pipeline_spark.checkpointing import (
+    _resolve_mode,
     materialize as _ckpt,
-    own_result as _own,
-    release as _release,
-    resolve_mode,
 )
 
 _NARROW_OPS = ("Project", "Filter", "SubqueryAlias", "LogicalRDD")
 
 
-def _materialize_owned(
-    df: DataFrame, mode: str | None = None
-) -> tuple[DataFrame, DataFrame | None]:
-    """``(materialized, owned_pin)``: ``localCheckpoint(eager=True)``
-    — with ``owned_pin`` naming the frame THIS call pinned (the
-    caller must ``release()`` it on return; None when the skip rule
-    returned the caller's frame untouched) — unless ``df`` is already a
-    narrow view — projections/filters only — over a materialized RDD,
-    in which case every downstream branch re-reads the existing
-    blocks and a second copy buys nothing. Conservative: any operator
-    outside the narrow set (joins, aggregates, distinct, repartition)
-    falls through to a real checkpoint.
+def _materialize(df: DataFrame) -> DataFrame:
+    """``checkpointing.materialize(df)`` — unless the mode is
+    ``'local'`` and ``df`` is already a narrow view (projections/
+    filters only) over a materialized RDD, in which case every
+    downstream branch re-reads the existing blocks and a second copy
+    buys nothing, so ``df`` comes back untouched. Conservative: any
+    operator outside the narrow set (joins, aggregates, distinct,
+    repartition) falls through to a real checkpoint. Under
+    ``'reliable'`` every call cuts: the input's blocks may be
+    executor-local, and the deployment asked for durable cuts."""
+    if _resolve_mode(df) == "local" and _reads_materialized_blocks(df):
+        return df
+    return _ckpt(df)
 
-    ``mode`` selects the materialization durability (see
-    ``checkpointing.materialize``: 'local' | 'reliable' | 'persist';
-    None = session conf, default 'local'). The skip rule is
-    mode-independent by design: when the CALLER already materialized
-    the input, its durability is the caller's choice, and copying the
-    blocks again here would buy durability only for this one consumer
-    while doubling storage.
 
-    An EXPLICIT ``mode='reliable'`` (the arg, not the session conf —
-    this helper only ever receives the caller's kwarg verbatim)
-    bypasses the skip rule: the caller asked for executor-loss
-    durability, and an already-materialized input's blocks are
-    executor-local, so returning it as-is would silently ignore the
-    request (ADVICE r12). Under the CONF path the skip stands, and the
-    kwarg docstrings state that caller-materialized inputs keep the
-    caller's durability.
+def _reads_materialized_blocks(df: DataFrame) -> bool:
+    """True when ``df`` is a narrow view over materialized blocks.
 
     "Materialized" is VERIFIED, not inferred from the node type: a
     ``LogicalRDD`` also appears for ``spark.createDataFrame(rdd)`` /
@@ -96,54 +75,27 @@ def _materialize_owned(
     MEMORY_AND_DISK, so either signal means downstream branches read
     blocks, not lineage); any leaf that can't prove it falls through
     to a real checkpoint."""
-    if mode == "reliable":
-        out = _ckpt(df, mode=mode)
-        return out, out
     try:
         analyzed = df._jdf.queryExecution().analyzed()
         plan = analyzed.toString()
-    except Exception:  # noqa: BLE001 — connect-mode etc.: checkpoint
-        out = _ckpt(df, mode=mode)
-        return out, out
-    if "LogicalRDD" not in plan:
-        out = _ckpt(df, mode=mode)
-        return out, out
-    for ln in plan.splitlines():
-        op = ln.lstrip(" +-:")
-        if op and not op.startswith(_NARROW_OPS):
-            out = _ckpt(df, mode=mode)
-            return out, out
-    try:
+        if "LogicalRDD" not in plan:
+            return False
+        for ln in plan.splitlines():
+            op = ln.lstrip(" +-:")
+            if op and not op.startswith(_NARROW_OPS):
+                return False
         leaves = analyzed.collectLeaves()
         for i in range(leaves.size()):
             leaf = leaves.apply(i)
             if leaf.getClass().getSimpleName() != "LogicalRDD":
-                out = _ckpt(df, mode=mode)
-                return out, out
+                return False
             rdd = leaf.rdd()
             lvl = rdd.getStorageLevel()
-            if not (
-                rdd.isCheckpointed()
-                or lvl.useMemory()
-                or lvl.useDisk()
-            ):
-                out = _ckpt(df, mode=mode)
-                return out, out
-    except Exception:  # noqa: BLE001 — unknown plan shape: checkpoint
-        out = _ckpt(df, mode=mode)
-        return out, out
-    return df, None
-
-
-def _materialize(df: DataFrame, mode: str | None = None) -> DataFrame:
-    """Back-compat shim over ``_materialize_owned`` for callers that
-    don't track ownership (the skip-rule tests). Operator loops use
-    ``_materialize_owned``: under 'persist', ``DataFrame.persist()``
-    returns SELF, so the old ``out is not input`` identity test could
-    never see the pin this call created — the r14 leak the
-    releasability suite caught."""
-    out, _owned = _materialize_owned(df, mode=mode)
-    return out
+            if not (rdd.isCheckpointed() or lvl.useMemory() or lvl.useDisk()):
+                return False
+    except Exception:  # noqa: BLE001 — connect-mode / unknown plan shape
+        return False
+    return True
 
 
 def pagerank(
@@ -153,7 +105,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     weight: str | None = None,
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Weighted PageRank with a fixed iteration count. Returns
     ``(node, rank)`` where ranks sum to ~1 over the node set (exactly
@@ -166,13 +117,6 @@ def pagerank(
     ``iterations`` (rather than a convergence test) keeps the result
     a pure function of the input — which is what lets an unrolled SQL
     oracle reproduce it.
-
-    ``checkpoint_mode`` ('local' | 'reliable' | 'persist', None =
-    session conf ``spark.foodPipeline.checkpointMode``, default
-    'local') picks the durability of every lineage cut in the loop —
-    'reliable' survives executor loss on a 1000-executor run at the
-    cost of a FS round-trip per cut (see ``checkpointing``). Result-
-    identical across modes.
     """
     if not 0.0 < damping < 1.0:
         raise ValueError(f"pagerank: damping must be in (0,1), got {damping}")
@@ -186,11 +130,9 @@ def pagerank(
     # both derive from e, and without this checkpoint each eager
     # derivation re-runs the caller's (possibly expensive) edge
     # pipeline — profiled at 2x a full co-occurrence self-join here.
-    # (_materialize_owned skips the copy when the caller's edges are
-    # already a view over a checkpointed RDD; its owned_pin return
-    # names the frame OURS to release — identity checks can't, since
-    # DataFrame.persist() returns self.)
-    e, e_owned = _materialize_owned(e, mode=checkpoint_mode)
+    # (_materialize skips the copy when the caller's edges are
+    # already a view over a checkpointed RDD.)
+    e = _materialize(e)
     out_w = e.groupBy("_src").agg(F.sum("_w").alias("_out"))
     frac = (
         e.join(out_w, "_src")
@@ -199,18 +141,16 @@ def pagerank(
     # cache the (static) fraction table ALREADY PARTITIONED on the
     # per-round join key: localCheckpoint preserves the hash
     # partitioning, so no iteration ever exchanges the edge side
-    frac = _ckpt(frac.repartition("_src"), mode=checkpoint_mode)
+    frac = _ckpt(frac.repartition("_src"))
     nodes = _ckpt(
         e.select(F.col("_src").alias("node"))
         .unionByName(e.select(F.col("_dst").alias("node")))
         .distinct()
-        .repartition("node"),
-        mode=checkpoint_mode,
+        .repartition("node")
     )
     n = nodes.count()
     base = (1.0 - damping) / n
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    pinned = None  # last rank pin THIS loop made (never a caller frame)
     for it in range(iterations):
         contribs = (
             frac.join(ranks, frac["_src"] == ranks["node"])
@@ -238,15 +178,7 @@ def pagerank(
         # Checkpoint frequency never changes the arithmetic — only
         # where the plan is cut.
         if it % 3 == 2 or it == iterations - 1:
-            ranks = _ckpt(ranks, mode=checkpoint_mode, replaces=pinned)
-            pinned = ranks
-    # Loop-lifetime static pins: under 'persist' these hold
-    # cache-manager entries the caller never sees — free them now
-    # (no-op under 'local'/'reliable'; the returned ranks are
-    # eagerly materialized, so nothing the caller reads is lost).
-    _release(e_owned)
-    _release(frac)
-    _release(nodes)
+            ranks = _ckpt(ranks)
     return ranks
 
 
@@ -305,7 +237,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     keep_prev: bool = False,
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Community detection by synchronous label propagation: every
     node starts as its own label; each round it adopts the most
@@ -324,29 +255,22 @@ def label_propagation(
     one (node, label) count aggregation, one row_number window
     partitioned by node — all map-side-combinable or hash-partitioned;
     ``localCheckpoint`` truncates lineage as in ``pagerank``.
-    ``checkpoint_mode`` selects lineage-cut durability (see
-    ``pagerank``); result-identical across modes.
     """
     if iterations < 1:
         raise ValueError("label_propagation: need at least one iteration")
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
     # checkpointed pre-partitioned on the per-round join key: the
     # neighbor-count join never exchanges the edge side again
-    e = _ckpt(e.repartition("_s"), mode=checkpoint_mode)
+    e = _ckpt(e.repartition("_s"))
     nodes = _ckpt(
         e.select(F.col("_s").alias("node"))
         .unionByName(e.select(F.col("_d").alias("node")))
-        .distinct(),
-        mode=checkpoint_mode,
+        .distinct()
     )
     labels = nodes.select("node", F.col("node").alias("label"))
     from pyspark.sql import Window
 
     prev = labels
-    # Two-generation release lag: round N's pin may still be read as
-    # `prev` (keep_prev) while round N+1 runs, so the frame freed at
-    # each pin is the one from TWO rounds back.
-    retired = None
     for _ in range(iterations):
         counts = (
             e.join(labels, e["_s"] == labels["node"])
@@ -377,49 +301,15 @@ def label_propagation(
             # per-round checkpoint also deduplicates that double
             # evaluation, not just trims lineage. An A/B cadence
             # sweep measured every-3rd-round strictly slower here.
-            mode=checkpoint_mode,
-            replaces=retired,
         )
-        retired = prev
-    if (
-        keep_prev
-        and iterations == 1
-        and resolve_mode(prev, checkpoint_mode) == "persist"
-    ):
-        # prev is still the UNPINNED init view over `nodes` (no round
-        # ever superseded it): under 'persist' — the only mode where
-        # releasing the statics below actually frees blocks — pin it
-        # first, or the caller's evaluation of the returned join would
-        # recompute the full edge pipeline from lineage, inheriting
-        # any caller-side nondeterminism into prev_label (ADVICE r13).
-        # Under 'local'/'reliable' the releases are no-ops and the
-        # historical zero-extra-materialization plan is kept bit-for-
-        # bit (ADVICE r14: the unconditional pin added an eager
-        # localCheckpoint on the default path for nothing).
-        prev = _ckpt(prev, mode=checkpoint_mode)
-    _release(e)
-    _release(nodes)
     if keep_prev:
         # Stability-probe shape: expose round N-1's label next to
         # round N's so `label <> prev_label` counts the nodes still
         # moving — the fixed-point evidence for the fixed round count.
-        # The join is a derivation over the labels/prev pins: under
-        # 'persist' re-pin it as the caller's one releasable entry
-        # (ADVICE r13); no-op under 'local'/'reliable'.
-        return _own(
-            labels.join(
-                prev.select(
-                    "node", F.col("label").alias("prev_label")
-                ),
-                "node",
-            ),
-            checkpoint_mode,
-            (labels, prev),
+        return labels.join(
+            prev.select("node", F.col("label").alias("prev_label")),
+            "node",
         )
-    # Round N-1's pin (kept alive by the two-generation release lag)
-    # has no reader once the caller only gets round N — free it so
-    # 'persist' exits holding exactly one entry, the returned frame.
-    _release(prev)
     return labels
 
 
@@ -429,7 +319,6 @@ def kcore(
     rounds: int = 5,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Fixed-round k-core peeling over a SYMMETRIC edge list: each
     round drops every node whose current degree is below ``k``
@@ -446,15 +335,14 @@ def kcore(
 
     Per round: one degree aggregation + two semi-joins (src side, dst
     side) — all keyed; ``localCheckpoint`` truncates lineage.
-    ``checkpoint_mode`` selects lineage-cut durability (see
-    ``pagerank``); result-identical across modes.
     """
     if k < 1:
         raise ValueError(f"kcore: k must be >= 1, got {k}")
     if rounds < 1:
         raise ValueError("kcore: need at least one round")
-    e_in = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-    e, owned = _materialize_owned(e_in, mode=checkpoint_mode)
+    e = _materialize(
+        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+    )
     for _ in range(rounds):
         keep = (
             e.groupBy("_s")
@@ -474,19 +362,9 @@ def kcore(
             # evaluation as well as trimming lineage — the sparser
             # cadence that pays off in ``pagerank`` (single-reader
             # rank state) measured slower for this loop shape.
-            mode=checkpoint_mode,
-            replaces=owned,
         )
-        owned = e
-    # The survivor-degree agg is a derivation over the loop's final
-    # edge pin: under 'persist' re-pin it as the caller's one
-    # releasable entry and free the internal pin (ADVICE r13 leak
-    # class); no-op under 'local'/'reliable'.
-    return _own(
-        e.groupBy(F.col("_s").alias("node"))
-        .agg(F.count(F.lit(1)).alias("degree")),
-        checkpoint_mode,
-        (owned,),
+    return e.groupBy(F.col("_s").alias("node")).agg(
+        F.count(F.lit(1)).alias("degree")
     )
 
 
@@ -497,7 +375,6 @@ def bfs_distances(
     src: str = "src",
     dst: str = "dst",
     seed_col: str = "node",
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Multi-source BFS: minimum hop distance from ANY seed node to
     every node reachable within ``max_hops``. Returns ``(node, dist)``
@@ -516,19 +393,17 @@ def bfs_distances(
     against the settled set — all partitioned by node id; the frontier
     only ever holds ids, never payloads; ``localCheckpoint`` truncates
     lineage so round t+1 does not replay rounds 1..t. The driver
-    holds loop control only (no collect). ``checkpoint_mode`` selects
-    lineage-cut durability (see ``pagerank``); result-identical.
+    holds loop control only (no collect).
     """
     if max_hops < 0:
         raise ValueError(f"bfs_distances: max_hops must be >= 0, got {max_hops}")
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
     # pre-partitioned on the frontier-join key (see module docstring)
-    e = _ckpt(e.repartition("_s"), mode=checkpoint_mode)
+    e = _ckpt(e.repartition("_s"))
     settled = _ckpt(
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
-        .select("node", F.lit(0).alias("dist")),
-        mode=checkpoint_mode,
+        .select("node", F.lit(0).alias("dist"))
     )
     frontier = settled.select("node")
     for hop in range(1, max_hops + 1):
@@ -544,15 +419,8 @@ def bfs_distances(
         # frontier filter), so the per-hop checkpoint deduplicates
         # that triple evaluation as well as trimming lineage — see
         # the cadence note in ``pagerank``/``label_propagation``.
-        settled = _ckpt(
-            settled.unionByName(new_nodes),
-            mode=checkpoint_mode,
-            # the initial settled pin is also ours, so every
-            # superseded generation is safe to free
-            replaces=settled,
-        )
+        settled = _ckpt(settled.unionByName(new_nodes))
         frontier = settled.filter(F.col("dist") == hop).select("node")
-    _release(e)
     return settled
 
 
@@ -561,7 +429,6 @@ def link_prediction_scores(
     k: int = 50,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Common-neighbors link prediction: for every NON-adjacent node
     pair sharing at least one neighbor, the common-neighbor count and
@@ -587,7 +454,7 @@ def link_prediction_scores(
         .filter(F.col("_a") != F.col("_b"))
         .distinct()
     )
-    e = _ckpt(e, mode=checkpoint_mode)
+    e = _ckpt(e)
     # symmetric adjacency (node, neighbor) for wedges + degrees
     adj = e.select(
         F.col("_a").alias("node"), F.col("_b").alias("nb")
@@ -635,20 +502,12 @@ def link_prediction_scores(
             ).alias("jaccard"),
         )
     )
-    # Top-k is a derivation over the pinned edge table, which was
-    # never released: under 'persist' re-pin the k-row result as the
-    # caller's one releasable entry and free the edge pin (ADVICE r13
-    # leak class); no-op under 'local'/'reliable'.
-    return _own(
-        scored.orderBy(
-            F.col("jaccard").desc(),
-            F.col("cn").desc(),
-            F.col("node_a"),
-            F.col("node_b"),
-        ).limit(k),
-        checkpoint_mode,
-        (e,),
-    )
+    return scored.orderBy(
+        F.col("jaccard").desc(),
+        F.col("cn").desc(),
+        F.col("node_a"),
+        F.col("node_b"),
+    ).limit(k)
 
 
 def hits_bipartite(
@@ -656,7 +515,6 @@ def hits_bipartite(
     iterations: int = 4,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """HITS (Kleinberg 1999) on a bipartite edge list: hub scores for
     the source side, authority scores for the destination side —
@@ -694,15 +552,12 @@ def hits_bipartite(
     # 7.1 s at sf0.1) and the single copy is kept.
     e = _ckpt(
         edges.select(F.col(src).alias("_u"), F.col(dst).alias("_p"))
-        .distinct(),
-        mode=checkpoint_mode,
+        .distinct()
     )
     hubs = e.select("_u").distinct().select(
         "_u", F.lit(1).cast("long").alias("_h")
     )
     auth = None
-    pinned_a = None
-    pinned_h = None
     for it in range(iterations):
         auth = (
             e.join(hubs, "_u")
@@ -717,10 +572,8 @@ def hits_bipartite(
         # lineage cut every other round (each round adds 2 join+agg
         # layers; the cadence keeps plan depth <= 4 layers)
         if it % 2 == 1 or it == iterations - 1:
-            auth = _ckpt(auth, mode=checkpoint_mode, replaces=pinned_a)
-            hubs = _ckpt(hubs, mode=checkpoint_mode, replaces=pinned_h)
-            pinned_a, pinned_h = auth, hubs
-    _release(e)
+            auth = _ckpt(auth)
+            hubs = _ckpt(hubs)
     a_tot = auth.agg(F.sum("_a").alias("_t"))
     h_tot = hubs.agg(F.sum("_h").alias("_t"))
     a_rows = auth.crossJoin(F.broadcast(a_tot)).select(
@@ -733,13 +586,7 @@ def hits_bipartite(
         F.col("_u").alias("node"),
         (F.col("_h").cast("double") / F.col("_t")).alias("score"),
     )
-    # The normalized union is a derivation over the loop's auth/hubs
-    # pins: under 'persist' re-pin it as the caller's one releasable
-    # entry and free the internal pins (ADVICE r13); no-op — and the
-    # historical plan — under 'local'/'reliable'.
-    return _own(
-        a_rows.unionByName(h_rows), checkpoint_mode, (pinned_a, pinned_h)
-    )
+    return a_rows.unionByName(h_rows)
 
 
 def personalized_pagerank(
@@ -750,7 +597,6 @@ def personalized_pagerank(
     src: str = "src",
     dst: str = "dst",
     weight: str | None = None,
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Personalized PageRank: like ``pagerank``, but the teleport mass
     returns to the SEED set instead of everywhere — rank concentrates
@@ -774,29 +620,26 @@ def personalized_pagerank(
     if iterations < 1:
         raise ValueError("personalized_pagerank: need at least one iteration")
     w = F.col(weight).cast("double") if weight else F.lit(1.0)
-    e_in = edges.select(
-        F.col(src).alias("_src"), F.col(dst).alias("_dst"), w.alias("_w")
+    e = _materialize(
+        edges.select(
+            F.col(src).alias("_src"), F.col(dst).alias("_dst"), w.alias("_w")
+        )
     )
-    e, e_owned = _materialize_owned(e_in, mode=checkpoint_mode)
     out_w = e.groupBy("_src").agg(F.sum("_w").alias("_out"))
     # static tables checkpointed pre-partitioned on their per-round
     # join keys (see module docstring) — no edge-side exchange per round
     frac = _ckpt(
         e.join(out_w, "_src")
         .select("_src", "_dst", (F.col("_w") / F.col("_out")).alias("_frac"))
-        .repartition("_src"),
-        mode=checkpoint_mode,
+        .repartition("_src")
     )
     nodes = _ckpt(
         e.select(F.col("_src").alias("node"))
         .unionByName(e.select(F.col("_dst").alias("node")))
         .distinct()
-        .repartition("node"),
-        mode=checkpoint_mode,
+        .repartition("node")
     )
-    seed_nodes = _ckpt(
-        seeds.toDF("node").join(nodes, "node"), mode=checkpoint_mode
-    )
+    seed_nodes = _ckpt(seeds.toDF("node").join(nodes, "node"))
     n_seeds = seed_nodes.count()
     if n_seeds == 0:
         raise ValueError(
@@ -815,15 +658,13 @@ def personalized_pagerank(
         .select(
             "node", F.coalesce("_base", F.lit(0.0)).alias("_base")
         )
-        .repartition("node"),
-        mode=checkpoint_mode,
+        .repartition("node")
     )
     ranks = nodes_b.join(
         seed_nodes.select("node", F.lit(1.0 / n_seeds).alias("_r")),
         "node",
         "left",
     ).select("node", F.coalesce("_r", F.lit(0.0)).alias("rank"))
-    pinned = None
     for it in range(iterations):
         contribs = (
             frac.join(ranks, frac["_src"] == ranks["node"])
@@ -843,19 +684,10 @@ def personalized_pagerank(
         )
         last = it == iterations - 1
         if last:
-            # Apply the unreachable-node drop BEFORE the final pin so
-            # the frame the caller holds IS the pin — a post-pin
-            # filter would leave the pinned cache entry unreleasable
-            # under 'persist' (ADVICE r13). Same rows either way
-            # (rank values are computed before the pin in both
-            # orderings), and the pin materializes strictly fewer.
+            # Drop unreachable nodes BEFORE the final pin: the pin
+            # then materializes strictly fewer rows, and the frame
+            # the caller holds is the pin itself.
             ranks = ranks.filter(F.col("rank") > 0.0)
         if it % 3 == 2 or last:
-            ranks = _ckpt(ranks, mode=checkpoint_mode, replaces=pinned)
-            pinned = ranks
-    _release(e_owned)
-    _release(frac)
-    _release(nodes)
-    _release(nodes_b)
-    _release(seed_nodes)
+            ranks = _ckpt(ranks)
     return ranks

@@ -17,6 +17,9 @@ scale factors *and* for surviving a 100 TB / 1000-executor deployment:
   statistics are missing.
 * Arrow enabled for the pandas-UDF extension points (similarity /
   multimodal operators).
+* Driver heap sized to the host (``default_driver_memory``): half the
+  smaller of the cgroup memory limit and physical RAM, capped at 32g,
+  unless ``SPARK_GRAFT_DRIVER_MEM`` names a size.
 """
 
 from __future__ import annotations
@@ -24,6 +27,54 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_MAX_DRIVER_MEM_MB = 32 * 1024
+_CGROUP_LIMITS = (
+    "/sys/fs/cgroup/memory.max",  # cgroup v2
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+)
+
+
+def _host_memory_bytes() -> int | None:
+    """The smaller of the cgroup memory limit and ``/proc/meminfo``
+    MemTotal; None when neither can be read. An unlimited cgroup
+    reads as ``max`` (v2) or a near-2^63 sentinel (v1), both of which
+    lose to MemTotal."""
+    sizes = []
+    for path in _CGROUP_LIMITS:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            sizes.append(int(raw))
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    sizes.append(int(line.split()[1]) * 1024)
+                    break
+    except OSError:
+        pass
+    return min(sizes) if sizes else None
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` for this host: ``$SPARK_GRAFT_DRIVER_MEM``
+    if set, else half of ``_host_memory_bytes()`` capped at 32g (32g
+    when the host size is unknown). In local mode the driver heap IS
+    the executor heap; the other half is left for JVM off-heap memory,
+    the Python workers and the OS, so a 16 GiB host gets ~8g instead
+    of a 32g heap the kernel kills once it fills."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    host = _host_memory_bytes()
+    if host is None:
+        return "32g"
+    mb = min(host // 2 // (1024 * 1024), _MAX_DRIVER_MEM_MB)
+    return "32g" if mb == _MAX_DRIVER_MEM_MB else f"{mb}m"
 
 
 def get_spark(
@@ -73,9 +124,10 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         # Single-JVM local mode: the "driver" heap IS the executor heap.
         # 8g showed monotonic GC degradation across a 28-query bench
-        # session (43s for a 2s query by the tail); 32g on the 128 GiB
-        # container keeps full GCs out of the measurement.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        # session (43s for a 2s query by the tail); the 32g cap, reached
+        # on the 128 GiB bench container, keeps full GCs out of the
+        # measurement.
+        .config("spark.driver.memory", default_driver_memory())
         # Reclaim GC'd broadcasts/shuffles promptly in long sessions —
         # the default 30min periodic GC lets them pile up.
         .config("spark.cleaner.periodicGC.interval", "5min")

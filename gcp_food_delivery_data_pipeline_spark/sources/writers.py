@@ -87,6 +87,28 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, jpath
 
 
+def _swap_into_place(
+    spark: SparkSession, path: str, tmp: str, old: str, op: str
+) -> None:
+    """Replace the table at ``path`` with the one written at ``tmp``:
+    move the original aside to ``old``, rename tmp into place, delete
+    the old copy. If tmp cannot be moved in, the original is renamed
+    back before the ``IOError`` is raised, so a failed swap leaves the
+    table as it was. On HDFS/local these renames are atomic metadata
+    ops; on object stores use a manifest-based table format instead."""
+    fs, jpath = _hadoop_fs(spark, path)
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    jtmp, jold = hpath(tmp), hpath(old)
+    if fs.exists(jold):
+        fs.delete(jold, True)
+    if not fs.rename(jpath, jold):
+        raise IOError(f"{op}: cannot move {path} aside")
+    if not fs.rename(jtmp, jpath):
+        fs.rename(jold, jpath)  # roll back
+        raise IOError(f"{op}: cannot move {tmp} into place")
+    fs.delete(jold, True)
+
+
 def compact_table(
     spark: SparkSession, path: str, target_files_per_partition: int = 1
 ) -> None:
@@ -106,10 +128,9 @@ def compact_table(
     replace of its own non-negative batch-id leaf can never clobber the
     compacted partition.
 
-    Swap protocol: write to ``<path>.compact_tmp`` → rename original to
-    ``<path>.compact_old`` → rename tmp into place → delete old. On
-    HDFS/local these renames are atomic metadata ops; on object stores
-    use a manifest-based table format instead.
+    Swap protocol (``_swap_into_place``): write to
+    ``<path>.compact_tmp`` → rename original to ``<path>.compact_old``
+    → rename tmp into place → delete old.
     """
     df = spark.read.parquet(path)
     data_cols = [c for c in df.columns if c not in PARTITION_COLS]
@@ -125,17 +146,7 @@ def compact_table(
         .partitionBy(*PARTITION_COLS)
         .parquet(tmp)
     )
-    fs, jpath = _hadoop_fs(spark, path)
-    jtmp = spark._jvm.org.apache.hadoop.fs.Path(tmp)
-    jold = spark._jvm.org.apache.hadoop.fs.Path(old)
-    if fs.exists(jold):
-        fs.delete(jold, True)
-    if not fs.rename(jpath, jold):
-        raise IOError(f"compact_table: cannot move {path} aside")
-    if not fs.rename(jtmp, jpath):
-        fs.rename(jold, jpath)  # roll back
-        raise IOError(f"compact_table: cannot move {tmp} into place")
-    fs.delete(jold, True)
+    _swap_into_place(spark, path, tmp, old, "compact_table")
 
 
 def merge_upsert(
@@ -152,7 +163,7 @@ def merge_upsert(
     rows are the ones whose key is NOT in the update set (one shuffle
     or a broadcast when the update batch is small — the normal CDC
     shape), then the update rows are unioned in and the rewrite swaps
-    into place with the same rename protocol as ``compact_table``. At
+    into place with ``compact_table``'s ``_swap_into_place``. At
     100 TB the rewrite cost is bounded by partition-pruning the
     anti-join to only the partitions the update batch touches; on
     object stores use a manifest-based format (Delta/Iceberg) whose
@@ -170,17 +181,7 @@ def merge_upsert(
     merged = survivors.unionByName(updates)
     tmp, old = path + ".merge_tmp", path + ".merge_old"
     merged.write.mode("overwrite").parquet(tmp)
-    fs, jpath = _hadoop_fs(spark, path)
-    jtmp = spark._jvm.org.apache.hadoop.fs.Path(tmp)
-    jold = spark._jvm.org.apache.hadoop.fs.Path(old)
-    if fs.exists(jold):
-        fs.delete(jold, True)
-    if not fs.rename(jpath, jold):
-        raise IOError(f"merge_upsert: cannot move {path} aside")
-    if not fs.rename(jtmp, jpath):
-        fs.rename(jold, jpath)  # roll back
-        raise IOError(f"merge_upsert: cannot move {tmp} into place")
-    fs.delete(jold, True)
+    _swap_into_place(spark, path, tmp, old, "merge_upsert")
 
 
 def ensure_database(spark: SparkSession, name: str) -> None:

@@ -65,3 +65,33 @@ def write_food_csv(path: str) -> str:
         for r in ROWS:
             f.write(r + "\n")
     return path
+
+
+class _RenameFailsOnCall:
+    """Hadoop FileSystem proxy whose ``rename`` fails on call ``k``."""
+
+    def __init__(self, fs, k: int, calls: list[int]):
+        self._fs, self._k, self._calls = fs, k, calls
+
+    def rename(self, src, dst):
+        self._calls.append(1)
+        return len(self._calls) != self._k and self._fs.rename(src, dst)
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+def fail_rename_on_call(monkeypatch, k: int) -> list[int]:
+    """Make the ``k``-th Hadoop rename the writers call fail (return
+    False); returns the list that records every rename call."""
+    from gcp_food_delivery_data_pipeline_spark.sources import writers
+
+    calls: list[int] = []
+    real = writers._hadoop_fs
+
+    def failing_fs(session, path):
+        fs, jpath = real(session, path)
+        return _RenameFailsOnCall(fs, k, calls), jpath
+
+    monkeypatch.setattr(writers, "_hadoop_fs", failing_fs)
+    return calls

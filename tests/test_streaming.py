@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from gcp_food_delivery_data_pipeline_spark.pipeline import process_batch, run_pipeline
-from gcp_food_delivery_data_pipeline_spark.sources import writers
 from gcp_food_delivery_data_pipeline_spark.sources.readers import read_orders_csv
 from gcp_food_delivery_data_pipeline_spark.sources.writers import read_status_table
 from gcp_food_delivery_data_pipeline_spark.streaming.stream import run_stream
@@ -21,6 +20,7 @@ from tests.fixtures import (
     N_COUNT_TOTAL,
     N_DELIVERED,
     N_OTHER,
+    fail_rename_on_call,
     write_food_csv,
 )
 
@@ -114,34 +114,13 @@ def test_batch_and_stream_layouts_are_one_table(spark, stream_dirs, food_csv):
     assert "ingest_date" in delivered.columns
 
 
-class _RenameFailsOnCall:
-    """Hadoop FileSystem proxy whose ``rename`` fails on call ``k``."""
-
-    def __init__(self, fs, k: int, calls: list[int]):
-        self._fs, self._k, self._calls = fs, k, calls
-
-    def rename(self, src, dst):
-        self._calls.append(1)
-        return len(self._calls) != self._k and self._fs.rename(src, dst)
-
-    def __getattr__(self, name):
-        return getattr(self._fs, name)
-
-
 def test_stream_replay_after_partial_publish(spark, stream_dirs, food_csv, monkeypatch):
     """A micro-batch whose fan-out dies after publishing its first leaf
     (delivered) is repaired by replaying the same batch id: both tables
     then hold every row exactly once, and no staging directory is left."""
     out = stream_dirs["output"]
     raw = read_orders_csv(spark, food_csv)
-    calls: list[int] = []
-    real = writers._hadoop_fs
-
-    def failing_fs(session, path):
-        fs, jpath = real(session, path)
-        return _RenameFailsOnCall(fs, 2, calls), jpath
-
-    monkeypatch.setattr(writers, "_hadoop_fs", failing_fs)
+    calls = fail_rename_on_call(monkeypatch, 2)
     with pytest.raises(IOError, match="cannot move"):
         process_batch(raw, out, 3)
     monkeypatch.undo()

@@ -6,6 +6,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from gcp_food_delivery_data_pipeline_spark.sources.writers import (
@@ -13,6 +14,7 @@ from gcp_food_delivery_data_pipeline_spark.sources.writers import (
     read_status_table,
     write_status_table,
 )
+from tests.fixtures import fail_rename_on_call
 
 
 def _parquet_files(path: str) -> list[str]:
@@ -183,3 +185,34 @@ def test_write_status_fanout_leaves_other_staging_alone(spark, tmp_path):
         for side in ("delivered", "other")
     }
     assert got == {"delivered": [1], "other": [2, 3]}
+
+
+@pytest.mark.parametrize("op", ["compact_table", "merge_upsert"])
+def test_failed_swap_rolls_back_original(spark, tmp_path, monkeypatch, op):
+    """If the rewritten table cannot be renamed into place, the swap
+    raises and moves the original back: same path, same rows."""
+    from gcp_food_delivery_data_pipeline_spark.sources.writers import (
+        merge_upsert,
+    )
+
+    out = str(tmp_path / op)
+    df = spark.range(40).select(
+        F.col("id"), (F.col("id") % 3).cast("string").alias("status")
+    )
+    write_status_table(df, out, batch_id=0)
+    before = sorted(tuple(r) for r in read_status_table(spark, out).collect())
+
+    calls = fail_rename_on_call(monkeypatch, 2)  # 1: aside, 2: tmp -> path
+    with pytest.raises(IOError, match="into place"):
+        if op == "compact_table":
+            compact_table(spark, out, target_files_per_partition=1)
+        else:
+            updates = read_status_table(spark, out).limit(5)
+            merge_upsert(spark, out, updates, key_cols=["id"])
+    monkeypatch.undo()
+
+    assert len(calls) == 3  # the third rename is the rollback
+    assert os.path.isdir(out)
+    spark.catalog.clearCache()
+    after = sorted(tuple(r) for r in read_status_table(spark, out).collect())
+    assert after == before
