@@ -1998,7 +1998,7 @@ def _q_multimodal_meta(spark: SparkSession, sf: str) -> DataFrame:
 
 def _q_multimodal_features(spark: SparkSession, sf: str) -> DataFrame:
     d = load_table(spark, sf, "documents")
-    feats = extract_features(attach_fake_payload(d), dim=16, decode_mode="fake")
+    feats = extract_features(attach_fake_payload(d), dim=16)
     return feats.select(
         "doc_id", "n_bytes", F.size("features").alias("feat_dim")
     )

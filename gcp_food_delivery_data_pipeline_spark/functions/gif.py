@@ -3,8 +3,8 @@
 The VIDEO-shaped sibling of ``functions/png.py``: animated GIF is the
 one multi-frame format a container without media libraries can both
 write and read from scratch, which is what turns the frame-sampling
-stub (operators/multimodal.py ``decode_mode="real"`` gates) into a
-REAL end-to-end demonstration: bytes → LZW-decoded frames → stats.
+fake (operators/multimodal.py ``sample_frames``) into a REAL
+end-to-end demonstration: bytes → LZW-decoded frames → stats.
 
 Scope (deliberately minimal, standards-compliant output):
 

@@ -1,9 +1,9 @@
 """Minimal real PNG codec (8-bit grayscale + 8-bit RGB) on the stdlib
 only.
 
-The multimodal operators stub *library* codecs behind a gate because
-image libs aren't in this container — but PNG itself is just zlib
-(stdlib) plus chunk framing and per-scanline filters, so this module
+The multimodal operators fake *library* codecs because image libs
+aren't installed — but PNG itself is just zlib (stdlib) plus chunk
+framing and per-scanline filters, so this module
 implements the format for real: a spec-correct encoder and decoder for
 8-bit grayscale, non-interlaced images, including all five PNG filter
 types (None/Sub/Up/Average/Paeth, RFC 2083 §6). That turns the
@@ -15,10 +15,9 @@ viewer.
 Scale note: the per-pixel work runs inside Arrow-batched
 ``mapInPandas`` (see ``operators.multimodal.decode_png_stats``); a
 production deployment would swap the pure-Python unfilter loop for a
-C codec, which is exactly the swap the gate in
-``operators.multimodal.extract_features(decode_mode="real")``
-documents. The plumbing — schema, batching, payload pruning — is
-identical either way.
+C codec, the same swap a real decode would make in place of
+``operators.multimodal.extract_features``'s byte-histogram fake. The
+plumbing — schema, batching, payload pruning — is identical either way.
 
 Color types other than grayscale-8 (type 0) and RGB-8 (type 2) raise
 ``NotImplementedError`` with the supported subset spelled out;

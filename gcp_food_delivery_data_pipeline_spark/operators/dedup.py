@@ -6,7 +6,7 @@ the corpus-hygiene operators an LLM-data pipeline runs over a
 
 * ``dedup_exact``      — exact duplicates by content hash, deterministic
                          keep-first (smallest id). One shuffle.
-* ``minhash_signature``/ ``lsh_candidate_pairs`` — near-duplicate
+* ``with_minhash``/ ``lsh_candidate_pairs`` — near-duplicate
   candidate generation via MinHash + LSH banding: shingle → minhash →
   band → bucket-join. NEVER an all-pairs cross join: candidates come
   from an equi-join on (band_index, band_hash), so the shuffle is
@@ -14,8 +14,12 @@ the corpus-hygiene operators an LLM-data pipeline runs over a
 * ``near_dedup``       — greedy drop of any doc whose verified-similar
   neighbor has a smaller id.
 
-Everything is Column-expression based (higher-order functions
-``transform``/``filter``/``array_min`` — JVM-side, no Python UDFs).
+Each operator has one implementation. Most are Column expressions
+(higher-order functions ``transform``/``filter``/``array_min`` —
+JVM-side, no Python UDFs); the per-token hashing folds of SimHash and
+of the MinHash behind ``lsh_candidate_pairs`` run as Arrow-batched
+numpy kernels whose tokenizer and hash mirror the JVM ones exactly
+(``_py_tokens``/``_py_shingle_hash``).
 
 Determinism note: ``dropDuplicates`` keeps an arbitrary row; here the
 survivor is always ``min(id)`` per key via ``row_number`` so reruns and
@@ -28,6 +32,9 @@ fixed odd constants — the classic MinHash construction (Broder 1997).
 """
 
 from __future__ import annotations
+
+import hashlib
+import re
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -113,6 +120,30 @@ def _shingle_hash(s: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
 
 
+# Python mirrors of ``text.tokens`` and ``_shingle_hash`` for the Arrow
+# kernels (``with_simhash``, ``_minhash_frame_arrow``). Each mirrors a
+# JVM semantic exactly:
+# - Spark ``trim`` strips only ASCII spaces → ``str.strip(" ")``;
+# - Java ``\s`` is ASCII-only → the explicit class below, NOT Python
+#   ``\s`` (which also matches \x1c-\x1f and Unicode spaces);
+# - ``split`` then drop-empty, so blank text has no tokens;
+# - NULL text reads as '' — no tokens, as through ``tokens``/``shingles``;
+# - Spark ``md5`` hashes the UTF-8 bytes → ``str.encode()``.
+_JAVA_WS_RE = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def _py_tokens(text: str | None) -> list[str]:
+    """Whitespace tokens of ``text``, exactly as ``text.tokens``."""
+    if text is None:
+        return []
+    return [t for t in _JAVA_WS_RE.split(text.strip(" ")) if t]
+
+
+def _py_shingle_hash(s: str) -> int:
+    """``_shingle_hash`` of one string, in Python."""
+    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+
+
 def _signature_from_hashes(hashes: Column, num_hashes: int) -> Column:
     """MinHash signature (array<long>) from a pre-hashed shingle array.
 
@@ -154,10 +185,11 @@ def with_minhash(
     out_col: str = "minhash",
 ) -> DataFrame:
     """Append a MinHash signature column, staged so each shingle is
-    hashed exactly once. No shuffle, no UDF. Empty texts get an all-p
-    signature (matches nothing real). Output = input columns + the
-    signature; the staged shingle/hash temporaries are dropped (leaking
-    the full shingle array would dominate every downstream shuffle)."""
+    hashed exactly once. No shuffle, no UDF. Blank and NULL texts have
+    no tokens, so their one shingle is '' and they all share its
+    signature. Output = input columns + the signature; the staged
+    shingle/hash temporaries are dropped (leaking the full shingle
+    array would dominate every downstream shuffle)."""
     staged = df.withColumn("_sh", shingles(text_col, k=shingle_k)).withColumn(
         "_h", F.transform(F.col("_sh"), _shingle_hash)
     )
@@ -166,40 +198,7 @@ def with_minhash(
     ).drop("_h", "_sh")
 
 
-def minhash_signature(
-    text_col: Column | str, num_hashes: int = 64, shingle_k: int = 3
-) -> Column:
-    """Single-Column MinHash (convenience; prefer ``with_minhash`` —
-    this form re-evaluates the shingle md5s per hash function unless
-    Catalyst CSEs them)."""
-    sh = shingles(text_col, k=shingle_k)
-    hashes = F.transform(sh, _shingle_hash)
-    return _signature_from_hashes(hashes, num_hashes)
-
-
 SIMHASH_BITS = 32  # positive-LONG-safe; 64 would need unsigned handling
-
-
-def _simhash_from_hashes(hashes: Column, bits: int) -> Column:
-    """SimHash from a staged token-hash array: bit b of the fingerprint
-    is the sign of Σ_tokens (±1 by bit b of the token hash).
-
-    ``bits`` separate sign-sum expressions on purpose: the multiple
-    references to ``hashes`` keep the staged token-hash projection from
-    being inlined by CollapseProject (see _signature_from_hashes).
-    """
-    fp = F.lit(0).cast("long")
-    for b in range(bits):
-        bit_sum = F.aggregate(
-            hashes,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc
-            + F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-        fp = fp + F.when(bit_sum > 0, F.lit(1 << b).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return fp
 
 
 def with_simhash(
@@ -207,7 +206,6 @@ def with_simhash(
     text_col: str = "text",
     bits: int = SIMHASH_BITS,
     out_col: str = "simhash",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Append a SimHash fingerprint (Charikar 2002) of the token stream.
 
@@ -216,35 +214,17 @@ def with_simhash(
     Hamming-distance bucketing (group by bands of the fingerprint)
     finds near-dups without pairwise comparison. No shuffle.
 
-    ``impl="arrow"`` (default) computes the per-doc sign-sums in one
-    vectorized numpy pass per Arrow batch — bit-identical to the
-    ``impl="expr"`` Column pipeline, which evaluates ``bits``
-    interpreted ``aggregate`` folds per row (~8× slower; kept as the
-    oracle-checkable baseline). The Arrow path round-trips every input
-    column through pandas, so call it on a projected frame
+    Bit b of the fingerprint is the sign of Σ_tokens (±1 by bit b of
+    the token hash); repeated tokens count once per occurrence, and
+    NULL/blank text → fingerprint 0. The per-doc sign-sums run as one
+    vectorized numpy pass per Arrow batch (tokenizer and hash:
+    ``_py_tokens``/``_py_shingle_hash``). The kernel round-trips every
+    input column through pandas, so call it on a projected frame
     (id + text), not a wide one.
-
-    Parity notes for the kernel (mirrors JVM semantics exactly):
-    tokenizer = Spark ``trim`` (ASCII spaces only) + Java ``\\s+``
-    (ASCII class) + drop-empty; repeated tokens count once per
-    occurrence; NULL/empty text → fingerprint 0 (NULL bit-sums take
-    the ``otherwise(0)`` branch in the expression form).
     """
-    if impl != "arrow":
-        staged = df.withColumn(
-            "_th", F.transform(tokens(F.col(text_col)), _shingle_hash)
-        )
-        return staged.withColumn(
-            out_col, _simhash_from_hashes(F.col("_th"), bits)
-        ).drop("_th")
-
-    import hashlib
-    import re
-
     import numpy as np
     from pyspark.sql.types import LongType, StructField, StructType
 
-    split_re = re.compile(r"[ \t\n\x0b\f\r]+")
     bit_idx = np.arange(bits, dtype=np.int64)
     out_schema = StructType(
         list(df.schema.fields) + [StructField(out_col, LongType())]
@@ -257,21 +237,13 @@ def with_simhash(
             offsets: list[int] = []
             pos = 0
             for text in pdf[text_col]:
-                toks = (
-                    [t for t in split_re.split(text.strip(" ")) if t]
-                    if text is not None
-                    else []
-                )
+                toks = _py_tokens(text)
                 if not toks:
                     offsets.append(-1)
                     continue
                 hash_chunks.append(
                     np.array(
-                        [
-                            int(hashlib.md5(t.encode()).hexdigest()[:8], 16)
-                            for t in toks
-                        ],
-                        dtype=np.int64,
+                        [_py_shingle_hash(t) for t in toks], dtype=np.int64
                     )
                 )
                 offsets.append(pos)
@@ -469,88 +441,6 @@ def embedding_near_dup_pairs(
     )
 
 
-def embedding_near_dup_pairs_blas(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    a_chunk_rows: int = 1024,
-    b_chunk_cols: int = 8192,
-) -> DataFrame:
-    """All-pairs cosine pairs via blocked BLAS matmul (Arrow batches).
-
-    Same semantics and same scale envelope as
-    ``embedding_near_dup_pairs`` — the build side is collected and
-    broadcast exactly like the BNLJ variant's ``F.broadcast`` build —
-    but each Arrow batch of the probe side computes a dense
-    ``A @ B.T`` in one vectorized numpy call instead of evaluating a
-    per-pair ``aggregate`` fold in the JVM: ~100× less per-pair
-    overhead for dense float vectors. Memory is bounded by
-    ``a_chunk_rows × b_chunk_cols`` float64 blocks regardless of input
-    size. When the build side outgrows a broadcast, that is the cue to
-    switch to the LSH/IVF candidate path, not to scale this one.
-
-    The raw float64 cosine is handed back to Spark and rounded/
-    thresholded with the SAME Spark-side ``round``/``>=`` expressions
-    as the expression variant, so results are engine-identical.
-    """
-    import numpy as np
-
-    from gcp_food_delivery_data_pipeline_spark.operators.scale import (
-        ensure_min_partitions,
-    )
-
-    id_field = df.schema[id_col]
-    spark = df.sparkSession
-    b_rows = df.select(id_col, vec_col).collect()
-    b_ids = np.array([r[0] for r in b_rows], dtype=np.int64)
-    b_mat = np.array([list(r[1]) for r in b_rows], dtype=np.float64)
-    b_norms = np.sqrt(np.einsum("ij,ij->i", b_mat, b_mat))
-    bc = spark.sparkContext.broadcast((b_ids, b_mat, b_norms))
-    # keep a little slack below the threshold pre-round so the
-    # authoritative Spark-side round+filter sees every boundary pair
-    slack = threshold - 1e-7
-
-    def gen(batches):
-        import pandas as pd
-
-        ids_b, mat_b, norms_b = bc.value
-        for pdf in batches:
-            a_ids_all = pdf[id_col].to_numpy(dtype=np.int64)
-            a_mat_all = np.array(list(pdf[vec_col]), dtype=np.float64)
-            for s in range(0, len(a_ids_all), a_chunk_rows):
-                a_ids = a_ids_all[s : s + a_chunk_rows]
-                a_mat = a_mat_all[s : s + a_chunk_rows]
-                a_norms = np.sqrt(np.einsum("ij,ij->i", a_mat, a_mat))
-                for t in range(0, len(ids_b), b_chunk_cols):
-                    ids_bb = ids_b[t : t + b_chunk_cols]
-                    dots = a_mat @ mat_b[t : t + b_chunk_cols].T
-                    denom = np.outer(a_norms, norms_b[t : t + b_chunk_cols])
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        cos = np.where(denom != 0.0, dots / denom, -np.inf)
-                    keep = (
-                        (a_ids[:, None] < ids_bb[None, :]) & (cos >= slack)
-                    )
-                    ai, bi = np.nonzero(keep)
-                    if len(ai):
-                        yield pd.DataFrame(
-                            {
-                                "id_a": a_ids[ai],
-                                "id_b": ids_bb[bi],
-                                "_cos": cos[ai, bi],
-                            }
-                        )
-
-    probe = ensure_min_partitions(df.select(id_col, vec_col))
-    id_t = id_field.dataType.simpleString()
-    pairs = probe.mapInPandas(
-        gen, schema=f"id_a {id_t}, id_b {id_t}, _cos double"
-    )
-    return pairs.select(
-        "id_a", "id_b", F.round(F.col("_cos"), 6).alias("cosine_sim")
-    ).filter(F.col("cosine_sim") >= threshold)
-
-
 def embedding_near_dup_pairs_blocked(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -561,8 +451,8 @@ def embedding_near_dup_pairs_blocked(
     group_col: str | None = None,
 ) -> DataFrame:
     """Exact all-pairs cosine pairs, fully DISTRIBUTED — no driver
-    collect, no broadcast of the corpus (the scale ceiling of the BLAS
-    and BNLJ variants).
+    collect, no broadcast of the corpus (the scale ceiling of the BNLJ
+    variant, ``embedding_near_dup_pairs``).
 
     Block-partitioned pairwise BLAS: every vector hashes to one of B
     blocks; each of the B·(B+1)/2 unordered block pairs becomes one
@@ -584,7 +474,7 @@ def embedding_near_dup_pairs_blocked(
     per row is ~group_size/block_rows + 1, not corpus/block_rows.
 
     Thresholding/rounding happen in the SAME Spark-side expressions as
-    the other implementations, so results are engine-identical
+    ``embedding_near_dup_pairs``, so results are engine-identical
     (asserted in tests).
     """
     import math
@@ -705,27 +595,17 @@ def embedding_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    impl: str = "blocked",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate DEDUP: drop every vector that
     has a near-duplicate with a smaller id (the canonical keep-lowest
     survivor rule — deterministic, and single-pass unlike clustering).
 
-    The default pair generator is the distributed blocked-BLAS kernel
-    (``impl="blocked"`` — exact, no driver collect, no corpus
-    broadcast: the path that survives 100 TB). ``impl="blas"``
-    (driver-collected broadcast matmul) and ``impl="expr"``
-    (pure-Column BNLJ) remain as explicit opt-ins for small corpora
-    and as oracle baselines; all three produce identical pairs. The
-    drop-set is tiny relative to the corpus, so it rides into the
-    anti-join as a broadcast.
+    Pairs come from the distributed blocked-BLAS kernel
+    (``embedding_near_dup_pairs_blocked`` — exact, no driver collect,
+    no corpus broadcast). The drop-set is tiny relative to the corpus,
+    so it rides into the anti-join as a broadcast.
     """
-    gen = {
-        "blocked": embedding_near_dup_pairs_blocked,
-        "blas": embedding_near_dup_pairs_blas,
-        "expr": embedding_near_dup_pairs,
-    }[impl]
-    pairs = gen(df, id_col, vec_col, threshold)
+    pairs = embedding_near_dup_pairs_blocked(df, id_col, vec_col, threshold)
     losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(F.broadcast(losers), id_col, "left_anti")
 
@@ -758,27 +638,18 @@ def _minhash_frame_arrow(
 ) -> DataFrame:
     """(_id, _shingles, _sig) via one Arrow-batched kernel.
 
-    Bit-identical to the staged-expression path (``shingles`` +
-    ``_shingle_hash`` + ``_signature_from_hashes``) but ~10× cheaper:
-    the 260k-shingle × 64-permutation min-fold that Spark evaluates as
+    Row for row equal to the staged-expression path (``shingles`` +
+    ``with_minhash``; asserted in tests) but ~10× cheaper: the
+    260k-shingle × 64-permutation min-fold that Spark evaluates as
     interpreted higher-order functions becomes one vectorized numpy
     ``(H·A + B) mod p`` + ``minimum.reduceat`` per Arrow batch.
 
-    Parity notes (each mirrors a JVM semantic exactly):
-    - Spark ``trim`` strips only ASCII spaces → ``str.strip(" ")``.
-    - Java ``\\s`` is ASCII-only → explicit ``[ \\t\\n\\x0b\\f\\r]+``
-      class, NOT Python ``\\s`` (which also matches \\x1c-\\x1f and
-      Unicode spaces).
-    - ``array_distinct`` keeps first-occurrence order →
-      ``dict.fromkeys``.
-    - 0/1-token docs yield their whole token join as the single
-      shingle (``greatest(n-k+1, 1)``); empty text yields [""].
-    - NULL text → NULL shingles, all-p signature (the ``coalesce``
-      branch of ``_signature_from_hashes``).
+    Beyond the shared tokenizer/hash notes (``_py_tokens``):
+    ``array_distinct`` keeps first-occurrence order →
+    ``dict.fromkeys``; 0/1-token docs (blank and NULL text included)
+    yield their whole token join as the single shingle
+    (``greatest(n-k+1, 1)``), so blank text yields [""].
     """
-    import hashlib
-    import re
-
     import numpy as np
 
     from gcp_food_delivery_data_pipeline_spark.operators.scale import (
@@ -789,60 +660,38 @@ def _minhash_frame_arrow(
     a_vec = np.array([p[0] for p in params], dtype=np.int64)
     b_vec = np.array([p[1] for p in params], dtype=np.int64)
     p_mod = _MERSENNE_P
-    split_re = re.compile(r"[ \t\n\x0b\f\r]+")
     id_t = df.schema[id_col].dataType.simpleString()
 
     def gen(batches):
         import pandas as pd
 
         for pdf in batches:
-            sh_out: list[list[str] | None] = []
+            if pdf.empty:
+                continue
+            sh_out: list[list[str]] = []
             hash_chunks: list[np.ndarray] = []
-            offsets: list[int] = []
+            starts: list[int] = []
             pos = 0
             for text in pdf[text_col]:
-                if text is None:
-                    sh_out.append(None)
-                    offsets.append(-1)
-                    continue
-                toks = [t for t in split_re.split(text.strip(" ")) if t]
-                n = len(toks)
+                toks = _py_tokens(text)
                 grams = [
                     " ".join(toks[i : i + shingle_k])
-                    for i in range(max(n - (shingle_k - 1), 1))
+                    for i in range(max(len(toks) - (shingle_k - 1), 1))
                 ]
                 sh = list(dict.fromkeys(grams))
                 sh_out.append(sh)
                 hash_chunks.append(
-                    np.array(
-                        [
-                            int(
-                                hashlib.md5(g.encode()).hexdigest()[:8], 16
-                            )
-                            for g in sh
-                        ],
-                        dtype=np.int64,
-                    )
+                    np.array([_py_shingle_hash(g) for g in sh], dtype=np.int64)
                 )
-                offsets.append(pos)
+                starts.append(pos)
                 pos += len(sh)
-            if hash_chunks:
-                h_all = np.concatenate(hash_chunks) % p_mod
-                # h < p (2^31-1), a < 2^30 → products < 2^61: exact in
-                # int64, same arithmetic as the Column expression path.
-                perms = (h_all[:, None] * a_vec[None, :] + b_vec[None, :]) % p_mod
-                starts = [o for o in offsets if o >= 0]
-                mins = np.minimum.reduceat(perms, np.array(starts), axis=0)
-            sigs = []
-            row = 0
-            for o in offsets:
-                if o < 0:
-                    sigs.append([p_mod] * num_hashes)
-                else:
-                    sigs.append(mins[row].tolist())
-                    row += 1
+            h_all = np.concatenate(hash_chunks) % p_mod
+            # h < p (2^31-1), a < 2^30 → products < 2^61: exact in
+            # int64, same arithmetic as the Column expression path.
+            perms = (h_all[:, None] * a_vec[None, :] + b_vec[None, :]) % p_mod
+            mins = np.minimum.reduceat(perms, np.array(starts), axis=0)
             yield pd.DataFrame(
-                {"_id": pdf[id_col], "_shingles": sh_out, "_sig": sigs}
+                {"_id": pdf[id_col], "_shingles": sh_out, "_sig": mins.tolist()}
             )
 
     src = ensure_min_partitions(df.select(id_col, text_col))
@@ -885,8 +734,6 @@ def lsh_candidate_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_k: int = 3,
-    cache_signatures: bool = True,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Near-duplicate CANDIDATE pairs via LSH banding.
 
@@ -905,45 +752,22 @@ def lsh_candidate_pairs(
     effectively-exhaustive recall at 0.8 (miss ≈ 6e-15) and can afford
     the extra low-similarity candidates the wider bands admit.
 
-    With ``cache_signatures=True`` the result is computed EAGERLY: the
-    corpus-sized signature cache is released as soon as the (small)
-    pair list is materialized, instead of pinning it for the session.
-
-    ``impl="arrow"`` (default) computes the (shingles, signature)
-    frame in one vectorized Arrow kernel (``_minhash_frame_arrow`` —
-    bit-identical, ~10× cheaper); ``impl="expr"`` keeps the pure
-    Column-expression pipeline as the oracle-checkable baseline.
+    The result is computed EAGERLY: the corpus-sized signature cache
+    is released as soon as the (small) pair list is materialized,
+    instead of pinning it for the session. The (shingles, signature)
+    frame comes from one vectorized Arrow kernel
+    (``_minhash_frame_arrow``).
     """
-    from gcp_food_delivery_data_pipeline_spark.operators.scale import (
-        ensure_min_partitions,
-    )
+    from pyspark import StorageLevel
 
     rows = num_hashes // bands
-    if impl == "arrow":
-        with_sig = _minhash_frame_arrow(
-            df, text_col, id_col, num_hashes, shingle_k
-        )
-    else:
-        # widen narrow inputs first: minhashing is the expensive stage
-        # and must not run on a single input split
-        staged = ensure_min_partitions(
-            df.select(F.col(id_col).alias("_id"), F.col(text_col))
-        ).withColumn("_shingles", shingles(text_col, k=shingle_k))
-        with_sig = staged.withColumn(
-            "_h", F.transform(F.col("_shingles"), _shingle_hash)
-        ).select(
-            "_id",
-            "_shingles",
-            _signature_from_hashes(F.col("_h"), num_hashes).alias("_sig"),
-        )
-    if cache_signatures:
-        # The signature frame feeds the band join AND both shingle
-        # re-attach joins; without a persist the shingling+minhash of
-        # the whole corpus runs three times. MEMORY_AND_DISK — Spark
-        # LRU-evicts when executors need the room.
-        from pyspark import StorageLevel
-
-        with_sig = with_sig.persist(StorageLevel.MEMORY_AND_DISK)
+    # The signature frame feeds the band join AND both shingle
+    # re-attach joins; without a persist the shingling+minhash of the
+    # whole corpus runs three times. MEMORY_AND_DISK — Spark
+    # LRU-evicts when executors need the room.
+    with_sig = _minhash_frame_arrow(
+        df, text_col, id_col, num_hashes, shingle_k
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
     # Shuffle-width discipline: the band self-join moves ONLY
     # (id, band, band_hash) — never the (large) shingle arrays; those
@@ -996,20 +820,18 @@ def lsh_candidate_pairs(
     result = verified.select(
         "id_a", "id_b", F.round(jaccard, 6).alias("jaccard")
     )
-    if cache_signatures:
-        # Materialize the (small — pairs only) result as an eager
-        # localCheckpoint so the corpus-sized signature cache can be
-        # released NOW rather than leaking for the session lifetime.
-        # A checkpoint (not persist) for the result itself: its blocks
-        # live exactly as long as the returned frame is referenced
-        # (ContextCleaner frees them on drop) instead of occupying a
-        # cache-manager entry until someone remembers to unpersist —
-        # the session-lifetime-leak class the round-9 review flagged
-        # on prefix_similarity_join. The checkpointMode conf set to
-        # 'reliable' makes this cut survive executor loss
-        # (checkpointing.py).
-        result = _ckpt(result)
-        with_sig.unpersist()
+    # Materialize the (small — pairs only) result as an eager
+    # localCheckpoint so the corpus-sized signature cache can be
+    # released NOW rather than leaking for the session lifetime. A
+    # checkpoint (not persist) for the result itself: its blocks live
+    # exactly as long as the returned frame is referenced
+    # (ContextCleaner frees them on drop) instead of occupying a
+    # cache-manager entry until someone remembers to unpersist — the
+    # session-lifetime-leak class once found on prefix_similarity_join.
+    # The checkpointMode conf set to 'reliable' makes this cut survive
+    # executor loss (checkpointing.py).
+    result = _ckpt(result)
+    with_sig.unpersist()
     return result
 
 

@@ -3,11 +3,12 @@
 An LLM-data pipeline carries images/audio/video as ``binary`` columns
 with a metadata struct alongside. This module provides the Spark-side
 plumbing — schema, partition-aware batching, Arrow-batched UDF
-signatures — with the actual codec calls STUBBED (image/audio libs are
-not in this container): ``decode_mode="fake"`` produces deterministic
-features so the full pipeline is testable end-to-end;
-``decode_mode="real"`` raises ``NotImplementedError`` at the exact
-point a codec library would be invoked.
+signatures. ``extract_features``, ``resize_payload`` and
+``sample_frames`` stand in for library codecs (image/audio libs are
+not installed) with deterministic byte-level fakes of the real op's
+shape, so the full pipeline is testable end-to-end;
+``decode_png_stats`` and ``decode_gif_stats`` run real codecs written
+on the stdlib (``functions.png``/``functions.gif``).
 
 Design rules that hold at 100 TB:
 
@@ -114,7 +115,6 @@ def _fake_features(payload: bytes, dim: int) -> list[float]:
 def extract_features(
     df: DataFrame,
     dim: int = 16,
-    decode_mode: str = "fake",
     id_col: str = "doc_id",
     payload_col: str = "payload",
 ) -> DataFrame:
@@ -122,19 +122,13 @@ def extract_features(
 
     ``mapInPandas``: each Arrow batch crosses to Python ONCE; the
     output drops the payload (features only), so nothing downstream
-    ever shuffles media bytes. ``decode_mode="real"`` marks where a
-    codec (PIL/ffmpeg/...) would decode — not available here, raises.
+    ever shuffles media bytes. The featurizer is a deterministic
+    byte-histogram folded to ``dim`` — the place a codec
+    (PIL/ffmpeg/...) decode would sit.
     """
-    if decode_mode not in ("fake", "real"):
-        raise ValueError(f"unknown decode_mode: {decode_mode!r}")
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if decode_mode == "real":
-                raise NotImplementedError(
-                    "real media decode needs a codec library (PIL/ffmpeg); "
-                    "not available in this environment — use decode_mode='fake'"
-                )
             feats = [
                 _fake_features(p, dim) if p is not None else None
                 for p in pdf[payload_col]
@@ -168,33 +162,24 @@ def resize_payload(
     df: DataFrame,
     width: int,
     height: int,
-    decode_mode: str = "fake",
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Resize every payload to ``width x height`` — Arrow-batched, same
     (payload, meta) contract out as in, so resizes chain with the other
     multimodal ops.
 
-    ``fake`` mode byte-cycles the source payload to exactly
-    ``width*height`` bytes (empty payload → zero bytes), a
-    deterministic stand-in with the real op's shape: output size is
-    target-determined, content is source-determined. ``real`` marks the
-    codec call site (PIL/libvips) and raises here. Output payload size
-    is FIXED per call — downstream batch sizing (maxRecordsPerFile,
-    Arrow batch bytes) can rely on it, which is the property a real
-    thumbnailing stage is deployed for at scale.
+    The source payload is byte-cycled to exactly ``width*height``
+    bytes (empty payload → zero bytes), a deterministic stand-in for a
+    codec resize (PIL/libvips) with the real op's shape: output size is
+    target-determined, content is source-determined. Output payload
+    size is FIXED per call — downstream batch sizing
+    (maxRecordsPerFile, Arrow batch bytes) can rely on it, which is the
+    property a real thumbnailing stage is deployed for at scale.
     """
-    if decode_mode not in ("fake", "real"):
-        raise ValueError(f"unknown decode_mode: {decode_mode!r}")
     n_out = width * height
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if decode_mode == "real":
-                raise NotImplementedError(
-                    "real image resize needs a codec library (PIL/libvips); "
-                    "not available in this environment — use decode_mode='fake'"
-                )
             resized = []
             for p in pdf["payload"]:
                 if p is None or len(p) == 0:
@@ -237,7 +222,6 @@ FRAME_SCHEMA = StructType(
 def sample_frames(
     df: DataFrame,
     n_frames: int = 4,
-    decode_mode: str = "fake",
     id_col: str = "doc_id",
     payload_col: str = "payload",
 ) -> DataFrame:
@@ -245,23 +229,15 @@ def sample_frames(
     the explode-shaped multimodal op: one input row → n output rows,
     each carrying a bounded frame payload instead of the whole video.
 
-    ``fake`` mode emits ``n_frames`` contiguous even byte-slices
-    (earlier frames get the remainder bytes), preserving the real op's
-    cardinality and size arithmetic; ``real`` marks the demuxer call
-    site (ffmpeg) and raises. The full payload never leaves the scan
-    stage: the fan-out happens inside the same Arrow pass, and only
-    frame-sized slices flow on.
+    Emits ``n_frames`` contiguous even byte-slices (earlier frames get
+    the remainder bytes), a stand-in for a demuxer (ffmpeg) that keeps
+    the real op's cardinality and size arithmetic. The full payload
+    never leaves the scan stage: the fan-out happens inside the same
+    Arrow pass, and only frame-sized slices flow on.
     """
-    if decode_mode not in ("fake", "real"):
-        raise ValueError(f"unknown decode_mode: {decode_mode!r}")
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if decode_mode == "real":
-                raise NotImplementedError(
-                    "real frame sampling needs a demuxer (ffmpeg); "
-                    "not available in this environment — use decode_mode='fake'"
-                )
             ids, idxs, frames = [], [], []
             for doc_id, p in zip(pdf[id_col], pdf[payload_col]):
                 p = bytes(p) if p is not None else b""
@@ -371,10 +347,9 @@ def decode_png_stats(
     (signature, chunks, CRCs), inflate IDAT with zlib, reconstruct all
     five scanline filter types, and emit per-image stats —
     ``(doc_id, width, height, mean_px)``. This is the end-to-end form
-    of the decode stage the ``decode_mode="real"`` gates elsewhere
-    stub: same Arrow batching, same payload-drop-before-shuffle shape,
-    but the bytes actually round-trip through a working codec
-    (``functions.png``).
+    of the decode stage ``extract_features`` fakes: same Arrow
+    batching, same payload-drop-before-shuffle shape, but the bytes
+    actually round-trip through a working codec (``functions.png``).
 
     ``passthrough`` names extra input columns echoed onto each output
     row (appended after the stats columns). When a caller needs scan
@@ -750,7 +725,7 @@ def decode_gif_stats(
     container, LZW-decode EVERY frame, and emit
     ``(doc_id, n_frames, width, height, mean_px)`` where ``mean_px``
     averages over all frames' pixels — the working form of the
-    frame-sampling stage the ``decode_mode="real"`` gates stub."""
+    frame-sampling stage ``sample_frames`` fakes."""
     from gcp_food_delivery_data_pipeline_spark.functions.gif import (
         decode_gif_gray,
     )

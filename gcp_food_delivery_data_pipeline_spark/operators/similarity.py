@@ -132,47 +132,44 @@ def topk_exact_scalable(
     return _rank_topk(_scored(candidates, queries, id_col, vec_col), k)
 
 
+def _sign_bucket(vec_col: str, hyperplanes: list[list[float]]) -> Column:
+    """Sign-random-projection bucket id (Charikar SimHash for vectors):
+    bit i = sign(v · h_i), packed into a LONG. Hyperplanes are embedded
+    as literals — broadcast-free."""
+    bucket = F.lit(0)
+    for i, h in enumerate(hyperplanes):
+        hp = dense_lit([float(x) for x in h], "array<double>")
+        bucket = bucket + F.when(
+            dot_product(F.col(vec_col), hp) >= 0, F.lit(1 << i)
+        ).otherwise(F.lit(0))
+    return bucket.cast("long")
+
+
 def with_lsh_bucket(
     df: DataFrame,
     hyperplanes: list[list[float]],
     vec_col: str = "embedding",
     bucket_col: str = "bucket",
 ) -> DataFrame:
-    """Append a sign-random-projection bucket id (Charikar SimHash for
-    vectors): bit i = sign(v · h_i), packed into a LONG.
+    """Append a sign-random-projection bucket id (``_sign_bucket``).
 
     Hyperplanes arrive as plain Python floats (caller generates them
-    deterministically) and are embedded as literals — broadcast-free.
+    deterministically).
     """
-    bits = []
-    for i, h in enumerate(hyperplanes):
-        hp = dense_lit([float(x) for x in h], "array<double>")
-        bits.append(
-            F.when(dot_product(F.col(vec_col), hp) >= 0, F.lit(1 << i)).otherwise(
-                F.lit(0)
-            )
-        )
-    bucket = bits[0]
-    for b in bits[1:]:
-        bucket = bucket + b
-    return df.withColumn(bucket_col, bucket.cast("long"))
+    return df.withColumn(bucket_col, _sign_bucket(vec_col, hyperplanes))
 
 
 def _with_lsh_tables(
     df: DataFrame, tables: list[list[list[float]]], vec_col: str
 ) -> DataFrame:
     """Explode a row into one (table, bucket) pair per hash table."""
-    entries = []
-    for t, planes in enumerate(tables):
-        bucket = F.lit(0)
-        for i, h in enumerate(planes):
-            hp = dense_lit([float(x) for x in h], "array<double>")
-            bucket = bucket + F.when(
-                dot_product(F.col(vec_col), hp) >= 0, F.lit(1 << i)
-            ).otherwise(F.lit(0))
-        entries.append(
-            F.struct(F.lit(t).alias("table"), bucket.cast("long").alias("bucket"))
+    entries = [
+        F.struct(
+            F.lit(t).alias("table"),
+            _sign_bucket(vec_col, planes).alias("bucket"),
         )
+        for t, planes in enumerate(tables)
+    ]
     return df.withColumn("_tb", F.explode(F.array(*entries))).select(
         *df.columns, F.col("_tb.table").alias("table"), F.col("_tb.bucket").alias("bucket")
     )
@@ -674,16 +671,6 @@ def _pq_sub(vec_col: str, s: int, sub_d: int) -> Column:
     return F.transform(
         F.slice(F.col(vec_col), s * sub_d + 1, sub_d),
         lambda x: x.cast("double"),
-    )
-
-
-def _pq_dist2(sub: Column, cent: list[float]) -> Column:
-    """Squared euclidean distance of ``sub`` to a literal centroid."""
-    lit = dense_lit([float(x) for x in cent], "array<double>")
-    return F.aggregate(
-        F.zip_with(sub, lit, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
     )
 
 

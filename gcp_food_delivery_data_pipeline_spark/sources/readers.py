@@ -18,6 +18,19 @@ from gcp_food_delivery_data_pipeline_spark.schema import (
 )
 
 
+def _orders_csv_options(reader):
+    """Apply the orders-CSV scan options to a batch or stream reader
+    (``DataFrameReader``/``DataStreamReader``): header, PERMISSIVE with
+    the corrupt-record column, UTF-8 and the raw schema."""
+    return (
+        reader.option("header", True)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", CORRUPT_COL)
+        .option("encoding", "UTF-8")
+        .schema(RAW_SCHEMA_WITH_CORRUPT)
+    )
+
+
 def read_orders_csv(spark: SparkSession, path: str) -> DataFrame:
     """Structured scan of a food-orders CSV (header skipped, 11 string cols).
 
@@ -34,14 +47,7 @@ def read_orders_csv(spark: SparkSession, path: str) -> DataFrame:
     (code/beam.py:34-37). For byte-fidelity on quoted-comma data use
     ``read_orders_lines`` + ``clean_order_lines``.
     """
-    return (
-        spark.read.option("header", True)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("encoding", "UTF-8")
-        .schema(RAW_SCHEMA_WITH_CORRUPT)
-        .csv(path)
-    )
+    return _orders_csv_options(spark.read).csv(path)
 
 
 def read_orders_text(spark: SparkSession, path: str) -> DataFrame:

@@ -13,6 +13,9 @@ needs at scale:
 * ``run_user_totals_stream`` — ``applyInPandasWithState``: explicit
   per-key state (running per-user event/value totals), the extension
   point for operators Spark's built-in aggregations can't express.
+  It is the module's one stateful per-key operator: Spark 4's
+  ``transformWithStateInPandas`` talks to its state server over
+  protobuf, which pyspark does not install.
 
 Both mirror their batch twins (plans/analytics.py:q_events_hourly /
 q_distinct_users) so tests can assert stream == batch on a replayed
@@ -29,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -332,101 +334,6 @@ def run_user_totals_stream(
         .trigger(availableNow=True)
         .start()
     )
-
-
-class _UserTotalsProcessor(StatefulProcessor):
-    """``transformWithState`` processor: running per-user totals in a
-    named ValueState cell."""
-
-    def init(self, handle) -> None:
-        self._totals = handle.getValueState("totals", "n BIGINT, s DOUBLE")
-
-    def handleInputRows(self, key, rows, timer_values):
-        prev = self._totals.get() if self._totals.exists() else (0, 0.0)
-        n, s = prev
-        for pdf in rows:
-            n += len(pdf)
-            s += float(pdf["value"].sum())
-        self._totals.update((n, s))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "sum_value": [round(s, 2)],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def run_user_totals_stream_v2(
-    spark: SparkSession,
-    input_dir: str,
-    checkpoint_dir: str,
-    query_name: str = "user_totals_v2",
-) -> StreamingQuery:
-    """Per-user running totals via ``transformWithStateInPandas`` —
-    the Spark 4 stateful API (successor to applyInPandasWithState):
-    NAMED state cells (value/list/map) instead of one monolithic
-    tuple, per-cell TTL, timers, and schema evolution of state. Same
-    semantics as ``run_user_totals_stream``, asserted equal in tests.
-
-    Requires the RocksDB state store (set here): at scale its
-    changelog checkpointing also shrinks per-batch checkpoint I/O to
-    the delta, where the HDFS-backed store rewrites full snapshots.
-
-    Dependency gate: the transformWithState state-server protocol is
-    protobuf-based; without the ``protobuf`` package the driver-side
-    state worker crashes opaquely mid-query, so fail fast here with
-    the fix and the working-equivalent fallback. Probe history:
-    absent r10-r14; re-probed 2026-08-17 (r15, `import
-    google.protobuf` → ModuleNotFoundError: No module named
-    'google'), still absent — the v1==v2 parity test remains gated
-    on the import.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the public 'protobuf' "
-            "package (pyspark's state-server protocol): pip install "
-            "protobuf. Until then use run_user_totals_stream "
-            "(applyInPandasWithState) — same semantics, tested equal."
-        ) from e
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-
-    proc = _UserTotalsProcessor()
-    events = read_events_stream(spark, input_dir)
-    totals = events.groupBy("user_id").transformWithStateInPandas(
-        proc,
-        outputStructType=USER_TOTALS_SCHEMA,
-        outputMode="update",
-        timeMode="none",
-    )
-    try:
-        return (
-            totals.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        # The started query holds its own conf snapshot; restore the
-        # session default so later v1 queries (dedup/upsert/totals)
-        # keep checkpointing with the provider their restarts expect.
-        if old_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old_provider)
 
 
 def run_click_attribution_stream(

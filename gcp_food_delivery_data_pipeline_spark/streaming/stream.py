@@ -30,7 +30,9 @@ from pyspark.sql.streaming import StreamingQuery
 
 from gcp_food_delivery_data_pipeline_spark.operators.metrics import Counts
 from gcp_food_delivery_data_pipeline_spark.pipeline import process_batch
-from gcp_food_delivery_data_pipeline_spark.schema import RAW_SCHEMA_WITH_CORRUPT
+from gcp_food_delivery_data_pipeline_spark.sources.readers import (
+    _orders_csv_options,
+)
 
 
 def run_stream(
@@ -49,12 +51,8 @@ def run_stream(
     used by tests); pass ``{"processingTime": "10 minutes"}`` for the
     reference's cadence (airflow_pipe.py:63).
     """
-    reader = (
-        spark.readStream.option("header", True)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .schema(RAW_SCHEMA_WITH_CORRUPT)
+    reader = _orders_csv_options(spark.readStream).option(
+        "maxFilesPerTrigger", max_files_per_trigger
     )
     if archive_dir is not None:
         reader = reader.option("cleanSource", "archive").option(

@@ -77,7 +77,7 @@ def test_minhash_signature_shape_and_determinism(corpus):
 
 
 def test_lsh_finds_planted_pairs(corpus):
-    pairs = lsh_candidate_pairs(corpus, cache_signatures=False)
+    pairs = lsh_candidate_pairs(corpus)
     got = {(r.id_a, r.id_b): r.jaccard for r in pairs.collect()}
     # exact dups: jaccard 1.0
     assert got[(1, 2)] == 1.0 and got[(1, 5)] == 1.0 and got[(2, 5)] == 1.0
@@ -135,17 +135,14 @@ def test_connected_components_transitive_closure(spark):
 
 
 def test_embedding_pair_kernels_all_match_expr_baseline(spark):
-    """ALL THREE pair generators behind embedding_near_dedup's impl
-    switch must produce identical pairs on the driver's real
-    embeddings: the distributed blocked kernel (default at scale: no
-    driver collect, no corpus broadcast), the driver-collected
-    broadcast-matmul 'blas' variant, and the pure-Column BNLJ
-    baseline."""
+    """The distributed blocked kernel behind ``embedding_dedup`` (no
+    driver collect, no corpus broadcast) must produce the same pairs as
+    the pure-Column BNLJ ``embedding_near_dup_pairs`` on the sf0.001
+    embeddings table."""
     import os
 
     from gcp_food_delivery_data_pipeline_spark.operators.dedup import (
         embedding_near_dup_pairs,
-        embedding_near_dup_pairs_blas,
         embedding_near_dup_pairs_blocked,
     )
     from gcp_food_delivery_data_pipeline_spark.sources.readers import (
@@ -167,14 +164,74 @@ def test_embedding_pair_kernels_all_match_expr_baseline(spark):
             ).collect(),
         )
     )
-    got_blas = sorted(
-        map(
-            tuple,
-            embedding_near_dup_pairs_blas(e, threshold=0.35).collect(),
-        )
-    )
     assert got_blocked == want and len(want) > 0
-    assert got_blas == want
+
+
+# NULL, empty, whitespace-only, each ASCII whitespace Java's \s splits
+# on, \x1c (whitespace to Python's \s, not Java's) and non-ASCII.
+EDGE_TEXTS = [
+    None,
+    "",
+    "   ",
+    "\ta\tb\t",
+    "a\x0bb c",
+    "a\x0cb c d",
+    "a\rb\r\nc",
+    "a\x1cb c",
+    "héllo wörld ünïcode text",
+    "日本語 テキスト",
+    " x y z ",
+    "a b c d e",
+]
+
+
+def test_minhash_kernel_matches_column_path_row_for_row(spark):
+    """The Arrow MinHash kernel behind ``lsh_candidate_pairs`` must give
+    every document, NULL and blank text included, the shingles of
+    ``shingles`` and the signature of ``with_minhash``."""
+    import os
+
+    from gcp_food_delivery_data_pipeline_spark.operators.dedup import (
+        _minhash_frame_arrow,
+    )
+    from tests.conftest import SF_DIR
+    from gcp_food_delivery_data_pipeline_spark.sources.readers import (
+        load_table,
+    )
+
+    sf = os.environ.get("SPARK_GRAFT_SF_SMALL", SF_DIR)
+    d = load_table(spark, sf, "documents").select("doc_id", "text")
+    top = d.agg(F.max("doc_id")).collect()[0][0]
+    edge = spark.createDataFrame(
+        [(top + 1 + i, t) for i, t in enumerate(EDGE_TEXTS)],
+        "doc_id long, text string",
+    )
+    df = d.unionByName(edge)
+    kernel = {
+        r._id: (r._shingles, list(r._sig))
+        for r in _minhash_frame_arrow(df, "text", "doc_id", 64, 3).collect()
+    }
+    column = {
+        r.doc_id: (r.sh, list(r.minhash))
+        for r in with_minhash(
+            df.withColumn("sh", shingles("text", 3)), num_hashes=64
+        ).collect()
+    }
+    assert len(kernel) == df.count() > len(EDGE_TEXTS)
+    assert kernel == column
+
+
+def test_lsh_pairs_treat_null_text_as_empty(spark):
+    """NULL text shingles like '': the two NULL docs and the empty doc
+    are exact duplicates of each other (jaccard 1.0)."""
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, ""), (4, "a b c d"), (5, "a b c d")],
+        "doc_id long, text string",
+    )
+    got = sorted(
+        map(tuple, lsh_candidate_pairs(df, num_hashes=8, bands=4).collect())
+    )
+    assert got == [(1, 2, 1.0), (1, 3, 1.0), (2, 3, 1.0), (4, 5, 1.0)]
 
 
 def test_simhash_banded_pairs_equal_brute_force(spark):

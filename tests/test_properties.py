@@ -669,6 +669,7 @@ def test_survival_km_matches_python_model(spark_global, spans):
     n_total = len(per_user)
     before, log_sum, hit_zero = 0, 0.0, False
     import math
+    from decimal import ROUND_HALF_UP, Decimal
 
     expect = {}
     for t in ts:
@@ -680,7 +681,11 @@ def test_survival_km_matches_python_model(spark_global, spans):
         else:
             log_sum += math.log(f)
         s = 0.0 if hit_zero else math.exp(log_sum)
-        expect[t] = (at_risk, d, cens.get(t, 0), round(s, 6))
+        # Spark's round (like DuckDB's) is HALF_UP on the double's
+        # shortest decimal form; Python's round breaks exact ties to
+        # even (S = 0.6703125 is a tie at 6 decimals).
+        s6 = Decimal(repr(s)).quantize(Decimal("1e-6"), ROUND_HALF_UP)
+        expect[t] = (at_risk, d, cens.get(t, 0), float(s6))
         before += d + cens.get(t, 0)
     # survival arithmetic differs in fold shape (exp of sum of lns vs
     # incremental) — compare at 1e-9, exact on counts

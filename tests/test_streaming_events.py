@@ -311,48 +311,6 @@ def test_stream_upsert_latest_value_per_key_wins(spark, tmp_path):
     assert spark.read.parquet(target).count() == 3
 
 
-def test_user_totals_v2_gated_or_matches_v1(spark, events_dir, tmp_path):
-    """transformWithStateInPandas twin: without protobuf the call must
-    fail fast with the actionable gate (not crash mid-query); with it,
-    the v2 processor's totals must equal the applyInPandasWithState
-    path's."""
-    from gcp_food_delivery_data_pipeline_spark.streaming.events import (
-        run_user_totals_stream_v2,
-    )
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-
-    if not has_protobuf:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            run_user_totals_stream_v2(
-                spark, events_dir, str(tmp_path / "ckpt_v2")
-            )
-        return
-
-    q2 = run_user_totals_stream_v2(
-        spark, events_dir, str(tmp_path / "ckpt_v2"), query_name="tv2"
-    )
-    assert q2.awaitTermination(180)
-    q1 = run_user_totals_stream(
-        spark, events_dir, str(tmp_path / "ckpt_v1"), query_name="tv1"
-    )
-    assert q1.awaitTermination(180)
-    v2 = {
-        r.user_id: (r.n_events, r.sum_value)
-        for r in spark.sql("SELECT * FROM tv2").collect()
-    }
-    v1 = {
-        r.user_id: (r.n_events, r.sum_value)
-        for r in spark.sql("SELECT * FROM tv1").collect()
-    }
-    assert v2 == v1
-
-
 def test_stream_quality_monitor_per_batch(spark, events_dir, tmp_path):
     """Every micro-batch gets its own constraint evaluation row set;
     the summed per-batch violation counts reconcile with a batch run

@@ -112,7 +112,7 @@ def test_filter_by_meta(multimodal):
 
 
 def test_extract_features_fake(multimodal):
-    feats = extract_features(multimodal, dim=8, decode_mode="fake")
+    feats = extract_features(multimodal, dim=8)
     rows = {r.doc_id: r for r in feats.collect()}
     text = "the cat is on the mat and it is warm"
     r1 = rows[1]
@@ -124,17 +124,6 @@ def test_extract_features_fake(multimodal):
         expected[i % 8] += b / 255.0
     for got, want in zip(r1.features, expected):
         assert abs(got - want) < 1e-5   # float32 storage
-
-
-def test_extract_features_real_raises(multimodal):
-    feats = extract_features(multimodal, decode_mode="real")
-    with pytest.raises(Exception, match="NotImplementedError|codec"):
-        feats.collect()
-
-
-def test_extract_features_bad_mode(multimodal):
-    with pytest.raises(ValueError):
-        extract_features(multimodal, decode_mode="nope")
 
 
 def test_bpe_token_count_golden(spark):
@@ -186,18 +175,6 @@ def test_resize_payload_cycles_bytes(multimodal):
     assert out[1].meta.n_bytes == 8
     # format/media_type carried through from the input meta
     assert out[1].meta.media_type == "image"
-
-
-def test_resize_payload_real_raises(multimodal):
-    import pytest as _pytest
-
-    from gcp_food_delivery_data_pipeline_spark.operators.multimodal import (
-        resize_payload,
-    )
-
-    rs = resize_payload(multimodal, 4, 2, decode_mode="real")
-    with _pytest.raises(Exception, match="NotImplementedError|codec"):
-        rs.collect()
 
 
 def test_sample_frames_even_split(multimodal):
