@@ -245,6 +245,13 @@ def _nearest_cells(vec: str, cents: list[list[float]], n: int) -> Column:
     centroid table, shared by candidate assignment (n=1) and query
     probing (n=n_probe).
 
+    Both sides of the (cell) probe join explode this list: the n=1
+    list holds one element, so that explode is a 1:1 map. A ``[0]``
+    alias on the candidate side instead lets the optimizer's
+    constraint inference carry a filter over the candidate's vector
+    column onto the probe side, which has no such column, and the plan
+    fails at runtime (SCALE.md).
+
     The centroid table rides the plan as ONE folded literal
     (``dense_lit`` — a ``from_json`` of a single string literal that
     ConstantFolding collapses to one array Literal at optimization, so
@@ -308,9 +315,7 @@ def ivf_topk(
     )
     indexed = candidates.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec")
-    ).withColumn(
-        "_cell", _nearest_cells("_cvec", cents, 1)[0]
-    )
+    ).withColumn("_cell", F.explode(_nearest_cells("_cvec", cents, 1)))
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
     ).withColumn("_cells", _nearest_cells("_qvec", cents, n_probe))
@@ -1101,7 +1106,7 @@ def ivf_pq_topk(
         candidates.select(
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).alias("_cvec"),
-        ).withColumn("_cell", _nearest_cells("_cvec", cents, 1)[0]),
+        ).withColumn("_cell", F.explode(_nearest_cells("_cvec", cents, 1))),
         books,
         "_cvec",
     )

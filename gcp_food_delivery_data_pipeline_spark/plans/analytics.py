@@ -78,19 +78,9 @@ def q3_top_revenue_orders(
     ord_seg = orders.join(
         F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey")
     ).select("o_orderkey", "o_orderdate")
-    # Explicit null-key drop on both sides of the wide exchange
-    # (VERDICT r15 #7): with InferFiltersFromConstraints excluded
-    # session-wide (see sources/readers.py) the optimizer no longer
-    # derives IsNotNull from the join condition, so on data with
-    # genuinely nullable keys the never-matching null rows would ride
-    # the shuffle. Written at the scan so it lands in PushedFilters
-    # (pinned in tests/test_plans.py); result-identical for an inner
-    # join at any null rate.
     return (
         lineitem.select("l_orderkey", "l_extendedprice", "l_discount")
-        .filter(F.col("l_orderkey").isNotNull())
-        .join(ord_seg.filter(F.col("o_orderkey").isNotNull()),
-              F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(ord_seg, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("o_orderkey", "o_orderdate")
         .agg(
             F.round(
@@ -131,12 +121,9 @@ def q5_nation_revenue(
     ord_region = orders.join(
         F.broadcast(dims), F.col("o_custkey") == F.col("c_custkey")
     ).select("o_orderkey", "n_name")
-    # explicit null-key drop on both shuffle sides — see q3 note
     return (
         lineitem.select("l_orderkey", "l_extendedprice", "l_discount")
-        .filter(F.col("l_orderkey").isNotNull())
-        .join(ord_region.filter(F.col("o_orderkey").isNotNull()),
-              F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(ord_region, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("n_name")
         .agg(
             F.round(
@@ -213,14 +200,12 @@ def q10_returned_items(
     shuffle moves only the surviving slice; customer and nation ride in
     as broadcasts. Deterministic top-k via (revenue DESC, c_custkey).
     """
-    # explicit null-key drop on both shuffle sides — see q3 note
-    ret = lineitem.filter(
-        (F.col("l_returnflag") == "R") & F.col("l_orderkey").isNotNull()
-    ).select("l_orderkey", "l_extendedprice", "l_discount")
+    ret = lineitem.filter(F.col("l_returnflag") == "R").select(
+        "l_orderkey", "l_extendedprice", "l_discount"
+    )
     ord_q = orders.filter(
         (F.col("o_orderdate") >= F.lit(date_from).cast("timestamp"))
         & (F.col("o_orderdate") < F.lit(date_to).cast("timestamp"))
-        & F.col("o_orderkey").isNotNull()
     ).select("o_orderkey", "o_custkey")
     cust = customer.join(
         F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey")
@@ -821,14 +806,11 @@ def q7_nation_trade(
     ord_cust = orders.join(
         F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey")
     ).select("o_orderkey", "cust_nation")
-    # explicit null-key drop on both shuffle sides — see q3 note
     return (
-        lineitem.filter(F.col("l_orderkey").isNotNull())
-        .join(
+        lineitem.join(
             F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey")
         )
-        .join(ord_cust.filter(F.col("o_orderkey").isNotNull()),
-              F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(ord_cust, F.col("l_orderkey") == F.col("o_orderkey"))
         .filter(F.col("supp_nation") != F.col("cust_nation"))
         .groupBy(
             "supp_nation",
@@ -2190,12 +2172,7 @@ def q2_min_cost_supplier(
     ).select("p_partkey", "p_type", "p_size")
     # Broadcast semi-joins BEFORE the aggregation: its exchange (and
     # the window's) then carry only groups that can reach the output.
-    # Null aggregation keys can never survive the semi joins; drop
-    # them at the scan explicitly (see q3 note — the inference rule
-    # that used to derive this is excluded session-wide).
-    lines = lineitem.filter(
-        F.col("l_partkey").isNotNull() & F.col("l_suppkey").isNotNull()
-    ).join(
+    lines = lineitem.join(
         F.broadcast(wanted_parts.select("p_partkey")),
         F.col("l_partkey") == F.col("p_partkey"),
         "semi",

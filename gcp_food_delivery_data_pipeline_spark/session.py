@@ -133,25 +133,6 @@ def get_spark(
         .config("spark.cleaner.periodicGC.interval", "5min")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        # InferFiltersFromConstraints mis-binds attributes when BOTH
-        # sides of an equi-join derive the key from large deterministic
-        # expressions over the same source table (the ANN cell-probe
-        # join): the inferred cross-side filter lands above a projection
-        # that pruned the referenced column and the plan dies at runtime
-        # with INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND — nondeterministically
-        # (rule-set iteration order shifts with session history; repro:
-        # r15, an Arrow-warmup then v_ivfpq_topk as the first query).
-        # Every predicate in this engine's plans is written explicitly
-        # (isnotnull reaches the scans via pushdown — pinned by
-        # tests/test_plans.py), so excluding the rule costs nothing
-        # measurable here and removes the whole failure class. Also set
-        # at runtime by load_table for sessions built without these
-        # defaults (the driver's own session).
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer."
-            "InferFiltersFromConstraints",
-        )
     )
     if extra_conf:
         for k, v in extra_conf.items():

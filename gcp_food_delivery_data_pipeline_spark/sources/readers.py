@@ -112,29 +112,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Constraint inference can mis-bind attributes across equi-joins
-    # whose keys are large derived expressions (the ANN cell-probe
-    # join) and kill the plan at runtime — see session.py for the full
-    # story. Merged (not overwritten) so a caller's own exclusions
-    # survive; runtime-settable, so it also protects sessions built
-    # without the engine defaults.
-    _rule = (
-        "org.apache.spark.sql.catalyst.optimizer."
-        "InferFiltersFromConstraints"
-    )
-    try:
-        cur = spark.conf.get("spark.sql.optimizer.excludedRules")
-    except Exception:  # noqa: BLE001 — unset ⇒ no current exclusions
-        cur = None
-    if not cur:
-        spark.conf.set("spark.sql.optimizer.excludedRules", _rule)
-    elif _rule not in [r.strip() for r in cur.split(",")]:
-        # exact rule-name comparison (ADVICE r15): a substring test
-        # would false-positive on any rule whose FQN merely contains
-        # this one as a prefix
-        spark.conf.set(
-            "spark.sql.optimizer.excludedRules", f"{cur},{_rule}"
-        )
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     ts_nanos = {"events": ["ts"]}.get(name, [])
     for c in ts_nanos:

@@ -72,9 +72,5 @@ def test_filter_pushdown_survives_normalization(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "PushedFilters: [" in plan
-    # The explicit range predicate must reach the scan; the companion
-    # IsNotNull(ts) the old pin looked for came from
-    # InferFiltersFromConstraints, excluded since r15 (see session.py —
-    # its cross-join constraint propagation could kill plans at
-    # runtime), so the range pushdown is the signal now.
+    assert "IsNotNull(ts)" in plan, plan
     assert "GreaterThanOrEqual(ts," in plan, plan

@@ -76,35 +76,20 @@ def test_non_finite_falls_back_to_classic_lit(spark):
     assert math.isinf(got[2])
 
 
-def test_load_table_merges_excluded_rules(spark, tmp_path):
-    """load_table must ADD InferFiltersFromConstraints to the exclusion
-    list without clobbering a caller's own exclusions (the runtime arm
-    of the constraint-propagation workaround — session.py has the
-    builder arm)."""
+def test_load_table_leaves_excluded_rules_untouched(spark, tmp_path):
+    """load_table sets only its reader confs: a caller's own
+    optimizer exclusions come back byte-identical."""
     from gcp_food_delivery_data_pipeline_spark.sources.readers import (
         load_table,
     )
 
-    rule = (
-        "org.apache.spark.sql.catalyst.optimizer."
-        "InferFiltersFromConstraints"
-    )
-    other = "org.apache.spark.sql.catalyst.optimizer.CombineFilters"
-    prev = spark.conf.get("spark.sql.optimizer.excludedRules", None)
+    key = "spark.sql.optimizer.excludedRules"
+    mine = "org.apache.spark.sql.catalyst.optimizer.CombineFilters"
     try:
-        spark.conf.set("spark.sql.optimizer.excludedRules", other)
+        spark.conf.set(key, mine)
         p = tmp_path / "t.parquet"
         spark.range(3).write.mode("overwrite").parquet(str(p))
         load_table(spark, str(tmp_path), "t")
-        cur = spark.conf.get("spark.sql.optimizer.excludedRules")
-        assert other in cur and rule in cur
-        # idempotent: a second load does not duplicate the rule
-        load_table(spark, str(tmp_path), "t")
-        assert spark.conf.get(
-            "spark.sql.optimizer.excludedRules"
-        ).count(rule) == 1
+        assert spark.conf.get(key) == mine
     finally:
-        if prev is None:
-            spark.conf.set("spark.sql.optimizer.excludedRules", rule)
-        else:
-            spark.conf.set("spark.sql.optimizer.excludedRules", prev)
+        spark.conf.unset(key)

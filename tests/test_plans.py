@@ -551,12 +551,13 @@ def test_topk_windows_map_side_limited(plans):
 
 
 def test_q3_explicit_isnotnull_reaches_scan(plans):
-    """r16 (VERDICT r15 #7): with InferFiltersFromConstraints excluded
-    session-wide, the null-key drop on the wide lineitem⋈orders
-    exchange is written explicitly and must land in the parquet scan's
+    """The null-key drop on both sides of the wide lineitem⋈orders
+    exchange is inferred by the optimizer from the join condition (no
+    hand-written filter) and must land in both parquet scans'
     PushedFilters."""
     p = plans("q3_top_revenue")
     assert "IsNotNull(l_orderkey)" in p, p
+    assert "IsNotNull(o_orderkey)" in p, p
 
 
 def test_bfs_round_is_semi_plus_anti_join(spark):

@@ -588,6 +588,51 @@ def test_ivf_pq_full_probe_full_rerank_is_exact(embeddings):
     assert a == e
 
 
+_WARM_SESSION_IVFPQ = """
+import sys
+sys.path.insert(0, sys.argv[1])
+import __spark_entry__ as entry
+from gcp_food_delivery_data_pipeline_spark.session import get_spark
+
+spark = get_spark()
+excluded = spark.conf.get("spark.sql.optimizer.excludedRules", None) or ""
+assert "InferFiltersFromConstraints" not in excluded, excluded
+# bench.py's two warm-ups, in order
+spark.range(1_000_000).selectExpr("sum(id)").collect()
+n_cpus = spark.sparkContext.defaultParallelism
+spark.range(n_cpus * 10).repartition(n_cpus).mapInPandas(
+    lambda it: it, "id long"
+).write.format("noop").mode("overwrite").save()
+rows = entry.queries()["v_ivfpq_topk"](spark, sys.argv[2]).collect()
+print("RESULT", sorted(tuple(r) for r in rows))
+spark.stop()
+"""
+
+
+def test_ivf_pq_cell_join_in_warm_session_with_constraint_inference():
+    """Regression: with InferFiltersFromConstraints on, a session that
+    ran bench.py's two warm-ups used to fail ``v_ivfpq_topk`` every
+    time with INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND (an inferred filter
+    over the candidate's ``embedding`` planted on the probe side). The
+    trigger is the session's expression-id history, so the check needs
+    its own fresh JVM; a 1g heap keeps it beside the suite's."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _WARM_SESSION_IVFPQ, root, SF_DIR],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "RESULT [(5, True)]" in proc.stdout, proc.stdout[-2000:]
+
+
 def test_with_lsh_bucket_packs_sign_bits(spark):
     """Single-table bucketizer: bit i of the LONG bucket is
     sign(v · h_i) — verified against a hand computation, including a

@@ -6,9 +6,10 @@ Usage: python tools/gen_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from gcp_food_delivery_data_pipeline_spark.session import get_spark  # noqa: E402
