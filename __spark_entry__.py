@@ -1297,12 +1297,16 @@ def _lpa_oracle_sql(iterations: int = 5, stability_probe: bool = False) -> str:
     """Unrolled-recursion DuckDB twin of _q_label_propagation.
 
     ASSUMES SYMMETRIC EDGES: the node CTE derives from edge SOURCES
-    only and each round's winner CTE drops in-degree-0 nodes — both
-    equal the operator's src-union-dst universe and carry-over rule
-    only because _part_edges(symmetric=True) emits every edge in both
-    directions (see _part_edges). Re-pointing this key at a
-    directed/asymmetric edge definition requires widening the node CTE and left-joining the
-    winners (as the operator does)."""
+    only and each round's labels are its winners alone, i.e. the
+    nodes with an in-edge. The operator's labels are those winners
+    unioned with the source-only nodes, which keep their own label;
+    because _part_edges(symmetric=True) emits every edge in both
+    directions (see _part_edges), no node is source-only and the two
+    agree. Re-pointing this key at a directed/asymmetric edge
+    definition requires unioning each round's winners with the
+    sources that are never a destination, labelled by themselves
+    (as the operator does); tests/test_graph.py grades that directed
+    case against a pure-Python model."""
     ctes = [
         "WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)",
         "e AS (SELECT a.l_partkey AS s, b.l_partkey AS d "

@@ -3,8 +3,8 @@
 The engine's second iterative operator family (the first is
 ``dedup.py``'s min-label connected components): driver-coordinated
 fixed-point loops where each round is one co-partitioned join + one
-keyed aggregation, and ``localCheckpoint`` truncates the lineage so
-round t+1's plan does not replay rounds 1..t.
+keyed aggregation, and ``localCheckpoint`` truncates the lineage so a
+late round's plan does not replay the whole loop.
 
 Scale notes (100 TB / 1000 executors):
 
@@ -16,8 +16,19 @@ Scale notes (100 TB / 1000 executors):
   map-side combinable. Rank state is one row per node. Measured at
   sf0.1: 10 PageRank rounds 10.8 s → 5.2 s from this plus the
   skip-redundant-copy rule below, identical ranks.
-* ``localCheckpoint(eager=True)`` per round bounds plan depth and
-  memory. Every cut goes through ``checkpointing.materialize``, so a
+* Lineage cuts (``localCheckpoint(eager=True)``) bound plan depth and
+  memory, and each costs at least one Spark job, so their cadence
+  follows how often a round reads the loop state. State read ONCE
+  per round (``pagerank`` / ``personalized_pagerank`` ranks,
+  ``label_propagation`` labels) is cut every 3rd round and the last
+  (``hits_bipartite``, two join+agg layers per round: every 2nd);
+  state read more than once per round (``kcore`` edges, the
+  ``bfs_distances`` settled set) is cut every round, because the cut
+  also saves re-evaluating it per reader. Measured on
+  ``label_propagation`` at sf0.01: going from a cut every round to
+  every 3rd round, with one aggregate per round, took a 5-round call
+  from 40 Spark jobs to 19. Every cut goes through
+  ``checkpointing.materialize``, so a
   cluster that must survive executor loss across a long loop sets the
   session conf ``spark.foodPipeline.checkpointMode=reliable`` once and
   every loop here writes its cuts to the checkpoint dir
@@ -246,66 +257,64 @@ def label_propagation(
     ``(node, label)`` after a fixed number of rounds.
 
     Edges are treated as directed as given — pass both directions for
-    an undirected graph (isolated-in-degree nodes keep their label via
-    the left join). Integer labels end to end: unlike PageRank there
-    is NO floating-point state, so the fixed point is bit-trivially
+    an undirected graph. Each edge counts once per occurrence
+    (duplicates weigh more; a self-loop votes for the node's own
+    label); an edge with a NULL endpoint is dropped. A node with no
+    in-edge has no neighbor to adopt from and keeps its own label.
+    Integer labels end to end: unlike PageRank there is NO
+    floating-point state, so the fixed point is bit-trivially
     reproducible.
 
-    Scale shape per round: one join (edges x labels, keyed on src),
-    one (node, label) count aggregation, one row_number window
-    partitioned by node — all map-side-combinable or hash-partitioned;
-    ``localCheckpoint`` truncates lineage as in ``pagerank``.
+    Scale shape per round: one join (edges x labels, keyed on src)
+    and one ``groupBy(dst).agg(mode(label, deterministic=True))`` —
+    Spark's built-in is exactly the most-frequent-smallest rule, and
+    its partial aggregate combines map-side. Round 1 needs no join
+    (every label is its node, so the neighbor labels are the sources
+    themselves). The source-only nodes are computed once; each
+    round's labels are its winners unioned with them. Lineage is cut
+    on ``pagerank``'s cadence — every 3rd round and the last — plus
+    round N-1 under ``keep_prev``, whose ``prev_label`` then reads
+    blocks instead of replaying the round.
     """
     if iterations < 1:
         raise ValueError("label_propagation: need at least one iteration")
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).dropna()
     # checkpointed pre-partitioned on the per-round join key: the
-    # neighbor-count join never exchanges the edge side again
+    # neighbor-label join never exchanges the edge side again
     e = _ckpt(e.repartition("_s"))
-    nodes = _ckpt(
+    # nodes with no in-edge: their label is their id in every round
+    fixed = _ckpt(
         e.select(F.col("_s").alias("node"))
-        .unionByName(e.select(F.col("_d").alias("node")))
         .distinct()
+        .join(e, F.col("node") == F.col("_d"), "left_anti")
+        .select("node", F.col("node").alias("label"))
     )
-    labels = nodes.select("node", F.col("node").alias("label"))
-    from pyspark.sql import Window
-
-    prev = labels
-    for _ in range(iterations):
-        counts = (
-            e.join(labels, e["_s"] == labels["node"])
-            .select(F.col("_d").alias("node"), "label")
-            .groupBy("node", "label")
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-        )
-        w = Window.partitionBy("node").orderBy(
-            F.col("_cnt").desc(), F.col("label")
-        )
-        best = (
-            counts.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("node", F.col("label").alias("_new"))
-        )
-        # labels always covers every node (invariant from init), so
-        # the carry-over is a single left join against the round's
-        # winners
+    labels = prev = None
+    last = iterations - 1
+    for it in range(iterations):
+        if it == 0:
+            votes = e.select("_d", F.col("_s").alias("label"))
+        else:
+            votes = e.join(labels, e["_s"] == labels["node"]).select(
+                "_d", "label"
+            )
         prev = labels
-        labels = _ckpt(
-            labels.join(best, "node", "left")
-            .select(
-                "node", F.coalesce("_new", "label").alias("label")
-            ),
-            # Unlike ``pagerank`` (whose rank state is read ONCE per
-            # round), labels is read twice per round — by the
-            # neighbor-count join AND the carry-over join — so the
-            # per-round checkpoint also deduplicates that double
-            # evaluation, not just trims lineage. An A/B cadence
-            # sweep measured every-3rd-round strictly slower here.
+        labels = (
+            votes.groupBy(F.col("_d").alias("node"))
+            .agg(F.mode("label", True).alias("label"))
+            .unionByName(fixed)
         )
+        # Each round reads its labels once, so (as in ``pagerank``)
+        # the cut only bounds lineage; the cadence never changes the
+        # arithmetic.
+        if it % 3 == 2 or it == last or (keep_prev and it == last - 1):
+            labels = _ckpt(labels)
     if keep_prev:
         # Stability-probe shape: expose round N-1's label next to
         # round N's so `label <> prev_label` counts the nodes still
         # moving — the fixed-point evidence for the fixed round count.
+        if prev is None:
+            return labels.withColumn("prev_label", F.col("node"))
         return labels.join(
             prev.select("node", F.col("label").alias("prev_label")),
             "node",
@@ -418,7 +427,7 @@ def bfs_distances(
         # settled is read three times per hop (anti-join, union,
         # frontier filter), so the per-hop checkpoint deduplicates
         # that triple evaluation as well as trimming lineage — see
-        # the cadence note in ``pagerank``/``label_propagation``.
+        # the cadence note in the module docstring.
         settled = _ckpt(settled.unionByName(new_nodes))
         frontier = settled.filter(F.col("dist") == hop).select("node")
     return settled

@@ -548,11 +548,14 @@ def q_session_window(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
 
     Session semantics: an event extends the current session when it
     arrives strictly within ``gap`` of the previous event; the emitted
-    window is [first_ts, last_ts + gap).
+    window is [first_ts, last_ts + gap). Spark's ``session_window``
+    also merges an event landing exactly ``gap`` after the previous
+    one, so the sessions are built with a gap one microsecond (the
+    timestamp resolution) shorter and the end is moved back out by it.
     """
     return (
         events.groupBy(
-            F.session_window(F.col("ts"), gap).alias("sw"),
+            F.session_window(F.col("ts"), f"{gap} -1 microseconds").alias("sw"),
             F.col("user_id"),
         )
         .agg(
@@ -562,7 +565,9 @@ def q_session_window(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
         .select(
             "user_id",
             F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
+            (F.col("sw.end") + F.expr("INTERVAL 1 MICROSECOND")).alias(
+                "session_end"
+            ),
             "n_events",
             "sum_value",
         )

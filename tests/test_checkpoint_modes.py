@@ -7,8 +7,9 @@ results).
 
 The conf flips every lineage cut in the package without touching call
 sites. It is exercised through graded ``queries()`` keys whose
-implementations checkpoint — g_pagerank_parts and g_label_propagation
-(graph loops), d_containment (shingle-table pin), q_ntile_buckets
+implementations checkpoint — g_pagerank_parts, g_label_propagation and
+g_lpa_stable (graph loops; the last on the ``keep_prev`` path),
+d_containment (shingle-table pin), q_ntile_buckets
 (two-phase rank pin) — and through direct calls of the iterative
 operators.
 """
@@ -35,6 +36,7 @@ SF_DIR = "/root/testdata/sf0.001"
 PARITY_KEYS = [
     "g_pagerank_parts",
     "g_label_propagation",
+    "g_lpa_stable",
     "d_containment",
     "q_ntile_buckets",
 ]

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import re
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from gcp_food_delivery_data_pipeline_spark.operators.clean import clean_order_lines
@@ -290,6 +290,7 @@ def test_prefix_similarity_join_matches_model(spark_global, docs, threshold):
         max_size=40,
     )
 )
+@example(events=[(0, 0), (0, 1800)])  # a gap of exactly 30 min splits
 def test_session_window_matches_gaps_model(spark_global, events):
     """session_window must equal the gaps-and-islands model: a new
     session when the gap since the user's previous event >= 30 min;
