@@ -23,7 +23,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gcp_food_delivery_data_pipeline_spark.checkpointing import CONF_KEY, materialize
 from gcp_food_delivery_data_pipeline_spark.config import load_conf
+from gcp_food_delivery_data_pipeline_spark.functions.cleaning import (
+    strip_one_trailing_colon,
+    strip_special_chars,
+)
 from gcp_food_delivery_data_pipeline_spark.operators.corpus import (
     EMAIL_RE as _EMAIL_RE,
     IPV4_RE as _IPV4_RE,
@@ -51,7 +56,10 @@ from gcp_food_delivery_data_pipeline_spark.operators.similarity import (
     ivf_topk,
     lsh_bucketed_topk,
     topk_exact,
-    topk_exact_scalable,
+)
+from gcp_food_delivery_data_pipeline_spark.operators.split import (
+    split_by_status,
+    status_counts,
 )
 from gcp_food_delivery_data_pipeline_spark.operators.text import (
     bpe_token_count,
@@ -117,20 +125,19 @@ def _q_p1_strip_colon(spark: SparkSession, sf: str) -> DataFrame:
     two = F.concat(F.col("source"), F.lit("::"))
     return d.select(
         "doc_id",
-        F.regexp_replace(one, ":$", "").alias("items_one"),
-        F.regexp_replace(two, ":$", "").alias("items_two"),
+        strip_one_trailing_colon(one).alias("items_one"),
+        strip_one_trailing_colon(two).alias("items_two"),
     )
 
 
 def _q_p2_p3_clean(spark: SparkSession, sf: str) -> DataFrame:
-    """P2+P3: lowercase + strip [?%&] on every projected column."""
+    """P2+P3: lowercase + strip the special chars on every projected
+    column."""
     c = load_table(spark, sf, "customer")
     return c.select(
         "c_custkey",
-        F.regexp_replace(F.lower("c_name"), "[?%&]", "").alias("name_clean"),
-        F.regexp_replace(F.lower("c_mktsegment"), "[?%&]", "").alias(
-            "segment_clean"
-        ),
+        strip_special_chars(F.lower("c_name")).alias("name_clean"),
+        strip_special_chars(F.lower("c_mktsegment")).alias("segment_clean"),
     )
 
 
@@ -157,42 +164,30 @@ def _q_p5_projection(spark: SparkSession, sf: str) -> DataFrame:
 def _q_clean_chain(spark: SparkSession, sf: str) -> DataFrame:
     """P1→P2→P3→P4 composed in reference operator order."""
     d = load_table(spark, sf, "documents")
-    s = F.concat(F.col("text"), F.lit(":"))
-    s = F.regexp_replace(s, ":$", "")       # P1
-    s = F.lower(s)                           # P2
-    s = F.regexp_replace(s, "[?%&]", "")   # P3
+    s = strip_one_trailing_colon(F.concat(F.col("text"), F.lit(":")))  # P1
+    s = strip_special_chars(F.lower(s))  # P2, P3
     return d.select(
         "doc_id", s.alias("cleaned"), F.lit("1").alias("new_col")  # P4
     )
 
 
 def _q_f1_delivered(spark: SparkSession, sf: str) -> DataFrame:
-    """F1: equality filter (status == sentinel)."""
-    return load_table(spark, sf, "orders").filter(
-        F.col("o_orderstatus") == "F"
-    ).select("o_orderkey", "o_orderstatus", "o_totalprice")
+    """F1: the delivered side of ``split_by_status`` (status == sentinel)."""
+    orders = load_table(spark, sf, "orders")
+    delivered, _ = split_by_status(orders, "o_orderstatus", "F")
+    return delivered.select("o_orderkey", "o_orderstatus", "o_totalprice")
 
 
 def _q_f2_other(spark: SparkSession, sf: str) -> DataFrame:
-    """F2: complement filter, NULL-inclusive (split.py semantics)."""
-    return load_table(spark, sf, "orders").filter(
-        (F.col("o_orderstatus") != "F") | F.col("o_orderstatus").isNull()
-    ).select("o_orderkey", "o_orderstatus", "o_totalprice")
+    """F2: the other side of ``split_by_status`` (NULL-inclusive complement)."""
+    orders = load_table(spark, sf, "orders")
+    _, other = split_by_status(orders, "o_orderstatus", "F")
+    return other.select("o_orderkey", "o_orderstatus", "o_totalprice")
 
 
 def _q_c1_c3_counts(spark: SparkSession, sf: str) -> DataFrame:
-    """C1-C3: the single-pass 3-way conditional count (metrics.py)."""
-    return load_table(spark, sf, "orders").agg(
-        F.count(F.lit(1)).alias("total"),
-        F.count(F.when(F.col("o_orderstatus") == "F", 1)).alias("delivered"),
-        F.count(
-            F.when(
-                (F.col("o_orderstatus") != "F")
-                | F.col("o_orderstatus").isNull(),
-                1,
-            )
-        ).alias("other"),
-    )
+    """C1-C3: the single-pass 3-way conditional count (``status_counts``)."""
+    return load_table(spark, sf, "orders").agg(*status_counts("o_orderstatus", "F"))
 
 
 def _q_s3_write_readback(spark: SparkSession, sf: str) -> DataFrame:
@@ -1171,16 +1166,20 @@ def _part_edges(
     direction (a < b); ``min_n`` keeps only pairs co-ordered at least
     that often; ``keep_weight`` retains the co-order count as ``w``.
 
-    MEMOIZED per (session, sf, params) as an eager localCheckpoint:
-    eight graph keys derive from this same co-occurrence self-join —
-    the first caller in a process pays the build, every later one
-    reads the materialized edge table (the cluster equivalent is a
-    shared bucketed edge table all graph jobs scan). The testdata is
-    immutable, so the memo can never serve stale edges; entries of
-    OTHER app ids are evicted only once their owning session has
-    actually stopped (concurrently-live sessions keep theirs)."""
+    MEMOIZED per (session, checkpoint mode, sf, params) as an eager
+    ``materialize`` cut: eight graph keys derive from this same
+    co-occurrence self-join — the first caller in a process pays the
+    build, every later one reads the materialized edge table (the
+    cluster equivalent is a shared bucketed edge table all graph jobs
+    scan). The testdata is
+    immutable, so the memo can never serve stale edges; the mode is
+    part of the key, so a ``reliable`` session never reuses a local
+    cut; entries of OTHER app ids are evicted only once their owning
+    session has actually stopped (concurrently-live sessions keep
+    theirs)."""
     key = (
         spark.sparkContext.applicationId,
+        spark.conf.get(CONF_KEY, "local"),
         sf,
         symmetric,
         min_n,
@@ -1192,7 +1191,7 @@ def _part_edges(
     # Evict entries whose owning session has actually STOPPED before
     # inserting: a long-lived process cycling Spark sessions would
     # otherwise accumulate dead DataFrame references (and their
-    # localCheckpoint block pins) forever. Liveness is checked on the
+    # checkpoint block pins) forever. Liveness is checked on the
     # memoized frame's own context — two concurrently-live sessions
     # (distinct app ids) alternating calls must NOT evict each
     # other's entries, or the memo thrashes and both sessions
@@ -1242,9 +1241,7 @@ def _part_edges(
     )
     if min_n > 1:
         g = g.filter(F.col("w") >= min_n)
-    out = (
-        g if keep_weight else g.select("src", "dst")
-    ).localCheckpoint(eager=True)
+    out = materialize(g if keep_weight else g.select("src", "dst"))
     _PART_EDGES_MEMO[key] = out
     return out
 
@@ -1550,9 +1547,9 @@ def _q_temporal_split(spark: SparkSession, sf: str) -> DataFrame:
 def _q_pagerank_parts(spark: SparkSession, sf: str) -> DataFrame:
     """Weighted PageRank over the part co-occurrence graph (edges =
     parts ordered together, weight = co-order count, symmetric): a
-    driver-coordinated iterative fixed point with localCheckpoint per
-    round. Fixed 10 iterations make the result a pure function of the
-    input, so the oracle is the SAME recursion UNROLLED into 10 SQL
+    Python-loop iterative fixed point with a lineage cut per round.
+    Fixed 10 iterations make the result a pure function of the input,
+    so the oracle is the SAME recursion UNROLLED into 10 SQL
     stages — iterative != unverifiable."""
     from gcp_food_delivery_data_pipeline_spark.operators.graph import (
         pagerank,
@@ -1819,11 +1816,6 @@ def _q_topk_exact(spark: SparkSession, sf: str) -> DataFrame:
     return topk_exact(e, e.filter(F.col("vec_id") < 5), k=10)
 
 
-def _q_topk_scalable(spark: SparkSession, sf: str) -> DataFrame:
-    e = load_table(spark, sf, "embeddings")
-    return topk_exact_scalable(e, e.filter(F.col("vec_id") < 5), k=10)
-
-
 def _q_topk_ann(spark: SparkSession, sf: str) -> DataFrame:
     """LSH ANN graded by RECALL, not by its (approximate) neighbor
     list: the query computes LSH top-k AND exact top-k in the same
@@ -1833,18 +1825,25 @@ def _q_topk_ann(spark: SparkSession, sf: str) -> DataFrame:
     driver-graded row (pytest pins the same bound per run)."""
     e = load_table(spark, sf, "embeddings")
     queries_df = e.filter(F.col("vec_id") < 5)
-    # localCheckpoint only the REUSED list (exact feeds both the hits
-    # join and per-query totals); ann is consumed once, so its r8-era
-    # checkpoint bought nothing but an extra serialized job — and the
-    # wide-literal compile cost that once justified cutting plans
-    # early is gone since dense_lit (OPTIMIZATION_r15.md #1/#3).
-    ann = lsh_bucketed_topk(e, queries_df, _lsh_tables(), k=10).select(
-        "query_id", "neighbor_id"
-    )
-    exact = (
-        topk_exact(e, queries_df, k=10)
-        .select("query_id", F.col("neighbor_id").alias("_exact_nb"))
-        .localCheckpoint()
+    ann = lsh_bucketed_topk(e, queries_df, _lsh_tables(), k=10)
+    return _recall_vs_exact(e, queries_df, ann, 0.5)
+
+
+def _recall_vs_exact(
+    e: DataFrame, queries_df: DataFrame, ann: DataFrame, floor: float
+) -> DataFrame:
+    """``(n_queries, recall_ok)``: ``recall_ok`` is mean recall@10 of the
+    ANN top-10 ``ann`` (its query_id, neighbor_id) against the exact
+    top-10 >= ``floor``. The exact list feeds both the hits join and the
+    per-query totals, so it is the one lineage cut; ``ann`` is consumed
+    once and is not cut (the wide-literal compile cost that once
+    justified cutting plans early is gone since dense_lit,
+    OPTIMIZATION_r15.md #1/#3)."""
+    ann = ann.select("query_id", "neighbor_id")
+    exact = materialize(
+        topk_exact(e, queries_df, k=10).select(
+            "query_id", F.col("neighbor_id").alias("_exact_nb")
+        )
     )
     hits = ann.join(
         exact,
@@ -1858,7 +1857,7 @@ def _q_topk_ann(spark: SparkSession, sf: str) -> DataFrame:
     n_hits = hits.agg(F.count(F.lit(1)).alias("_n_hits"))
     return per_q.crossJoin(n_hits).select(
         "n_queries",
-        (F.col("_n_hits") / F.col("_n_exact") >= 0.5).alias("recall_ok"),
+        (F.col("_n_hits") / F.col("_n_exact") >= floor).alias("recall_ok"),
     )
 
 
@@ -1885,30 +1884,8 @@ def _q_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
 
     e = load_table(spark, sf, "embeddings")
     queries_df = e.filter(F.col("vec_id") < 5)
-    # ann is consumed once — no checkpoint (see _q_topk_ann); exact is
-    # reused twice and keeps its lineage cut.
-    ann = pq_topk(e, queries_df, k=10, rerank=250).select(
-        "query_id", "neighbor_id"
-    )
-    exact = (
-        topk_exact(e, queries_df, k=10)
-        .select("query_id", F.col("neighbor_id").alias("_exact_nb"))
-        .localCheckpoint()
-    )
-    hits = ann.join(
-        exact,
-        (ann["query_id"] == exact["query_id"])
-        & (ann["neighbor_id"] == exact["_exact_nb"]),
-    )
-    per_q = exact.groupBy(exact["query_id"]).count().agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.sum("count").alias("_n_exact"),
-    )
-    n_hits = hits.agg(F.count(F.lit(1)).alias("_n_hits"))
-    return per_q.crossJoin(n_hits).select(
-        "n_queries",
-        (F.col("_n_hits") / F.col("_n_exact") >= 0.7).alias("recall_ok"),
-    )
+    ann = pq_topk(e, queries_df, k=10, rerank=250)
+    return _recall_vs_exact(e, queries_df, ann, 0.7)
 
 
 def _q_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -1923,30 +1900,8 @@ def _q_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
 
     e = load_table(spark, sf, "embeddings")
     queries_df = e.filter(F.col("vec_id") < 5)
-    # ann is consumed once — no checkpoint (see _q_topk_ann); exact is
-    # reused twice and keeps its lineage cut.
-    ann = ivf_pq_topk(e, queries_df, n_probe=8, k=10, rerank=250).select(
-        "query_id", "neighbor_id"
-    )
-    exact = (
-        topk_exact(e, queries_df, k=10)
-        .select("query_id", F.col("neighbor_id").alias("_exact_nb"))
-        .localCheckpoint()
-    )
-    hits = ann.join(
-        exact,
-        (ann["query_id"] == exact["query_id"])
-        & (ann["neighbor_id"] == exact["_exact_nb"]),
-    )
-    per_q = exact.groupBy(exact["query_id"]).count().agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.sum("count").alias("_n_exact"),
-    )
-    n_hits = hits.agg(F.count(F.lit(1)).alias("_n_hits"))
-    return per_q.crossJoin(n_hits).select(
-        "n_queries",
-        (F.col("_n_hits") / F.col("_n_exact") >= 0.6).alias("recall_ok"),
-    )
+    ann = ivf_pq_topk(e, queries_df, n_probe=8, k=10, rerank=250)
+    return _recall_vs_exact(e, queries_df, ann, 0.6)
 
 
 def _q_topk_truncated(spark: SparkSession, sf: str) -> DataFrame:
@@ -4516,7 +4471,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "j_range_click_purchase": _q_range_join,
         # similarity (M5) — r3 green
         "v_topk_exact": _q_topk_exact,
-        "v_topk_scalable": _q_topk_scalable,
+        "v_topk_scalable": _q_topk_exact,  # the same plan since r16
         "v_topk_ann": _q_topk_ann,
         "v_topk_ivf": _q_topk_ivf,
         "v_embedding_dims": _q_embedding_dims,

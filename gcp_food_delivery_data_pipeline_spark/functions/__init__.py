@@ -3,8 +3,6 @@
 from gcp_food_delivery_data_pipeline_spark.functions.cleaning import (
     strip_one_trailing_colon,
     strip_special_chars,
-    lower_all,
-    clean_text_columns,
 )
 from gcp_food_delivery_data_pipeline_spark.functions.vectors import (
     dot_product,
@@ -15,8 +13,6 @@ from gcp_food_delivery_data_pipeline_spark.functions.vectors import (
 __all__ = [
     "strip_one_trailing_colon",
     "strip_special_chars",
-    "lower_all",
-    "clean_text_columns",
     "dot_product",
     "l2_norm",
     "cosine_similarity",

@@ -12,51 +12,29 @@ Exact-semantics notes (these matter for byte-level oracle parity):
   would over-strip; 840/891 rows of the real CSV end with exactly one).
 * ``strip_special_chars`` deletes only the three characters ``? % &``
   (reference ``remove_special_characters``, code/beam.py:42-45).
-* ``lower_all`` lowercases EVERY column, ids included (the reference
-  lowercases the whole raw line, code/beam.py:118).
+
+P2 (lowercase) is ``F.lower``; ``operators.clean`` applies it to every
+field, ids included (the reference lowercases the whole raw line,
+code/beam.py:118).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-SPECIAL_CHARS_RE = r"[?%&]"
-TRAILING_COLON_RE = r":$"
+_SPECIAL_CHARS_RE = r"[?%&]"
+_TRAILING_COLON_RE = r":$"
 
 
 def strip_one_trailing_colon(col: Column | str) -> Column:
     """Drop exactly one trailing ``:`` if present (P1)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, TRAILING_COLON_RE, "")
+    return F.regexp_replace(c, _TRAILING_COLON_RE, "")
 
 
 def strip_special_chars(col: Column | str) -> Column:
     """Delete every occurrence of ``?``, ``%``, ``&`` (P3)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, SPECIAL_CHARS_RE, "")
+    return F.regexp_replace(c, _SPECIAL_CHARS_RE, "")
 
-
-def lower_all(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """Lowercase every (or the given) string column (P2)."""
-    cols = columns if columns is not None else df.columns
-    return df.select(
-        *[F.lower(F.col(c)).alias(c) if c in cols else F.col(c) for c in df.columns]
-    )
-
-
-def clean_text_columns(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """Apply P2+P3 (lowercase then strip specials) to the given columns.
-
-    One ``select`` so Catalyst folds both regex+lower into a single
-    projection — a single codegen stage regardless of column count.
-    """
-    cols = set(columns if columns is not None else df.columns)
-    return df.select(
-        *[
-            F.regexp_replace(F.lower(F.col(c)), SPECIAL_CHARS_RE, "").alias(c)
-            if c in cols
-            else F.col(c)
-            for c in df.columns
-        ]
-    )

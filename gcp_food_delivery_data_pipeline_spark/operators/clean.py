@@ -5,7 +5,7 @@ Reference semantics (SURVEY.md §2.2, reference code/beam.py:111-120):
   P1 ``remove_last_colon``  — strip at most one trailing ``:`` from the
      ``items`` field (field index 4)            code/beam.py:35-39
   P2 lowercase the entire line (every column)   code/beam.py:118
-  P3 delete ``[?%&]`` from every field          code/beam.py:42-45
+  P3 delete ``?``, ``%``, ``&`` from every field  code/beam.py:42-45
   P4 append constant field ``new_col = "1"``    code/beam.py:120
   P5 dict projection (code/beam.py:48-66): positional naming,
      ``time``→``timestamp`` / ``restaurnt``→``restaurant`` renames, and
@@ -29,7 +29,10 @@ line / the split array.
 
 The whole chain is one ``select`` of column expressions: Catalyst folds
 lower+regexp into one generated loop and downstream status filters can
-be pushed through it (the predicate is column-local).
+be pushed through it (the predicate is column-local). Both front-ends
+(``clean_orders`` over the CSV scan, ``clean_order_lines`` over raw
+lines) feed the same body, ``_clean``; each supplies only its raw
+fields, its field count and its 12th field.
 """
 
 from __future__ import annotations
@@ -44,8 +47,8 @@ from gcp_food_delivery_data_pipeline_spark.schema import (
     RENAMES,
 )
 from gcp_food_delivery_data_pipeline_spark.functions.cleaning import (
-    SPECIAL_CHARS_RE,
-    TRAILING_COLON_RE,
+    strip_one_trailing_colon,
+    strip_special_chars,
 )
 
 N_RAW = len(RAW_COLS)  # 11 input fields; reference drops when < 12 incl. constant
@@ -55,16 +58,44 @@ def _clean_field(col: Column, is_items: bool) -> Column:
     """P1 (items only) → P2 → P3 on one field, NULL coalesced to ''."""
     col = F.coalesce(col, F.lit(""))
     if is_items:
-        col = F.regexp_replace(col, TRAILING_COLON_RE, "")
-    return F.regexp_replace(F.lower(col), SPECIAL_CHARS_RE, "")
+        col = strip_one_trailing_colon(col)
+    return strip_special_chars(F.lower(col))
+
+
+def _clean(
+    df: DataFrame,
+    fields: list[Column],
+    n_fields: Column,
+    twelfth: Column,
+    drop_malformed: bool,
+) -> DataFrame:
+    """P1-P5 over ``df``: ``fields`` are the 11 raw fields in
+    ``RAW_COLS`` order, ``n_fields`` the row's real field count,
+    ``twelfth`` its 12th field (read only when the row is long)."""
+    exprs = [
+        _clean_field(col, c == "items").alias(RENAMES.get(c, c))
+        for col, c in zip(fields, RAW_COLS)
+    ]
+    # Long row: reference to_json reads cols[11] (12th input field) as
+    # new_col — it too went through the P2/P3 line cleans.
+    new_col = F.when(n_fields > N_RAW, _clean_field(twelfth, False)).otherwise(
+        F.lit("1")
+    )
+    out = df.select(
+        *exprs, new_col.alias("new_col"), (n_fields < N_RAW).alias("is_short")
+    )
+    if drop_malformed:
+        return out.filter(~F.col("is_short")).select(*OUT_COLS)
+    return out.select(*OUT_COLS, "is_short")
 
 
 def clean_orders(df: DataFrame, drop_malformed: bool = True) -> DataFrame:
-    """Apply P1-P5 to a raw orders DataFrame (RAW_SCHEMA-shaped).
+    """Apply P1-P5 to the raw orders frame of ``read_orders_csv`` (or
+    the stream reader), which carries ``_corrupt_record``.
 
-    Returns the 12-column all-string OUT_SCHEMA shape.  When the input
-    carries ``_corrupt_record`` (see ``read_orders_csv``), short rows
-    are detected by real field count; otherwise no row is short.
+    Returns the 12-column all-string OUT_SCHEMA shape. Short rows are
+    detected by real field count: Spark fills ``_corrupt_record`` with
+    the raw line exactly when the token count differs from the schema.
 
     ``drop_malformed=True`` reproduces the deployed variant's length
     guard (code/beam.py:50-51).  With ``False`` the short rows are kept
@@ -72,33 +103,17 @@ def clean_orders(df: DataFrame, drop_malformed: bool = True) -> DataFrame:
     C1-C3 *before* the drop (the guard lives in ``to_json`` at the
     sink), so count parity needs the pre-drop frame.
     """
-    has_corrupt = CORRUPT_COL in df.columns
-    exprs = []
-    for c in RAW_COLS:
-        exprs.append(_clean_field(F.col(c), c == "items").alias(RENAMES.get(c, c)))
-
-    if has_corrupt:
-        raw_fields = F.split(F.col(CORRUPT_COL), ",", -1)
-        n_fields = F.when(
-            F.col(CORRUPT_COL).isNull(), F.lit(N_RAW)
-        ).otherwise(F.size(raw_fields))
-        # Long row: reference to_json reads cols[11] (12th input field)
-        # as new_col — it too went through the P2/P3 line cleans.
-        new_col = F.when(
-            n_fields > N_RAW,
-            _clean_field(F.element_at(raw_fields, N_RAW + 1), False),
-        ).otherwise(F.lit("1"))
-        is_short = n_fields < N_RAW
-    else:
-        new_col = F.lit("1")
-        is_short = F.lit(False)
-    exprs.append(new_col.alias("new_col"))
-    exprs.append(is_short.alias("is_short"))
-
-    out = df.select(*exprs)
-    if drop_malformed:
-        return out.filter(~F.col("is_short")).select(*OUT_COLS)
-    return out.select(*OUT_COLS, "is_short")
+    raw_fields = F.split(F.col(CORRUPT_COL), ",", -1)
+    n_fields = F.when(F.col(CORRUPT_COL).isNull(), F.lit(N_RAW)).otherwise(
+        F.size(raw_fields)
+    )
+    return _clean(
+        df,
+        [F.col(c) for c in RAW_COLS],
+        n_fields,
+        F.element_at(raw_fields, N_RAW + 1),
+        drop_malformed,
+    )
 
 
 def clean_order_lines(lines: DataFrame, drop_malformed: bool = True) -> DataFrame:
@@ -110,24 +125,13 @@ def clean_order_lines(lines: DataFrame, drop_malformed: bool = True) -> DataFram
     ``read_orders_lines``.
     """
     fields = F.split(F.col("line"), ",", -1)
-    n_fields = F.size(fields)
-    exprs = []
-    for i, c in enumerate(RAW_COLS):
-        exprs.append(
-            _clean_field(F.element_at(fields, i + 1), c == "items").alias(
-                RENAMES.get(c, c)
-            )
-        )
-    new_col = F.when(
-        n_fields > N_RAW, _clean_field(F.element_at(fields, N_RAW + 1), False)
-    ).otherwise(F.lit("1"))
-    exprs.append(new_col.alias("new_col"))
-    exprs.append((n_fields < N_RAW).alias("is_short"))
-
-    out = lines.select(*exprs)
-    if drop_malformed:
-        return out.filter(~F.col("is_short")).select(*OUT_COLS)
-    return out.select(*OUT_COLS, "is_short")
+    return _clean(
+        lines,
+        [F.element_at(fields, i + 1) for i in range(N_RAW)],
+        F.size(fields),
+        F.element_at(fields, N_RAW + 1),
+        drop_malformed,
+    )
 
 
 def typed_orders(cleaned: DataFrame) -> DataFrame:

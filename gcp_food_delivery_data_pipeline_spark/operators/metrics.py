@@ -4,9 +4,9 @@ The reference issues three separate global counts. Spark's ``count()``
 already does partial (map-side) + final combine — the direct equivalent
 of Beam's combiner lifting — but three separate actions over an
 unpersisted parent would re-scan the input three times. ``run_counts``
-therefore computes all three in ONE job over one pass: a single
-conditional aggregation that reads only the status column (Catalyst
-prunes the scan to 1 column).
+therefore computes all three in ONE job over one pass: the single
+conditional aggregation ``split.status_counts``, which reads only the
+status column (Catalyst prunes the scan to 1 column).
 """
 
 from __future__ import annotations
@@ -14,7 +14,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from gcp_food_delivery_data_pipeline_spark.operators.split import status_counts
 
 
 @dataclass(frozen=True)
@@ -24,25 +25,10 @@ class Counts:
     other: int
 
 
-def run_counts(
-    cleaned: DataFrame,
-    status_col: str = "status",
-    delivered_value: str = "delivered",
-) -> Counts:
+def run_counts(cleaned: DataFrame) -> Counts:
     """C1+C2+C3 in a single aggregation job (one scan, map-side combine).
 
     The pipeline counts C1-C3 as ``observe`` metrics on its write job
     (``pipeline.process_batch``); this is the reference implementation
     the tests check those counts against."""
-    row = cleaned.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.count(F.when(F.col(status_col) == delivered_value, 1)).alias("delivered"),
-        F.count(
-            F.when(
-                (F.col(status_col) != delivered_value)
-                | F.col(status_col).isNull(),
-                1,
-            )
-        ).alias("other"),
-    ).collect()[0]
-    return Counts(total=row["total"], delivered=row["delivered"], other=row["other"])
+    return Counts(**cleaned.agg(*status_counts()).collect()[0].asDict())

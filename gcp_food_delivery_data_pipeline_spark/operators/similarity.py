@@ -5,8 +5,7 @@ Three tiers, same result contract (top-k neighbors per query):
 * ``topk_exact``     — brute-force cosine top-k. The oracle-verifiable
   baseline: queries are broadcast (small side), candidates stream
   through one codegen stage, and the per-query top-k is a ranked
-  window. Correct at any scale but O(N·Q) similarity computations.
-* ``topk_exact_scalable`` — same answer, shuffle-thin: the ranked
+  window. O(N·Q) similarity computations, but shuffle-thin: the ranked
   window's partial ``WindowGroupLimit`` (pushed below the exchange by
   Spark's ``InferWindowGroupLimit``, pinned in tests) shrinks N·Q
   candidate rows to ~partitions·Q·k before they cross the wire. This
@@ -84,7 +83,14 @@ def topk_exact(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k per query (brute force, oracle baseline)."""
+    """Exact cosine top-k per query (brute force, oracle baseline).
+
+    One ranked window per query; Spark's ``InferWindowGroupLimit``
+    (3.5+) plants a partial ``WindowGroupLimit`` BELOW the exchange, so
+    each map task forwards only its local top-k per query and the wide
+    shuffle carries ≤ partitions·|Q|·k rows (pinned in
+    tests/test_plans.py, so a regression of the pushdown is caught).
+    """
     return _rank_topk(_scored(candidates, queries, id_col, vec_col), k)
 
 
@@ -98,7 +104,7 @@ def _rerank_cut(approx: DataFrame, order_col: str, rerank: int) -> DataFrame:
     partitions·|Q|·rerank at any corpus size. The old manual local
     phase (a second window keyed by ``spark_partition_id()``) enforced
     the same bound with an extra exchange + two extra sorts of the
-    same pruned rows (r16; see ``topk_exact_scalable``).
+    same pruned rows (r16; see ``topk_exact``).
     """
     w_glob = Window.partitionBy("query_id").orderBy(
         F.col(order_col), F.col("neighbor_id")
@@ -107,29 +113,6 @@ def _rerank_cut(approx: DataFrame, order_col: str, rerank: int) -> DataFrame:
         approx.withColumn("_grn", F.row_number().over(w_glob))
         .filter(F.col("_grn") <= rerank)
     )
-
-
-def topk_exact_scalable(
-    candidates: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k with a shuffle-thin plan.
-
-    One ranked window per query; Spark's ``InferWindowGroupLimit``
-    (3.5+) plants a partial ``WindowGroupLimit`` BELOW the exchange, so
-    each map task forwards only its local top-k per query and the wide
-    shuffle carries ≤ partitions·|Q|·k rows — the same bound the old
-    manual two-phase shape (a second window keyed by
-    ``spark_partition_id()``) achieved with an EXTRA exchange and two
-    extra sorts of the same pruned rows (r16: 2 exchanges → 1,
-    uniformly faster; the partial-limit node is pinned in
-    tests/test_plans.py so a regression of the pushdown is caught).
-    Identical output to ``topk_exact`` (asserted in tests).
-    """
-    return _rank_topk(_scored(candidates, queries, id_col, vec_col), k)
 
 
 def _sign_bucket(vec_col: str, hyperplanes: list[list[float]]) -> Column:
@@ -205,11 +188,9 @@ def train_ivf_centroids(
     global sort) at any scale. ``seed`` keys the hash, so distinct
     seeds draw distinct-but-reproducible samples.
 
-    Lloyd seeds are the sample's first ``n_clusters`` vectors (padded
-    by repetition on tiny samples), ``iters`` fixed rounds,
-    lowest-index tie-break, empty cells keep their previous centroid —
-    every choice deterministic. Returns plain-float centroids destined
-    to become plan literals.
+    The k-means is ``_lloyd`` (shared with ``train_pq_codebooks``),
+    deterministic in every choice. Returns plain-float centroids
+    destined to become plan literals.
     """
     import numpy as np
 
@@ -225,14 +206,25 @@ def train_ivf_centroids(
     if not sample:
         raise ValueError("train_ivf_centroids: empty candidate frame")
     mat = np.asarray([r[1] for r in sample], dtype=np.float64)
-    cents = mat[: min(n_clusters, len(mat))].copy()
-    if len(cents) < n_clusters:  # tiny sample: pad by repetition
-        reps = -(-n_clusters // len(cents))
-        cents = np.concatenate([cents] * reps)[:n_clusters]
+    return _lloyd(mat, n_clusters, iters)
+
+
+def _lloyd(mat, k: int, iters: int) -> list[list[float]]:
+    """Deterministic Lloyd k-means over the rows of ``mat`` (a numpy
+    float64 matrix), shared by the IVF and PQ trainers: seeds are the
+    first ``k`` rows (padded by repetition on tiny samples), ``iters``
+    fixed rounds, lowest-index tie-break, an empty cell keeps its
+    previous centroid. Returns plain-float centroids."""
+    import numpy as np
+
+    cents = mat[: min(k, len(mat))].copy()
+    if len(cents) < k:  # tiny sample: pad by repetition
+        reps = -(-k // len(cents))
+        cents = np.concatenate([cents] * reps)[:k]
     for _ in range(iters):
         d2 = ((mat[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
         assign = d2.argmin(axis=1)  # numpy argmin = lowest index
-        for c in range(n_clusters):
+        for c in range(k):
             members = mat[assign == c]
             if len(members):
                 cents[c] = members.mean(axis=0)
@@ -630,10 +622,9 @@ def train_pq_codebooks(
     deterministic and driver-sized BY CONSTRUCTION (PQ codebooks are
     always trained on a fixed sample, not the corpus; at 100 TB the
     only change is sampling that cap uniformly instead of by id
-    prefix). Lloyd is seeded from the sample's first ``n_codes``
-    sub-vectors, runs a FIXED ``iters`` rounds with lowest-index
-    tie-break, and keeps a centroid unchanged on an empty cell — every
-    choice deterministic, so encode/score stay reproducible.
+    prefix). Each subspace runs ``_lloyd`` (shared with
+    ``train_ivf_centroids``), deterministic in every choice, so
+    encode/score stay reproducible.
     """
     import numpy as np
 
@@ -653,22 +644,10 @@ def train_pq_codebooks(
             f"{n_subspaces} subspaces"
         )
     sub_d = dim // n_subspaces
-    books: list[list[list[float]]] = []
-    for s in range(n_subspaces):
-        sub = mat[:, s * sub_d : (s + 1) * sub_d]
-        cents = sub[: min(n_codes, len(sub))].copy()
-        if len(cents) < n_codes:  # tiny sample: pad by repetition
-            reps = -(-n_codes // len(cents))
-            cents = np.concatenate([cents] * reps)[:n_codes]
-        for _ in range(iters):
-            d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)  # numpy argmin = lowest index
-            for c in range(n_codes):
-                members = sub[assign == c]
-                if len(members):
-                    cents[c] = members.mean(axis=0)
-        books.append([[float(x) for x in c] for c in cents])
-    return books
+    return [
+        _lloyd(mat[:, s * sub_d : (s + 1) * sub_d], n_codes, iters)
+        for s in range(n_subspaces)
+    ]
 
 
 def _pq_sub(vec_col: str, s: int, sub_d: int) -> Column:
@@ -752,7 +731,7 @@ def pq_topk(
     computed once per query row and broadcast with it; the scored
     stream carries only (query, candidate, approx-dist) and the
     ``rerank`` cut happens in the same map-side-limited window as
-    ``topk_exact_scalable`` (``_rerank_cut``) — the exact cosine touches rerank·|Q|
+    ``topk_exact`` (``_rerank_cut``) — the exact cosine touches rerank·|Q|
     rows, not N·|Q|. Unlike IVF the index needs no cluster shuffle:
     codes live with the rows.
     """
@@ -968,7 +947,7 @@ def ndcg_at_k(
     log2 difference — absorbed by round(6). NDCG is NULL when the
     query's label has no other members (IDCG = 0).
 
-    Scale shape: rides ``topk_exact_scalable``'s map-side-limited rank
+    Scale shape: rides ``topk_exact``'s map-side-limited rank
     (the wide shuffle carries only partition winners), then label joins —
     query labels, per-label counts (≤ |labels| rows), and the
     self-label lookup (SEMI-RESTRICTED to the query-id set before it
@@ -979,7 +958,7 @@ def ndcg_at_k(
     corpus still surfaces (n_rel = 0, NULL ndcg) via the left join on
     the label counts.
     """
-    top = topk_exact_scalable(candidates, queries, k, id_col, vec_col)
+    top = topk_exact(candidates, queries, k, id_col, vec_col)
     q_lab = queries.select(
         F.col(id_col).alias("query_id"), F.col(label_col).alias("_qlab")
     )
@@ -1089,7 +1068,7 @@ def ivf_pq_topk(
     KiB) — candidate cell-assignment and encoding are zero-shuffle
     maps; the probe is a (cell) equi-join against broadcast queries;
     the rerank cut rides the same map-side-limited window as
-    ``topk_exact_scalable`` (``_rerank_cut``). Deterministic end to
+    ``topk_exact`` (``_rerank_cut``). Deterministic end to
     end (bounded-sample
     Lloyd coarse quantizer — ``train_ivf_centroids``, a pure function
     of the seed-keyed hash-sampled draw — md5-sampled codebooks,

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from gcp_food_delivery_data_pipeline_spark.config import log_counts
 from gcp_food_delivery_data_pipeline_spark.operators.clean import clean_orders
 from gcp_food_delivery_data_pipeline_spark.operators.metrics import Counts
+from gcp_food_delivery_data_pipeline_spark.operators.split import status_counts
 from gcp_food_delivery_data_pipeline_spark.sources.readers import read_orders_csv
 from gcp_food_delivery_data_pipeline_spark.sources.writers import (
     BATCH_MODE_ID,
@@ -60,23 +61,10 @@ def process_batch(
     # only the sinks exclude them.
     cleaned = with_ingest_date(clean_orders(raw_df, drop_malformed=False))
     obs = Observation("c1_c3")
-    observed = cleaned.observe(
-        obs,
-        F.count(F.lit(1)).alias("total"),
-        F.count(F.when(F.col("status") == "delivered", 1)).alias("delivered"),
-        F.count(
-            F.when(
-                (F.col("status") != "delivered") | F.col("status").isNull(),
-                1,
-            )
-        ).alias("other"),
-    )
+    observed = cleaned.observe(obs, *status_counts())
     sink_ready = observed.filter(~F.col("is_short")).drop("is_short")
     write_status_fanout(sink_ready, *_table_paths(output_dir), batch_id=batch_id)
-    got = obs.get
-    counts = Counts(
-        total=got["total"], delivered=got["delivered"], other=got["other"]
-    )
+    counts = Counts(**obs.get)
     # S6 parity: reference logs the three counts (code/beam.py:140-162).
     log_counts(counts.total, counts.delivered, counts.other)
     return counts

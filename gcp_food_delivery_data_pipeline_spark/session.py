@@ -80,7 +80,7 @@ def default_driver_memory() -> str:
 def get_spark(
     app_name: str = "gcp-food-delivery-data-pipeline-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's defaults.
@@ -92,8 +92,6 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -50,11 +50,6 @@ def read_orders_csv(spark: SparkSession, path: str) -> DataFrame:
     return _orders_csv_options(spark.read).csv(path)
 
 
-def read_orders_text(spark: SparkSession, path: str) -> DataFrame:
-    """Raw-fidelity mode: the file as lines (reference ReadFromText)."""
-    return spark.read.text(path)
-
-
 def read_orders_lines(
     spark: SparkSession, path: str, header_first_field: str = "customer_id"
 ) -> DataFrame:

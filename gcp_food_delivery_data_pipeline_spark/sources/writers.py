@@ -29,6 +29,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gcp_food_delivery_data_pipeline_spark.operators.split import status_class
+
 PARTITION_COLS = ["ingest_date", "batch_id"]
 
 
@@ -72,12 +74,6 @@ def write_status_table(
     else:
         writer = writer.mode("append")
     writer.parquet(path)
-
-
-def read_status_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read a status table produced by batch and/or streaming runs —
-    one reader for both, since the layout is unified."""
-    return spark.read.parquet(path)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -196,8 +192,6 @@ def write_status_fanout(
     df: DataFrame,
     delivered_path: str,
     other_path: str,
-    status_col: str = "status",
-    delivered_value: str = "delivered",
     batch_id: int = BATCH_MODE_ID,
 ) -> None:
     """Both status tables in ONE pass over ``df``.
@@ -231,9 +225,8 @@ def write_status_fanout(
     already published stay, and the retry appends them a second time —
     that needs a commit marker.
 
-    NULL statuses land in *other* (``split_by_status`` parity): the
-    partition value for NULL-vs-``delivered`` comparison is computed
-    explicitly, never left to partition-column NULL handling.
+    Rows are routed by ``split.status_class``, the status rule's one
+    definition (NULL statuses land in *other*).
     """
     if "ingest_date" not in df.columns:
         df = with_ingest_date(df)
@@ -244,12 +237,9 @@ def write_status_fanout(
     stage = f"{delivered_path}.fanout_tmp-{uuid.uuid4().hex}"
     fs, jstage = _hadoop_fs(spark, stage)
     replace = _replaces_leaf(batch_id)
-    cls = F.when(
-        F.col(status_col) == delivered_value, F.lit("delivered")
-    ).otherwise(F.lit("other"))
     try:
         (
-            df.withColumn(_FANOUT_CLASS_COL, cls)
+            df.withColumn(_FANOUT_CLASS_COL, status_class())
             .write.partitionBy(_FANOUT_CLASS_COL, *PARTITION_COLS)
             .parquet(stage)
         )

@@ -10,8 +10,8 @@ sites. It is exercised through graded ``queries()`` keys whose
 implementations checkpoint — g_pagerank_parts, g_label_propagation and
 g_lpa_stable (graph loops; the last on the ``keep_prev`` path),
 d_containment (shingle-table pin), q_ntile_buckets
-(two-phase rank pin) — and through direct calls of the iterative
-operators.
+(two-phase rank pin), v_topk_ann (the ANN recall keys' exact-list
+cut) — and through direct calls of the iterative operators.
 """
 
 from __future__ import annotations
@@ -39,6 +39,7 @@ PARITY_KEYS = [
     "g_lpa_stable",
     "d_containment",
     "q_ntile_buckets",
+    "v_topk_ann",
 ]
 
 
@@ -206,6 +207,25 @@ def test_graph_materialize_reliable_conf_bypasses_skip(spark, ckpt_dir):
     assert out is not view
     assert out.count() == 100
     assert _ckpt_files(ckpt_dir) > before
+
+
+def test_entry_cuts_follow_the_mode(spark, ckpt_dir):
+    """The entry module's own cuts — the shared graph-edge memo and
+    the ANN recall keys' exact list — go through ``materialize``: under
+    'reliable' both write to the checkpoint dir, and the edge memo never
+    hands a reliable session its local cut."""
+    import __spark_entry__ as entry_mod
+
+    local = entry_mod._part_edges(spark, SF_DIR)
+    before = _ckpt_files(ckpt_dir)
+    with _mode(spark, "reliable"):
+        reliable = entry_mod._part_edges(spark, SF_DIR)
+        assert reliable is not local
+        after_edges = _ckpt_files(ckpt_dir)
+        assert after_edges > before
+        entry_mod.queries()["v_topk_ann"](spark, SF_DIR).collect()
+        assert _ckpt_files(ckpt_dir) > after_edges
+    assert _rows(reliable) == _rows(local)
 
 
 def test_reliable_writes_to_checkpoint_dir(spark, ckpt_dir):

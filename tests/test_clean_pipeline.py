@@ -92,12 +92,13 @@ def test_cleaning_idempotent(spark, cleaned):
     """P1..P4 applied twice ≡ once (outputs contain no ?%&, no trailing
     colon, no uppercase) — SURVEY.md §5.4."""
     from gcp_food_delivery_data_pipeline_spark.functions.cleaning import (
-        clean_text_columns,
         strip_one_trailing_colon,
+        strip_special_chars,
     )
 
-    again = clean_text_columns(
-        cleaned.withColumn("items", strip_one_trailing_colon("items"))
+    again = cleaned.withColumn("items", strip_one_trailing_colon("items"))
+    again = again.select(
+        *[strip_special_chars(F.lower(c)).alias(c) for c in again.columns]
     )
     assert again.exceptAll(cleaned).count() == 0
     assert cleaned.exceptAll(again).count() == 0
@@ -208,17 +209,17 @@ def test_repair_scientific_id_matches_python_model(spark):
 
 
 def test_reader_conveniences(spark, tmp_path):
-    """read_orders_text (raw ReadFromText parity) and load_tables
-    (bulk loader over load_table) — the thin public conveniences."""
+    """read_orders_lines (raw ReadFromText parity: BOM and header
+    dropped) and load_tables (bulk loader over load_table)."""
     from gcp_food_delivery_data_pipeline_spark.sources.readers import (
         load_tables,
-        read_orders_text,
+        read_orders_lines,
     )
 
     p = tmp_path / "f.csv"
-    p.write_text("h1,h2\na,b\n")
-    lines = read_orders_text(spark, str(p))
-    assert lines.columns == ["value"] and lines.count() == 2
+    p.write_text("\ufeffCustomer_id,h2\na,b\n", encoding="utf-8")
+    lines = read_orders_lines(spark, str(p))
+    assert lines.columns == ["line"] and [r.line for r in lines.collect()] == ["a,b"]
     tabs = load_tables(
         spark, "/root/testdata/sf0.001", ["region", "nation"]
     )

@@ -52,8 +52,8 @@ def test_part_edges_memo_evicts_only_stopped_sessions(spark):
         def __getattr__(self, name):
             raise RuntimeError("session stopped")
 
-    dead_key = ("app-DEAD", "/tmp/nowhere", True, 2, False)
-    live_foreign_key = ("app-OTHER-LIVE", "/tmp/elsewhere", True, 2, False)
+    dead_key = ("app-DEAD", "local", "/tmp/nowhere", True, 2, False)
+    live_foreign_key = ("app-OTHER-LIVE", "local", "/tmp/elsewhere", True, 2, False)
     entry._PART_EDGES_MEMO[dead_key] = _StoppedFrame()
     # a frame owned by a LIVE session, keyed as another app id
     entry._PART_EDGES_MEMO[live_foreign_key] = spark.range(1)

@@ -929,3 +929,18 @@ def test_bounded_subtree_rule_rejects_join_smuggled_aggregate(spark):
     assert _subtree_is_bounded(gwindows[0].children().apply(0)), (
         "window over a group-level aggregate must stay accepted"
     )
+
+
+def test_plan_normalizer_drops_session_ids(plans):
+    """PLANS.md is written through ``tools/gen_plans.normalize_plan``:
+    two builds of one query in one session differ in their ids
+    (expression ids, ``plan_id``, checkpoint ``RDD[n]``) but normalize
+    to the same text, so a regeneration's diff shows only plans that
+    really changed."""
+    from tools.gen_plans import normalize_plan
+
+    for name in ("q3_top_revenue", "d_containment"):
+        first, second = plans(name), plans(name)
+        assert first != second, name
+        assert normalize_plan(first) == normalize_plan(second), name
+    assert "RDD[N]" in normalize_plan(plans("d_containment"))

@@ -3,6 +3,8 @@ pure-Python model of the reference's transforms (split on ',', strip
 one trailing colon from field 4, lowercase line, delete [?%&] per
 field, append ',1', drop rows splitting to <12 fields) on arbitrary
 field content — including colons, specials, empty and extra fields.
+The production path (CSV scan + ``clean_orders``) is held to the same
+model on the same lines.
 
 Reference semantics modeled from code/beam.py:35-66,113-120 (rewritten
 from the documented behavior, not copied).
@@ -10,15 +12,22 @@ from the documented behavior, not copied).
 
 from __future__ import annotations
 
+import os
 import re
+import tempfile
 
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from gcp_food_delivery_data_pipeline_spark.operators.clean import clean_order_lines
-from gcp_food_delivery_data_pipeline_spark.schema import OUT_COLS
+from gcp_food_delivery_data_pipeline_spark.operators.clean import (
+    clean_order_lines,
+    clean_orders,
+)
+from gcp_food_delivery_data_pipeline_spark.schema import OUT_COLS, RAW_COLS
+from gcp_food_delivery_data_pipeline_spark.sources.readers import read_orders_csv
 
-# Field alphabet: no commas/newlines (commas are the row structure).
+# Field alphabet: no commas/newlines (commas are the row structure) and
+# no '"', so a CSV parse of a line equals its naive comma split.
 FIELD = st.text(
     alphabet="aZ9 :?%&.'-_#", min_size=0, max_size=12
 )
@@ -44,21 +53,39 @@ def model_clean(line: str) -> list[str] | None:
         st.lists(FIELD, min_size=4, max_size=13), min_size=1, max_size=25
     )
 )
+@example(
+    rows=[
+        ["Ab", "c", "d", "Pizza::?", "e", "f", "g", "Delivered", "5", ""],
+        ["a"] * 9,  # 10 fields: short, dropped
+        ["a"] * 10 + ["Z%&"],  # 12 fields: the 12th becomes new_col
+    ]
+)
 def test_clean_lines_matches_reference_model(spark_global, rows):
+    """Both cleaning front-ends match the model: the raw-line twin on
+    in-memory lines, and the production path (``read_orders_csv`` +
+    ``clean_orders``) on the same lines written under a header."""
     # unique, clean-invariant key in field 0 so rows can be matched up
     lines = [
         ",".join([f"key{i}"] + fields) for i, fields in enumerate(rows)
     ]
-    df = spark_global.createDataFrame([(l,) for l in lines], ["line"])
-    got = {
-        r["customer_id"]: [r[c] for c in OUT_COLS]
-        for r in clean_order_lines(df).collect()
-    }
     expected = {}
     for line in lines:
         out = model_clean(line)
         if out is not None:
             expected[out[0]] = out
+
+    def by_key(cleaned):
+        return {
+            r["customer_id"]: [r[c] for c in OUT_COLS] for r in cleaned.collect()
+        }
+
+    df = spark_global.createDataFrame([(l,) for l in lines], ["line"])
+    assert by_key(clean_order_lines(df)) == expected
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "orders.csv")
+        with open(path, "w", encoding="utf-8") as fh:
+            fh.write("\n".join([",".join(RAW_COLS)] + lines) + "\n")
+        got = by_key(clean_orders(read_orders_csv(spark_global, path)))
     assert got == expected
 
 

@@ -17,7 +17,6 @@ from gcp_food_delivery_data_pipeline_spark.operators.similarity import (
     ivf_topk,
     lsh_bucketed_topk,
     topk_exact,
-    topk_exact_scalable,
 )
 from tests.conftest import SF_DIR
 
@@ -60,15 +59,6 @@ def test_topk_exact_self_excluded_and_ranked(embeddings):
         vals = [s for _, s in sorted(sims)]
         assert ranks == [1, 2, 3, 4, 5]
         assert vals == sorted(vals, reverse=True)
-
-
-def test_topk_scalable_matches_exact(embeddings):
-    queries = embeddings.filter(F.col("vec_id") < 5)
-    exact = topk_exact(embeddings, queries, k=10)
-    scalable = topk_exact_scalable(embeddings, queries, k=10)
-    a = sorted(map(tuple, exact.collect()))
-    b = sorted(map(tuple, scalable.collect()))
-    assert a == b
 
 
 def _fixed_tables(

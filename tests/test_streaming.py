@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from gcp_food_delivery_data_pipeline_spark.pipeline import process_batch, run_pipeline
 from gcp_food_delivery_data_pipeline_spark.sources.readers import read_orders_csv
-from gcp_food_delivery_data_pipeline_spark.sources.writers import read_status_table
 from gcp_food_delivery_data_pipeline_spark.streaming.stream import run_stream
 from tests.fixtures import (
     N_COUNT_DELIVERED,
@@ -67,8 +66,8 @@ def test_stream_end_to_end_with_archive(spark, stream_dirs):
             N_COUNT_OTHER,
         )
 
-    delivered = read_status_table(spark, f"{stream_dirs['output']}/delivered_orders")
-    other = read_status_table(spark, f"{stream_dirs['output']}/other_status_orders")
+    delivered = spark.read.parquet(f"{stream_dirs['output']}/delivered_orders")
+    other = spark.read.parquet(f"{stream_dirs['output']}/other_status_orders")
     assert delivered.count() == 2 * N_DELIVERED
     assert other.count() == 2 * N_OTHER
     assert {r.batch_id for r in delivered.select("batch_id").distinct().collect()} == {0, 1}
@@ -83,7 +82,7 @@ def test_stream_end_to_end_with_archive(spark, stream_dirs):
     )
     _drain(q2)
     assert (
-        read_status_table(spark, f"{stream_dirs['output']}/delivered_orders").count()
+        spark.read.parquet(f"{stream_dirs['output']}/delivered_orders").count()
         == 2 * N_DELIVERED
     )
 
@@ -94,7 +93,7 @@ def test_stream_replay_is_idempotent(spark, stream_dirs, food_csv):
     raw = read_orders_csv(spark, food_csv)
     process_batch(raw, stream_dirs["output"], 7)
     process_batch(raw, stream_dirs["output"], 7)  # replay
-    delivered = read_status_table(spark, f"{stream_dirs['output']}/delivered_orders")
+    delivered = spark.read.parquet(f"{stream_dirs['output']}/delivered_orders")
     assert delivered.count() == N_DELIVERED
     assert delivered.filter(F.col("batch_id") == 7).count() == N_DELIVERED
 
@@ -108,7 +107,7 @@ def test_batch_and_stream_layouts_are_one_table(spark, stream_dirs, food_csv):
     # stream batch 0 — the id most likely to collide with batch mode
     process_batch(raw, out, 0)
 
-    delivered = read_status_table(spark, f"{out}/delivered_orders")
+    delivered = spark.read.parquet(f"{out}/delivered_orders")
     assert delivered.count() == 2 * N_DELIVERED
     assert {r.batch_id for r in delivered.select("batch_id").distinct().collect()} == {-1, 0}
     assert "ingest_date" in delivered.columns
@@ -125,12 +124,12 @@ def test_stream_replay_after_partial_publish(spark, stream_dirs, food_csv, monke
         process_batch(raw, out, 3)
     monkeypatch.undo()
     assert len(calls) == 2
-    assert read_status_table(spark, f"{out}/delivered_orders").count() == N_DELIVERED
+    assert spark.read.parquet(f"{out}/delivered_orders").count() == N_DELIVERED
     assert not glob.glob(f"{out}/other_status_orders/**/*.parquet", recursive=True)
 
     process_batch(raw, out, 3)  # replay
-    delivered = read_status_table(spark, f"{out}/delivered_orders")
-    other = read_status_table(spark, f"{out}/other_status_orders")
+    delivered = spark.read.parquet(f"{out}/delivered_orders")
+    other = spark.read.parquet(f"{out}/other_status_orders")
     assert delivered.count() == delivered.distinct().count() == N_DELIVERED
     assert other.count() == other.distinct().count() == N_OTHER
     assert sorted(os.listdir(out)) == ["delivered_orders", "other_status_orders"]

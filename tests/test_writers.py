@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from gcp_food_delivery_data_pipeline_spark.sources.writers import (
     compact_table,
-    read_status_table,
     write_status_table,
 )
 from tests.fixtures import fail_rename_on_call
@@ -43,7 +42,7 @@ def test_compact_table_reduces_files_and_keeps_rows(spark, tmp_path):
     assert not os.path.exists(out + ".compact_tmp")
     assert not os.path.exists(out + ".compact_old")
 
-    back = read_status_table(spark, out)
+    back = spark.read.parquet(out)
     assert back.count() == total_before
     assert "ingest_date" in back.columns
     # every original row survives (12000 = 6 runs × 2000)
@@ -66,7 +65,7 @@ def test_append_after_compaction_stays_readable(spark, tmp_path):
     # the next streaming micro-batch appends with its own batch_id
     write_status_table(df, out, batch_id=2)
 
-    back = read_status_table(spark, out)
+    back = spark.read.parquet(out)
     assert back.count() == 300
     assert set(back.select("batch_id").distinct().toPandas()["batch_id"]) == {
         -2,
@@ -74,7 +73,7 @@ def test_append_after_compaction_stays_readable(spark, tmp_path):
     }
     # recompaction folds the new batch in too
     compact_table(spark, out, target_files_per_partition=1)
-    assert read_status_table(spark, out).count() == 300
+    assert spark.read.parquet(out).count() == 300
 
 
 def test_merge_upsert_replaces_and_inserts(spark, tmp_path):
@@ -200,19 +199,19 @@ def test_failed_swap_rolls_back_original(spark, tmp_path, monkeypatch, op):
         F.col("id"), (F.col("id") % 3).cast("string").alias("status")
     )
     write_status_table(df, out, batch_id=0)
-    before = sorted(tuple(r) for r in read_status_table(spark, out).collect())
+    before = sorted(tuple(r) for r in spark.read.parquet(out).collect())
 
     calls = fail_rename_on_call(monkeypatch, 2)  # 1: aside, 2: tmp -> path
     with pytest.raises(IOError, match="into place"):
         if op == "compact_table":
             compact_table(spark, out, target_files_per_partition=1)
         else:
-            updates = read_status_table(spark, out).limit(5)
+            updates = spark.read.parquet(out).limit(5)
             merge_upsert(spark, out, updates, key_cols=["id"])
     monkeypatch.undo()
 
     assert len(calls) == 3  # the third rename is the rollback
     assert os.path.isdir(out)
     spark.catalog.clearCache()
-    after = sorted(tuple(r) for r in read_status_table(spark, out).collect())
+    after = sorted(tuple(r) for r in spark.read.parquet(out).collect())
     assert after == before

@@ -2,14 +2,21 @@
 each annotated with the SCALE.md claim it evidences.
 
 Usage: python tools/gen_plans.py [sf_dir]
+
+Plans are written through ``normalize_plan``, which replaces the ids a
+plan gets from the session that built it (expression ids, ``plan_id=``,
+``RDD[n]``, explain operator and codegen-stage numbers) with ``N``, so
+a regeneration's diff shows only plans that really changed.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from gcp_food_delivery_data_pipeline_spark.session import get_spark  # noqa: E402
@@ -141,6 +148,27 @@ KEYS = {
 }
 
 
+_RUN_IDS = [
+    (re.compile(r"#\d+"), "#N"),  # expression ids: l_orderkey#11L
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    # explain operator numbers: tree "Filter (5)", detail "(5) Filter",
+    # cross-references, and codegen stage ids "*(2)", "[codegen id : 2]"
+    (re.compile(r" \(\d+\)$", re.M), " (N)"),
+    (re.compile(r"^\(\d+\) ", re.M), "(N) "),
+    (re.compile(r"(operator id ?[:=] ?)\d+"), r"\1N"),
+    (re.compile(r"\*\(\d+\)"), "*(N)"),
+    (re.compile(r"codegen id : \d+"), "codegen id : N"),
+]
+
+
+def normalize_plan(plan: str) -> str:
+    """``plan`` with every session-dependent id replaced by ``N``."""
+    for pattern, repl in _RUN_IDS:
+        plan = pattern.sub(repl, plan)
+    return plan
+
+
 def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark(app_name="plans-doc")
@@ -150,15 +178,20 @@ def main() -> None:
         "initial plans;",
         "runtime re-plan may coalesce partitions further). Each plan "
         "is the",
-        "evidence for the corresponding SCALE.md claim.\n",
+        "evidence for the corresponding SCALE.md claim. Session-dependent "
+        "ids (expression",
+        "ids, `plan_id`, `RDD[n]`, operator and codegen numbers) are "
+        "written as `N`, the",
+        "scale-factor directory as `$SF_DIR`.\n",
     ]
     queries = entry_mod.queries()
     for key, note in KEYS.items():
         df = queries[key](spark, sf)
         qe = df._jdf.queryExecution()
         plan = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
+        plan = normalize_plan(plan).replace(os.path.abspath(sf), "$SF_DIR")
         out += [f"## {key}\n\n*{note}*\n\n```", plan.rstrip(), "```\n"]
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print(f"PLANS.md: {len(KEYS)} plans written")
 
