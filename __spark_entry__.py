@@ -2471,9 +2471,10 @@ def _q_bm25(spark: SparkSession, sf: str) -> DataFrame:
 def _q_prep_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     """END-TO-END corpus prep, the composition a training-data team
     actually runs: exact dedup (keep-first by content hash) → near-dup
-    drop (LSH pairs at jaccard ≥ 0.8, keep lowest id) → quality floor
-    (≥ 10 tokens) → token-window chunking → deterministic split
-    assignment → per-split corpus stats. Every stage is the same
+    drop (``near_dedup``: LSH pairs at jaccard ≥ 0.8, keep lowest id) →
+    quality floor (≥ 10 tokens) → token-window chunking →
+    deterministic split assignment → per-split corpus stats. Every
+    stage is the same
     library operator graded individually; this query grades their
     COMPOSITION against one CTE-chain oracle."""
     from gcp_food_delivery_data_pipeline_spark.operators.corpus import (
@@ -2481,17 +2482,12 @@ def _q_prep_pipeline(spark: SparkSession, sf: str) -> DataFrame:
         chunk_documents,
     )
     from gcp_food_delivery_data_pipeline_spark.operators.dedup import (
-        dedup_exact,
-        lsh_candidate_pairs,
+        near_dedup,
     )
 
     d = load_table(spark, sf, "documents").withColumn("fp", F.md5("text"))
     exact = dedup_exact(d, "fp").select("doc_id", "text")
-    pairs = lsh_candidate_pairs(
-        exact, "text", "doc_id", num_hashes=64, bands=32
-    ).filter(F.col("jaccard") >= 0.8)
-    losers = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-    near = exact.join(F.broadcast(losers), "doc_id", "left_anti")
+    near = near_dedup(exact, "text", "doc_id", threshold=0.8, bands=32)
     quality = near.filter(token_count(F.col("text")) >= 10)
     chunks = chunk_documents(quality, chunk_tokens=128, overlap=16)
     split = assign_split(chunks, id_col="doc_id")
@@ -3559,7 +3555,6 @@ def _q_minhash_estimate(spark: SparkSession, sf: str) -> DataFrame:
     means a broken signature, not estimator luck). The oracle pins the
     exact jaccard and asserts the bound held."""
     from gcp_food_delivery_data_pipeline_spark.operators.dedup import (
-        lsh_candidate_pairs,
         with_minhash,
     )
 
@@ -3621,9 +3616,6 @@ def _q_split_leakage(spark: SparkSession, sf: str) -> DataFrame:
     (n_dup_pairs, n_cross_split_pairs)."""
     from gcp_food_delivery_data_pipeline_spark.operators.corpus import (
         assign_split,
-    )
-    from gcp_food_delivery_data_pipeline_spark.operators.dedup import (
-        lsh_candidate_pairs,
     )
 
     d = load_table(spark, sf, "documents")
@@ -4263,40 +4255,35 @@ def _q_ndcg_topk(spark: SparkSession, sf: str) -> DataFrame:
     return ndcg_at_k(emb, emb.filter(F.col("vec_id") < 50), k=10)
 
 
-# Round-16 grading priority (the driver grades the first 50 keys of
-# queries() in order; see GRADE_MANIFEST.json for per-key staleness):
-# 1. the 14 keys the r16 OPTIMIZATION diff touches (plan/internals
-#    changed, results identical by construction + local 2-SF oracle
-#    gates; the driver grade is the independent proof): the two-phase
-#    top-k collapse (similarity.py — v_topk_scalable/pq/bitq/ivfpq and
-#    the ndcg metadata fusion), the q_bootstrap_ci membership-parse
-#    rewrite, the _bloom_pos short parse, the explicit isNotNull
-#    null-key drops on the q2/q3/q5/q7/q10 wide-exchange keys, and the
-#    decode_png_stats passthrough guard (s_media_source/m_decode_png
-#    callers) — see OPTIMIZATION_r16.md.
-# 2. the 36 stalest grades (GRADE_MANIFEST oldest_first — the r10-era
-#    block the r15 rotation left behind), so after this round no key's
-#    driver grade predates r11.
+# Grading priority: graders take the first 50 keys of queries() in
+# order (GRADE_MANIFEST.json records each key's last graded round):
+# 1. the 8 keys whose operators now share the one MinHash-LSH body
+#    (operators/dedup.py:_lsh_join — lsh_candidate_pairs,
+#    near_dedup, incremental_dedup, fuzzy_decontaminate — and the
+#    width-pinned verify re-attach containment_join shares with it);
+#    rows identical by construction and oracle-checked at two SFs.
+# 2. the 42 stalest grades (GRADE_MANIFEST oldest_first).
 # Exactly 50 unique keys (pinned by tests/test_entry_contract.py).
 _GRADE_FIRST = [
-    # -- r16 OPTIMIZATION-touched keys first --
-    "v_topk_scalable", "v_pq_topk", "v_bitq_topk", "v_ivfpq_topk",
-    "v_ndcg_topk", "q_bootstrap_ci", "q_bloom_semijoin",
-    "q2_min_cost_supplier", "q3_top_revenue", "q5_nation_revenue",
-    "q7_nation_trade", "q10_returned_items", "s_media_source",
-    "m_decode_png",
-    # -- stalest-first (GRADE_MANIFEST oldest_first, r10-era) --
-    "m_resize", "o6_conf", "p_repair_ids", "q_approx_topk",
-    "q_approx_users", "q_corr_stats", "q_dq_orders",
-    "q_event_transitions", "q_funnel", "q_hash_sample",
-    "q_incremental_rollup", "q_key_skew", "q_mad_outliers",
-    "q_retention", "q_session_window", "q_sketch_rollup",
-    "s3_write_readback", "s5_ddl", "s_json_roundtrip",
-    "s_orc_roundtrip", "s_schema_evolution", "t_distinctive_terms",
-    "t_scrub_pii", "c_length_buckets", "c_split_by_source",
-    "c_temporal_split", "clean_chain", "d_span_dedup",
-    "d_span_removed", "f1_delivered", "f2_other", "j_scd2_intervals",
-    "m_decode_png_rgb", "p1_strip_colon", "p2_p3_clean", "p4_constant",
+    # -- MinHash-LSH keys --
+    "d_near_dup_pairs", "d_dup_components", "d_minhash_estimate",
+    "c_split_leakage", "c_prep_pipeline", "d_incremental_dedup",
+    "d_fuzzy_decontam", "d_containment",
+    # -- stalest-first (GRADE_MANIFEST oldest_first) --
+    "p5_projection", "q21_last_shipper", "q_approx_quantiles",
+    "q_benford_audit", "q_entropy_profile", "q_ewma_value",
+    "q_gini_revenue", "q_latest_event", "q_new_vs_returning",
+    "q_ntile_buckets", "q_order_intervals", "q_pareto_front",
+    "q_part_pairs", "q_revenue_trend", "q_session_paths",
+    "q_sessionize", "q_unpivot", "q_value_histogram",
+    "q_weighted_sample", "q_zorder_buckets", "q_zscore",
+    "s_compact_roundtrip", "s_matview_refresh", "s_snapshot_diff",
+    "s_stream_hourly", "s_stream_sessions", "s_stream_user_totals",
+    "s_time_travel", "t_bm25", "t_bpe_pairs", "t_perplexity",
+    "t_repetition", "c_dataset_card", "c_mix_temperature",
+    "c_sample_negatives", "c_shard_assign", "c_token_budget",
+    "c_upsample", "d_edit_pairs", "d_prefix_join",
+    "d_prefix_join_slice", "d_simhash_pairs",
 ]
 
 

@@ -1,9 +1,17 @@
 """Lineage materialization with one deployment-wide durability setting.
 
-Every iterative / release-point operator in this engine truncates
-lineage through ``materialize``. Which Spark call does the cut is a
-property of the DEPLOYMENT, not of the call site, so it is read from
-one session conf, ``spark.foodPipeline.checkpointMode``:
+Every iterative or multi-branch operator in this engine truncates
+lineage through ``materialize``, by one rule: a frame that several
+branches of a plan read (the MinHash signatures of the LSH
+operators, ``containment_join``'s shingle table, each loop round) is
+cut once, eagerly, and the frame the operator returns stays lazy
+above the cut. No operator caches with ``persist``: a cut's blocks
+live as long as the returned frame's lineage references them, so
+there is nothing to release.
+
+Which Spark call does the cut is a property of the DEPLOYMENT, not of
+the call site, so it is read from one session conf,
+``spark.foodPipeline.checkpointMode``:
 
 * ``'local'`` (default) — ``df.localCheckpoint(eager)``: fastest
   (blocks stay on the executors that computed them, no FS

@@ -13,6 +13,10 @@ the corpus-hygiene operators an LLM-data pipeline runs over a
   proportional to the data, not its square.
 * ``near_dedup``       — greedy drop of any doc whose verified-similar
   neighbor has a smaller id.
+* ``incremental_dedup`` / ``fuzzy_decontaminate`` — the same LSH join
+  across two corpora. All three LSH operators are front-ends over one
+  body, ``_lsh_join``: signatures cut once per input side, one band
+  equi-join, one exact-Jaccard verify.
 
 Each operator has one implementation. Most are Column expressions
 (higher-order functions ``transform``/``filter``/``array_min`` —
@@ -636,13 +640,17 @@ def _minhash_frame_arrow(
     num_hashes: int,
     shingle_k: int,
 ) -> DataFrame:
-    """(_id, _shingles, _sig) via one Arrow-batched kernel.
+    """(_id, _shingles, _sig) via one Arrow-batched kernel, cut once.
 
     Row for row equal to the staged-expression path (``shingles`` +
     ``with_minhash``; asserted in tests) but ~10× cheaper: the
     260k-shingle × 64-permutation min-fold that Spark evaluates as
     interpreted higher-order functions becomes one vectorized numpy
     ``(H·A + B) mod p`` + ``minimum.reduceat`` per Arrow batch.
+
+    The frame is returned through an eager ``checkpointing.materialize``
+    cut: every branch that reads it (band table, shingle re-attach, id
+    spine) reads the blocks, so the kernel runs once per input side.
 
     Beyond the shared tokenizer/hash notes (``_py_tokens``):
     ``array_distinct`` keeps first-occurrence order →
@@ -651,10 +659,6 @@ def _minhash_frame_arrow(
     (``greatest(n-k+1, 1)``), so blank text yields [""].
     """
     import numpy as np
-
-    from gcp_food_delivery_data_pipeline_spark.operators.scale import (
-        ensure_min_partitions,
-    )
 
     params = _hash_params(num_hashes)
     a_vec = np.array([p[0] for p in params], dtype=np.int64)
@@ -695,16 +699,17 @@ def _minhash_frame_arrow(
             )
 
     src = ensure_min_partitions(df.select(id_col, text_col))
-    return src.mapInPandas(
-        gen,
-        schema=f"_id {id_t}, _shingles array<string>, _sig array<bigint>",
+    return _ckpt(
+        src.mapInPandas(
+            gen,
+            schema=f"_id {id_t}, _shingles array<string>, _sig array<bigint>",
+        )
     )
 
 
 def _band_hashes(with_sig: DataFrame, bands: int, rows: int) -> DataFrame:
     """(_id, band, band_hash) rows from a (_id, _sig) signature frame —
-    the ids-only join side both the self-join (near-dup pairs) and the
-    cross-corpus join (fuzzy decontamination) shuffle on."""
+    the ids-only side ``_lsh_join`` shuffles on."""
     return with_sig.select(
         "_id",
         F.explode(
@@ -727,6 +732,93 @@ def _band_hashes(with_sig: DataFrame, bands: int, rows: int) -> DataFrame:
     ).select("_id", "bh.band", "bh.band_hash")
 
 
+def _attach_sets(
+    pairs: DataFrame, sets_a: DataFrame, sets_b: DataFrame
+) -> DataFrame:
+    """``pairs`` (id_a, id_b) with each side's set re-attached as
+    ``_sa``/``_sb``; ``sets_a``/``sets_b`` are two-column (id, set)
+    frames. The verify step of ``_lsh_join`` and ``containment_join``.
+
+    Width-pinned (the ``prefix_similarity_join`` lesson): deduped
+    id-pairs compress to well under a byte per row, so AQE's
+    byte-based coalescing shrank these exchanges to 3 partitions — at
+    50k docs 3 tasks absorbed 162 s of LSH verify CPU (x100 profile)
+    while 29 cores idled, and containment's verify ran 7 of a 10 s
+    sf0.1 run in 3 tasks. A per-join-key repartition with a user
+    partition count pins each sort-merge exchange at cluster width —
+    AQE cannot coalesce a stage whose exchange carries a
+    user-specified count. The second pin moves set arrays of the
+    candidate rows only, so it stays candidate-sized at every scale.
+    """
+    n_par = pairs.sparkSession.sparkContext.defaultParallelism
+    return (
+        pairs.repartition(n_par, "id_a")
+        .join(sets_a.toDF("id_a", "_sa"), "id_a")
+        .repartition(n_par, "id_b")
+        .join(sets_b.toDF("id_b", "_sb"), "id_b")
+    )
+
+
+def _lsh_join(
+    sig_a: DataFrame,
+    sig_b: DataFrame | None,
+    num_hashes: int,
+    bands: int,
+    broadcast_b: bool = False,
+) -> DataFrame:
+    """(id_a, id_b, jaccard) for every pair of docs sharing a band hash,
+    with the exact, UNROUNDED shingle-set Jaccard — the one
+    filter-then-verify join behind ``lsh_candidate_pairs`` (``sig_b``
+    None: a self-join, id_a < id_b), ``incremental_dedup`` and
+    ``fuzzy_decontaminate``. Inputs are ``_minhash_frame_arrow``
+    frames.
+
+    Signature split into ``bands`` bands of ``num_hashes/bands`` rows;
+    the candidate join is an equi-join on (band, band_hash) that moves
+    ONLY (id, band, band_hash) — never the (large) shingle arrays;
+    those are re-attached to the deduped candidate pairs only
+    (``_attach_sets``). ``broadcast_b`` broadcasts the b side's band
+    table, so the a side never shuffles for the band join.
+
+    Lifetime rule (shared with every multi-branch operator, see
+    ``checkpointing``): the signatures are cut eagerly, the returned
+    frame is lazy above them. Each action a caller runs re-executes
+    the band join + verify from the cut blocks — the kernel never
+    re-runs. A count-then-write consumer pays the verify twice; if you
+    need several actions, materialize the result yourself
+    (``df.localCheckpoint(eager=False)`` keeps blocks lineage-scoped
+    and defers the job to the first action).
+    """
+    rows = num_hashes // bands
+    self_join = sig_b is None
+    band_a = _band_hashes(sig_a, bands, rows)
+    if self_join:
+        sig_b, band_b = sig_a, band_a
+    else:
+        band_b = _band_hashes(sig_b, bands, rows)
+    band_b = band_b.alias("b")
+    on = (F.col("a.band") == F.col("b.band")) & (
+        F.col("a.band_hash") == F.col("b.band_hash")
+    )
+    if self_join:
+        on = on & (F.col("a._id") < F.col("b._id"))
+    pairs = (
+        band_a.alias("a")
+        .join(F.broadcast(band_b) if broadcast_b else band_b, on)
+        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])  # same pair from several bands
+    )
+    verified = _attach_sets(
+        pairs,
+        sig_a.select("_id", "_shingles"),
+        sig_b.select("_id", "_shingles"),
+    )
+    jaccard = F.size(F.array_intersect("_sa", "_sb")) / F.size(
+        F.array_union("_sa", "_sb")
+    )
+    return verified.select("id_a", "id_b", jaccard.alias("jaccard"))
+
+
 def lsh_candidate_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -735,14 +827,14 @@ def lsh_candidate_pairs(
     bands: int = 16,
     shingle_k: int = 3,
 ) -> DataFrame:
-    """Near-duplicate CANDIDATE pairs via LSH banding.
+    """Near-duplicate CANDIDATE pairs via LSH banding (``_lsh_join``
+    self-join).
 
-    Signature split into ``bands`` bands of ``num_hashes/bands`` rows;
-    docs sharing any band hash become a candidate pair. The self-join
-    is an equi-join on (band, band_hash) — shuffle ∝ corpus size. The
-    returned pairs carry the exact shingle-set Jaccard (computed via
-    ``array_intersect``/``array_union`` on the two shingle arrays) so
-    callers threshold on the true similarity, not the LSH estimate.
+    Docs sharing any band hash become a candidate pair; shuffle ∝
+    corpus size. The returned pairs carry the exact shingle-set
+    Jaccard (``array_intersect``/``array_union`` on the two shingle
+    arrays) rounded to 6 decimals, so callers threshold on the true
+    similarity, not the LSH estimate.
 
     Output: (id_a, id_b, jaccard) with id_a < id_b, distinct.
 
@@ -751,88 +843,11 @@ def lsh_candidate_pairs(
     ~2e-4 at t=0.8; pass ``bands=32`` (rows-per-band 2) when you need
     effectively-exhaustive recall at 0.8 (miss ≈ 6e-15) and can afford
     the extra low-similarity candidates the wider bands admit.
-
-    The result is computed EAGERLY: the corpus-sized signature cache
-    is released as soon as the (small) pair list is materialized,
-    instead of pinning it for the session. The (shingles, signature)
-    frame comes from one vectorized Arrow kernel
-    (``_minhash_frame_arrow``).
     """
-    from pyspark import StorageLevel
-
-    rows = num_hashes // bands
-    # The signature frame feeds the band join AND both shingle
-    # re-attach joins; without a persist the shingling+minhash of the
-    # whole corpus runs three times. MEMORY_AND_DISK — Spark
-    # LRU-evicts when executors need the room.
-    with_sig = _minhash_frame_arrow(
-        df, text_col, id_col, num_hashes, shingle_k
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    # Shuffle-width discipline: the band self-join moves ONLY
-    # (id, band, band_hash) — never the (large) shingle arrays; those
-    # are re-attached to the (much smaller) deduped candidate pairs.
-    shingle_side = with_sig.select("_id", "_shingles")
-    banded = _band_hashes(with_sig, bands, rows)
-
-    pairs = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])  # same pair from several bands
+    sig = _minhash_frame_arrow(df, text_col, id_col, num_hashes, shingle_k)
+    return _lsh_join(sig, None, num_hashes, bands).select(
+        "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
     )
-    # Width-pin the verify joins (r12, the prefix_similarity_join
-    # lesson): deduped id-pairs compress to well under a byte per
-    # row, so AQE's byte-based coalescing shrank the verify's
-    # exchanges to 3 partitions at 50k docs and 3 tasks absorbed
-    # 162 s of CPU (x100 profile) while 29 cores idled. Explicit
-    # per-join-key repartitions with a user partition count pin the
-    # sort-merge exchanges at cluster width — AQE cannot coalesce a
-    # stage whose exchange carries a user-specified count. The
-    # second pin moves shingle arrays for the already-verify-bound
-    # candidate rows only; pair volume is banding-bounded, so the
-    # extra exchange stays candidate-sized at every scale.
-    n_par = df.sparkSession.sparkContext.defaultParallelism
-    verified = (
-        pairs.repartition(n_par, "id_a")
-        .join(
-            shingle_side.select(
-                F.col("_id").alias("id_a"), F.col("_shingles").alias("sh_a")
-            ),
-            "id_a",
-        )
-        .repartition(n_par, "id_b")
-        .join(
-            shingle_side.select(
-                F.col("_id").alias("id_b"), F.col("_shingles").alias("sh_b")
-            ),
-            "id_b",
-        )
-    )
-    jaccard = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    result = verified.select(
-        "id_a", "id_b", F.round(jaccard, 6).alias("jaccard")
-    )
-    # Materialize the (small — pairs only) result as an eager
-    # localCheckpoint so the corpus-sized signature cache can be
-    # released NOW rather than leaking for the session lifetime. A
-    # checkpoint (not persist) for the result itself: its blocks live
-    # exactly as long as the returned frame is referenced
-    # (ContextCleaner frees them on drop) instead of occupying a
-    # cache-manager entry until someone remembers to unpersist — the
-    # session-lifetime-leak class once found on prefix_similarity_join.
-    # The checkpointMode conf set to 'reliable' makes this cut survive
-    # executor loss (checkpointing.py).
-    result = _ckpt(result)
-    with_sig.unpersist()
-    return result
 
 
 def near_dedup(
@@ -849,18 +864,23 @@ def near_dedup(
 
     Not a transitive closure (A~B, B~C, A≁C keeps A and C — standard
     greedy semantics; full clustering would need iterative connected
-    components). The drop set is an anti-join — no payload shuffle.
+    components). The drop set is ids only: it is cut eagerly and rides
+    into the anti-join as a broadcast — no payload shuffle. Left lazy,
+    it would re-run the whole band join + verify under every
+    downstream partition probe (``scale.ensure_min_partitions`` runs
+    each shuffle stage of its input to read the count;
+    ``chunk_documents`` probes).
     """
     pairs = lsh_candidate_pairs(
         df, text_col, id_col, num_hashes=num_hashes, bands=bands, shingle_k=shingle_k
     )
-    to_drop = (
-        pairs.filter(F.col("jaccard") >= threshold).select(
-            F.col("id_b").alias("_drop_id")
-        )
-    ).distinct()
+    to_drop = _ckpt(
+        pairs.filter(F.col("jaccard") >= threshold)
+        .select(F.col("id_b").alias("_drop_id"))
+        .distinct()
+    )
     return df.join(
-        to_drop, df[id_col] == F.col("_drop_id"), "left_anti"
+        F.broadcast(to_drop), df[id_col] == F.col("_drop_id"), "left_anti"
     )
 
 
@@ -889,14 +909,17 @@ def connected_components(
     # Materialize the edge list ONCE: `pairs` usually carries a whole
     # candidate-generation pipeline (shingle→MinHash→LSH→verify) in its
     # lineage, and without the checkpoint that pipeline re-executes
-    # twice per round (once per unionAll branch) — the dominant cost of
-    # the whole operator. The pair set itself is tiny relative to the
+    # every round — the dominant cost of the whole operator. Both
+    # directions come from ONE read of `pairs`: a union of two selects
+    # shares the pipeline's exchanges but runs the verify above them
+    # once per branch. The pair set itself is tiny relative to the
     # corpus.
+    both_ways = F.array(
+        F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
+    )
     edges = _ckpt(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionAll(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
+        pairs.select(F.explode(both_ways).alias("_e")).select("_e.src", "_e.dst")
     )
     labels = _ckpt(
         vertices.select(
@@ -1253,69 +1276,32 @@ def fuzzy_decontaminate(
     eval text was lightly paraphrased (the overlap-removal step
     described for GPT-3, Brown et al. 2020, arXiv:2005.14165 §C).
 
-    Same machinery as the self-join near-dup path, pointed across two
-    corpora: minhash both sides, equi-join on (band, band_hash) —
-    the BENCHMARK side's bands are broadcast (eval suites are tiny
-    next to a training corpus) so the training side never shuffles —
-    then verify candidates on exact Jaccard. bands=32 (2-row bands)
-    makes the miss probability at t=0.8 ~6e-15: effectively
-    exhaustive, which is what lets the driver grade this against an
-    all-pairs oracle.
+    Same machinery as the self-join near-dup path (``_lsh_join``),
+    pointed across two corpora: the BENCHMARK side's band table is
+    broadcast (eval suites are tiny next to a training corpus) so the
+    training side never shuffles for the band join; candidates verify
+    on the exact, unrounded Jaccard. bands=32 (2-row bands) makes the
+    miss probability at t=0.8 ~6e-15: effectively exhaustive, which is
+    what lets an all-pairs oracle grade it.
 
-    Output: (doc_id, contaminated) for every corpus doc with
-    non-empty shingles.
+    Output: (doc_id, contaminated) for every corpus row. NULL and
+    blank text read as '' (one shingle, [""]), so blank corpus docs
+    are contaminated by any blank benchmark doc (Jaccard 1.0).
     """
-    rows = num_hashes // bands
-    c_sig = _minhash_frame_arrow(
-        corpus, text_col, id_col, num_hashes, shingle_k
+    c_sig, b_sig = (
+        _minhash_frame_arrow(side, text_col, id_col, num_hashes, shingle_k)
+        for side in (corpus, benchmark)
     )
-    b_sig = _minhash_frame_arrow(
-        benchmark, text_col, id_col, num_hashes, shingle_k
-    )
-    c_band = _band_hashes(c_sig, bands, rows)
-    b_band = _band_hashes(b_sig, bands, rows)
-
-    cands = (
-        c_band.alias("c")
-        .join(
-            F.broadcast(b_band.alias("b")),
-            (F.col("c.band") == F.col("b.band"))
-            & (F.col("c.band_hash") == F.col("b.band_hash")),
-        )
-        .select(
-            F.col("c._id").alias("_cid"), F.col("b._id").alias("_bid")
-        )
-        .dropDuplicates(["_cid", "_bid"])
-    )
-    verified = (
-        cands.join(
-            c_sig.select(
-                F.col("_id").alias("_cid"),
-                F.col("_shingles").alias("_sh_c"),
-            ),
-            "_cid",
-        )
-        .join(
-            F.broadcast(
-                b_sig.select(
-                    F.col("_id").alias("_bid"),
-                    F.col("_shingles").alias("_sh_b"),
-                )
-            ),
-            "_bid",
-        )
-        .filter(
-            F.size(F.array_intersect("_sh_c", "_sh_b"))
-            / F.size(F.array_union("_sh_c", "_sh_b"))
-            >= threshold
-        )
-        .select(F.col("_cid"))
+    hits = (
+        _lsh_join(c_sig, b_sig, num_hashes, bands, broadcast_b=True)
+        .filter(F.col("jaccard") >= threshold)
+        .select(F.col("id_a").alias(id_col))
         .distinct()
         .withColumn("contaminated", F.lit(True))
     )
     return (
         c_sig.select(F.col("_id").alias(id_col))
-        .join(verified.withColumnRenamed("_cid", id_col), id_col, "left")
+        .join(hits, id_col, "left")
         .select(
             id_col,
             F.coalesce("contaminated", F.lit(False)).alias("contaminated"),
@@ -1506,15 +1492,10 @@ def incremental_dedup(
     the band join is a plain keyed equi-join, shuffle ∝ batch + the
     corpus band partitions it touches.
 
-    ONE-ACTION contract: the returned frame is lazy above the two
-    checkpointed signature snapshots, so each action a caller runs
-    re-executes the band join + Jaccard verify (from materialized
-    signatures — the minhash pass itself never re-runs). A
-    count-then-write consumer therefore pays the verify twice; if you
-    need multiple actions, materialize the result yourself
-    (``df.localCheckpoint(eager=False)`` keeps blocks lineage-scoped
-    and defers the job to the first action) — the builder does not
-    pre-pay that job for the common write-once path.
+    ONE-ACTION contract (the ``_lsh_join`` lifetime rule): the returned
+    frame is lazy above the two cut signature frames, so each action a
+    caller runs re-executes the band join + Jaccard verify, never the
+    minhash pass.
 
     100 TB shape: the corpus band table is a pure function of the
     corpus, so production materializes it ONCE (bucketed by
@@ -1524,59 +1505,16 @@ def incremental_dedup(
     the banding bound (bands=32 of 2 rows: miss ~6e-15 at t=0.8 —
     effectively exhaustive, gradeable against an all-pairs oracle).
     """
-    rows = num_hashes // bands
-    # Each signature frame feeds its band table AND the shingle
-    # re-attach below; eager localCheckpoints so the minhash pass
-    # runs once per side, with block lifetime tied to the returned
-    # frame's lineage (no session cache-manager entries to leak —
-    # and nothing to remember to unpersist).
-    c_sig = _ckpt(
-        _minhash_frame_arrow(
-            corpus, text_col, id_col, num_hashes, shingle_k
-        )
-    )
-    b_sig = _ckpt(
-        _minhash_frame_arrow(
-            batch, text_col, id_col, num_hashes, shingle_k
-        )
-    )
-    c_band = _band_hashes(c_sig, bands, rows)
-    b_band = _band_hashes(b_sig, bands, rows)
-    cands = (
-        b_band.alias("b")
-        .join(
-            c_band.alias("c"),
-            (F.col("b.band") == F.col("c.band"))
-            & (F.col("b.band_hash") == F.col("c.band_hash")),
-        )
-        .select(F.col("b._id").alias("_bid"), F.col("c._id").alias("_cid"))
-        .dropDuplicates(["_bid", "_cid"])
+    c_sig, b_sig = (
+        _minhash_frame_arrow(side, text_col, id_col, num_hashes, shingle_k)
+        for side in (corpus, batch)
     )
     dup_ids = (
-        cands.join(
-            b_sig.select(
-                F.col("_id").alias("_bid"), F.col("_shingles").alias("_sh_b")
-            ),
-            "_bid",
-        )
-        .join(
-            c_sig.select(
-                F.col("_id").alias("_cid"), F.col("_shingles").alias("_sh_c")
-            ),
-            "_cid",
-        )
-        .filter(
-            F.size(F.array_intersect("_sh_b", "_sh_c"))
-            / F.size(F.array_union("_sh_b", "_sh_c"))
-            >= threshold
-        )
-        .select(F.col("_bid").alias(id_col))
+        _lsh_join(b_sig, c_sig, num_hashes, bands)
+        .filter(F.col("jaccard") >= threshold)
+        .select(F.col("id_a").alias(id_col))
         .distinct()
     )
-    # dup_ids stays LAZY: its lineage reads the two checkpointed
-    # signature snapshots, so executing the returned anti-join runs
-    # the band join + verify exactly once from materialized blocks —
-    # no cached dup list to leak past the call.
     return batch.join(dup_ids, id_col, "left_anti")
 
 
@@ -1764,25 +1702,7 @@ def containment_join(
         .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    # Width-pin the verify (r12, the prefix/LSH lesson): deduped
-    # id-pairs are bytes-light, so AQE coalesced this verify to 3
-    # tasks carrying 7 of a 10 s sf0.1 run; user-specified partition
-    # counts are exempt from coalescing and the pinned exchanges stay
-    # candidate-sized at every scale (keys are uniform pair ids — no
-    # skew surface).
-    n_par = df.sparkSession.sparkContext.defaultParallelism
-    verified = (
-        cands.repartition(n_par, "id_a")
-        .join(
-            sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sa")),
-            "id_a",
-        )
-        .repartition(n_par, "id_b")
-        .join(
-            sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_sb")),
-            "id_b",
-        )
-    )
+    verified = _attach_sets(cands, sh, sh)
     containment = (
         F.size(F.array_intersect("_sa", "_sb")).cast("double")
         / F.size("_sa")

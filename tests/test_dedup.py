@@ -223,7 +223,15 @@ def test_minhash_kernel_matches_column_path_row_for_row(spark):
 
 def test_lsh_pairs_treat_null_text_as_empty(spark):
     """NULL text shingles like '': the two NULL docs and the empty doc
-    are exact duplicates of each other (jaccard 1.0)."""
+    are exact duplicates of each other (jaccard 1.0). The rule is one
+    for all three LSH operators, so blank docs also match ACROSS
+    corpora: blank corpus docs are contaminated by a NULL benchmark
+    doc, and a NULL batch doc is dropped against a blank corpus doc."""
+    from gcp_food_delivery_data_pipeline_spark.operators.dedup import (
+        fuzzy_decontaminate,
+        incremental_dedup,
+    )
+
     df = spark.createDataFrame(
         [(1, None), (2, None), (3, ""), (4, "a b c d"), (5, "a b c d")],
         "doc_id long, text string",
@@ -232,6 +240,20 @@ def test_lsh_pairs_treat_null_text_as_empty(spark):
         map(tuple, lsh_candidate_pairs(df, num_hashes=8, bands=4).collect())
     )
     assert got == [(1, 2, 1.0), (1, 3, 1.0), (2, 3, 1.0), (4, 5, 1.0)]
+
+    # old side: NULL, blank, text; new side: NULL, text
+    old, new = df.filter("doc_id IN (1, 3, 4)"), df.filter("doc_id IN (2, 5)")
+    null_bench = df.filter("doc_id = 1")
+    flags = fuzzy_decontaminate(df, null_bench, num_hashes=8, bands=4)
+    assert sorted(map(tuple, flags.collect())) == [
+        (1, True), (2, True), (3, True), (4, False), (5, False)
+    ]
+    kept = incremental_dedup(old, new, num_hashes=8, bands=4)
+    assert kept.count() == 0  # NULL 2 matches blank/NULL, 5 matches 4
+    kept = incremental_dedup(
+        df.filter("doc_id = 4"), new, num_hashes=8, bands=4
+    )
+    assert sorted(r.doc_id for r in kept.collect()) == [2]
 
 
 def test_simhash_banded_pairs_equal_brute_force(spark):

@@ -58,6 +58,7 @@ def test_text_ops_on_empty(empty_docs):
 def test_dedup_ops_on_empty(empty_docs):
     from gcp_food_delivery_data_pipeline_spark.operators.dedup import (
         dedup_exact,
+        fuzzy_decontaminate,
         lsh_candidate_pairs,
         simhash_near_dup_pairs,
     )
@@ -66,6 +67,13 @@ def test_dedup_ops_on_empty(empty_docs):
     assert dedup_exact(d, "fp").count() == 0
     assert lsh_candidate_pairs(empty_docs).count() == 0
     assert simhash_near_dup_pairs(empty_docs, max_hamming=3, bands=4).count() == 0
+    # empty corpus: no rows; empty benchmark: every corpus row, clean
+    docs = empty_docs.sparkSession.createDataFrame(
+        [(1, "some corpus text here", "web")], empty_docs.schema
+    )
+    assert fuzzy_decontaminate(empty_docs, docs).count() == 0
+    clean = fuzzy_decontaminate(docs, empty_docs).collect()
+    assert [tuple(r) for r in clean] == [(1, False)]
 
 
 def test_corpus_ops_on_empty(empty_docs):

@@ -401,6 +401,37 @@ def test_incremental_dedup_band_join_is_keyed(plans):
     assert "band" in p
 
 
+@pytest.mark.parametrize(
+    "key", ["d_near_dup_pairs", "d_incremental_dedup", "d_fuzzy_decontam"]
+)
+def test_lsh_front_ends_read_cut_signatures(plans, key):
+    """The three MinHash-LSH operators cut each input side's signature
+    frame once: the returned frame reads the cut blocks (Scan
+    ExistingRDD), so the Arrow MinHash kernel (MapInPandas) never
+    re-runs under it, and nothing sits in the session cache
+    (InMemoryRelation)."""
+    p = plans(key)
+    assert "MapInPandas" not in p
+    assert "InMemoryRelation" not in p
+    assert "Scan ExistingRDD" in p
+
+
+def test_fuzzy_decontam_band_join_broadcasts_benchmark(plans):
+    """The one (band, band_hash) join of ``d_fuzzy_decontam`` builds a
+    broadcast of its right (benchmark) side, so the training corpus
+    never shuffles for it."""
+    import re
+
+    p = plans("d_fuzzy_decontam")
+    joins = re.findall(
+        r"^\((\d+)\) (\w+)\nLeft keys \[2\]: \[band#\d+, band_hash#\d+\]",
+        p,
+        re.M,
+    )
+    assert [name for _, name in joins] == ["BroadcastHashJoin"], joins
+    assert f"BroadcastHashJoin Inner BuildRight ({joins[0][0]})" in p
+
+
 def test_ngram_novelty_windows_partition_by_span(plans):
     """First-arrival attribution is ONE window partitioned by the span
     text; an unpartitioned window would serialize the corpus."""

@@ -35,8 +35,9 @@ KEYS = {
         "doc-term table; WindowGroupLimit top-k"
     ),
     "d_near_dup_pairs": (
-        "LSH banding: ids-only equi-join, shingles re-attached to "
-        "candidates only"
+        "LSH banding (_lsh_join): signatures cut once (Scan ExistingRDD, "
+        "no MapInPandas); ids-only band equi-join; shingles re-attached "
+        "to candidates only, through width-pinned exchanges"
     ),
     "q_session_window": (
         "partial session aggregation + MergingSessions over ONE "
