@@ -13,7 +13,16 @@ on the stdlib (``functions.png``/``functions.gif``).
 Design rules that hold at 100 TB:
 
 * Payload bytes NEVER pass through a row-at-a-time Python UDF — all
-  Python crossings are Arrow batches via ``mapInPandas``.
+  Python crossings are Arrow batches, through ONE helper:
+  ``_map_rows`` holds the module's only ``mapInPandas``, and every
+  kernel is a row function (one input row → zero, one or many output
+  tuples) plus its output schema.
+* One NULL-payload rule for the seven decoders (``_decode_rows``): a
+  NULL payload keeps its id (and passthrough columns) with NULL stats;
+  malformed non-NULL bytes still raise ``ValueError``. The three
+  stand-ins accept NULL as before: ``extract_features`` gives
+  ``n_bytes`` 0 and NULL features, ``resize_payload`` and
+  ``sample_frames`` read it as empty bytes.
 * Metadata predicates (format/width/size filters) are plain Column
   expressions on the struct, so Catalyst pushes them into the parquet
   scan and prunes the (huge) payload column when it isn't selected.
@@ -24,12 +33,26 @@ Design rules that hold at 100 TB:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gcp_food_delivery_data_pipeline_spark.functions.gif import (
+    decode_gif_gray,
+    encode_gif_gray,
+)
+from gcp_food_delivery_data_pipeline_spark.functions.png import (
+    decode_png_gray,
+    decode_png_rgb,
+    encode_png_gray,
+    encode_png_rgb,
+)
+from gcp_food_delivery_data_pipeline_spark.functions.wav import (
+    decode_wav_pcm16,
+    encode_wav_pcm16,
+)
 from gcp_food_delivery_data_pipeline_spark.operators.scale import (
     ensure_min_partitions,
 )
@@ -56,6 +79,72 @@ FEATURE_SCHEMA = StructType(
 )
 
 
+def _map_rows(
+    df: DataFrame,
+    cols: tuple[str, ...],
+    fn: Callable[..., Iterable[tuple]],
+    schema: StructType,
+) -> DataFrame:
+    """The module's one Arrow crossing: ``df``'s ``cols`` reach Python
+    one Arrow batch at a time, ``fn(*row)`` returns that row's output
+    tuples in ``schema`` order (none, one or many), and each batch's
+    tuples go back as one frame.
+
+    Output columns are built ``object``-typed: pandas would turn an
+    int column holding a ``None`` into float64 and round values past
+    2**53 on the way to Arrow.
+    """
+    names = schema.fieldNames()
+
+    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                out for row in zip(*(pdf[c] for c in cols)) for out in fn(*row)
+            ]
+            yield pd.DataFrame(rows, columns=names, dtype=object)
+
+    return ensure_min_partitions(df.select(*cols)).mapInPandas(process, schema)
+
+
+def _decode_rows(
+    df: DataFrame,
+    id_col: str,
+    payload_col: str,
+    stats: Callable[[bytes], tuple | None],
+    schema: StructType,
+    passthrough: tuple[str, ...] = (),
+) -> DataFrame:
+    """A decoder over ``_map_rows``: each row gives ``(id, *stats(bytes),
+    *passthrough)``; ``stats`` returns ``None`` to drop the row. A NULL
+    payload keeps its id and passthrough columns with NULL stats."""
+    nulls = (None,) * (len(schema.fields) - 1 - len(passthrough))
+
+    def row(doc_id, payload, *extra):
+        if payload is None:
+            return [(doc_id, *nulls, *extra)]
+        out = stats(bytes(payload))
+        return [] if out is None else [(doc_id, *out, *extra)]
+
+    return _map_rows(df, (id_col, payload_col, *passthrough), row, schema)
+
+
+def _with_meta(
+    flat: DataFrame, media_type: str, fmt: str | Column, *fields: str | Column
+) -> DataFrame:
+    """``flat``'s id (its first column) and ``payload``, plus the typed
+    ``meta`` struct ``(media_type, format, *fields)``; ``fmt`` is a
+    literal or a Column."""
+    return flat.select(
+        flat.columns[0],
+        "payload",
+        F.struct(
+            F.lit(media_type).alias("media_type"),
+            F.lit(fmt).alias("format"),
+            *fields,
+        ).alias("meta"),
+    )
+
+
 def attach_fake_payload(
     documents: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -66,20 +155,18 @@ def attach_fake_payload(
     Real pipelines read these columns straight from parquet; this
     exists so tests and the driver tables can exercise the plumbing.
     """
-    payload = F.encode(F.col(text_col), "UTF-8")
     n_bytes = F.octet_length(F.col(text_col)).cast("long")
-    meta = F.struct(
-        F.lit("image").alias("media_type"),
-        F.when((n_bytes % 2) == 0, F.lit("png")).otherwise(F.lit("jpeg")).alias(
-            "format"
-        ),
+    flat = documents.select(
+        F.col(id_col),
+        F.encode(F.col(text_col), "UTF-8").alias("payload"),
         ((n_bytes % 64) + 1).cast("int").alias("width"),
         ((n_bytes % 48) + 1).cast("int").alias("height"),
         n_bytes.alias("n_bytes"),
     )
-    return documents.select(
-        F.col(id_col), payload.alias("payload"), meta.alias("meta")
+    fmt = F.when((F.col("n_bytes") % 2) == 0, F.lit("png")).otherwise(
+        F.lit("jpeg")
     )
+    return _with_meta(flat, "image", fmt, "width", "height", "n_bytes")
 
 
 def filter_by_meta(
@@ -127,22 +214,12 @@ def extract_features(
     (PIL/ffmpeg/...) decode would sit.
     """
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                _fake_features(p, dim) if p is not None else None
-                for p in pdf[payload_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": [len(p) if p is not None else 0 for p in pdf[payload_col]],
-                    "features": feats,
-                }
-            )
+    def row(doc_id, p):
+        if p is None:
+            return [(doc_id, 0, None)]
+        return [(doc_id, len(p), _fake_features(p, dim))]
 
-    src = ensure_min_partitions(df.select(id_col, payload_col))
-    return src.mapInPandas(process, FEATURE_SCHEMA)
+    return _map_rows(df, (id_col, payload_col), row, FEATURE_SCHEMA)
 
 
 RESIZE_FLAT_SCHEMA = StructType(
@@ -178,31 +255,15 @@ def resize_payload(
     """
     n_out = width * height
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = []
-            for p in pdf["payload"]:
-                if p is None or len(p) == 0:
-                    resized.append(bytes(n_out))
-                else:
-                    reps = n_out // len(p) + 1
-                    resized.append((bytes(p) * reps)[:n_out])
-            meta = pd.DataFrame(list(pdf["meta"]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": resized,
-                    "media_type": meta["media_type"],
-                    "format": meta["format"],
-                    "width": width,
-                    "height": height,
-                    "n_bytes": n_out,
-                }
-            )
+    def row(doc_id, p, meta):
+        if p is None or len(p) == 0:
+            resized = bytes(n_out)
+        else:
+            resized = (bytes(p) * (n_out // len(p) + 1))[:n_out]
+        kind, fmt = meta["media_type"], meta["format"]
+        return [(doc_id, resized, kind, fmt, width, height, n_out)]
 
-    flat = ensure_min_partitions(
-        df.select(id_col, "payload", "meta")
-    ).mapInPandas(process, RESIZE_FLAT_SCHEMA)
+    flat = _map_rows(df, (id_col, "payload", "meta"), row, RESIZE_FLAT_SCHEMA)
     return flat.select(
         "doc_id",
         "payload",
@@ -236,25 +297,17 @@ def sample_frames(
     Arrow pass, and only frame-sized slices flow on.
     """
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for doc_id, p in zip(pdf[id_col], pdf[payload_col]):
-                p = bytes(p) if p is not None else b""
-                base, rem = divmod(len(p), n_frames)
-                off = 0
-                for i in range(n_frames):
-                    size = base + (1 if i < rem else 0)
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    frames.append(p[off : off + size])
-                    off += size
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame": frames}
-            )
+    def row(doc_id, p):
+        p = bytes(p) if p is not None else b""
+        base, rem = divmod(len(p), n_frames)
+        frames, off = [], 0
+        for i in range(n_frames):
+            size = base + (1 if i < rem else 0)
+            frames.append((doc_id, i, p[off : off + size]))
+            off += size
+        return frames
 
-    src = ensure_min_partitions(df.select(id_col, payload_col))
-    return src.mapInPandas(process, FRAME_SCHEMA)
+    return _map_rows(df, (id_col, payload_col), row, FRAME_SCHEMA)
 
 
 PNG_STATS_SCHEMA = StructType(
@@ -263,6 +316,16 @@ PNG_STATS_SCHEMA = StructType(
         StructField("width", IntegerType()),
         StructField("height", IntegerType()),
         StructField("mean_px", DoubleType()),
+    ]
+)
+
+_IMAGE_FLAT_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("payload", BinaryType()),
+        StructField("width", IntegerType()),
+        StructField("height", IntegerType()),
+        StructField("n_bytes", LongType()),
     ]
 )
 
@@ -282,59 +345,16 @@ def attach_png_payload(
     Arrow-batched like every payload producer; the meta struct carries
     the same typed fields as ``attach_fake_payload``.
     """
-    from gcp_food_delivery_data_pipeline_spark.functions.png import (
-        encode_png_gray,
-    )
 
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("n_bytes", LongType()),
-        ]
-    )
+    def row(doc_id):
+        i = int(doc_id)
+        w, h, c = i % 16 + 1, i % 12 + 1, i % 200
+        pixels = bytes(c + x + y for y in range(h) for x in range(w))
+        png = encode_png_gray(w, h, pixels, filter_mode="cycle")
+        return [(i, png, w, h, len(png))]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads, ws, hs, sizes = [], [], [], [], []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w, h, c = i % 16 + 1, i % 12 + 1, i % 200
-                pixels = bytes(
-                    c + x + y for y in range(h) for x in range(w)
-                )
-                png = encode_png_gray(w, h, pixels, filter_mode="cycle")
-                ids.append(i)
-                payloads.append(png)
-                ws.append(w)
-                hs.append(h)
-                sizes.append(len(png))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "width": ws,
-                    "height": hs,
-                    "n_bytes": sizes,
-                }
-            )
-
-    flat = ensure_min_partitions(documents.select(id_col)).mapInPandas(
-        gen, out_schema
-    )
-    return flat.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("png").alias("format"),
-            "width",
-            "height",
-            "n_bytes",
-        ).alias("meta"),
-    )
+    flat = _map_rows(documents, (id_col,), row, _IMAGE_FLAT_SCHEMA)
+    return _with_meta(flat, "image", "png", "width", "height", "n_bytes")
 
 
 def decode_png_stats(
@@ -361,14 +381,10 @@ def decode_png_stats(
     sides (guide §4.1: pass the columns the plan needs; §2.4: remove
     the join's exchanges outright).
     """
-    from gcp_food_delivery_data_pipeline_spark.functions.png import (
-        decode_png_gray,
-    )
 
     # A passthrough name that collides with a stats column would
-    # silently overwrite the stats list while the schema appends a
-    # duplicate field; one equal to id/payload duplicates the select
-    # (ADVICE r15) — refuse both.
+    # give the output two fields of one name; one equal to id/payload
+    # duplicates the select (ADVICE r15) — refuse both.
     reserved = {"doc_id", "width", "height", "mean_px", id_col, payload_col}
     dup = sorted(set(passthrough) & reserved)
     if dup:
@@ -377,32 +393,14 @@ def decode_png_stats(
             f"payload columns: {dup}"
         )
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, means = [], [], [], []
-            for doc_id, p in zip(pdf[id_col], pdf[payload_col]):
-                w, h, pixels = decode_png_gray(bytes(p))
-                ids.append(doc_id)
-                ws.append(w)
-                hs.append(h)
-                means.append(sum(pixels) / (w * h))
-            out = {
-                "doc_id": ids, "width": ws, "height": hs, "mean_px": means
-            }
-            for c in passthrough:
-                # row-aligned with the id/stat lists: the loop above
-                # consumes pdf rows in order and never drops any
-                out[c] = list(pdf[c])
-            yield pd.DataFrame(out)
+    def stats(p):
+        w, h, pixels = decode_png_gray(p)
+        return w, h, sum(pixels) / (w * h)
 
-    src = ensure_min_partitions(
-        df.select(id_col, payload_col, *passthrough)
-    )
     schema = StructType(
-        PNG_STATS_SCHEMA.fields
-        + [df.schema[c] for c in passthrough]
+        PNG_STATS_SCHEMA.fields + [df.schema[c] for c in passthrough]
     )
-    return src.mapInPandas(process, schema)
+    return _decode_rows(df, id_col, payload_col, stats, schema, passthrough)
 
 
 PNG_RGB_STATS_SCHEMA = StructType(
@@ -432,61 +430,20 @@ def attach_png_rgb_payload(
     (the "left" reference 3 bytes back — the branch the grayscale
     codec never takes).
     """
-    from gcp_food_delivery_data_pipeline_spark.functions.png import (
-        encode_png_rgb,
-    )
 
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("n_bytes", LongType()),
-        ]
-    )
+    def row(doc_id):
+        i = int(doc_id)
+        w, h = i % 12 + 1, i % 9 + 1
+        cg, cb = i % 180, i % 80
+        pixels = bytearray()
+        for y in range(h):
+            for x in range(w):
+                pixels += bytes((cg + x, cg + y, cb + x + y))
+        png = encode_png_rgb(w, h, bytes(pixels), filter_mode="cycle")
+        return [(i, png, w, h, len(png))]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads, ws, hs, sizes = [], [], [], [], []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w, h = i % 12 + 1, i % 9 + 1
-                cg, cb = i % 180, i % 80
-                pixels = bytearray()
-                for y in range(h):
-                    for x in range(w):
-                        pixels += bytes((cg + x, cg + y, cb + x + y))
-                png = encode_png_rgb(w, h, bytes(pixels), filter_mode="cycle")
-                ids.append(i)
-                payloads.append(png)
-                ws.append(w)
-                hs.append(h)
-                sizes.append(len(png))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "width": ws,
-                    "height": hs,
-                    "n_bytes": sizes,
-                }
-            )
-
-    flat = ensure_min_partitions(documents.select(id_col)).mapInPandas(
-        gen, out_schema
-    )
-    return flat.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("png").alias("format"),
-            "width",
-            "height",
-            "n_bytes",
-        ).alias("meta"),
-    )
+    flat = _map_rows(documents, (id_col,), row, _IMAGE_FLAT_SCHEMA)
+    return _with_meta(flat, "image", "png", "width", "height", "n_bytes")
 
 
 def decode_png_rgb_stats(
@@ -498,35 +455,13 @@ def decode_png_rgb_stats(
     mean_b)`` — the color sibling of ``decode_png_stats``, same Arrow
     batching and payload-drop-before-shuffle shape.
     """
-    from gcp_food_delivery_data_pipeline_spark.functions.png import (
-        decode_png_rgb,
-    )
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, mr, mg, mb = [], [], [], [], [], []
-            for doc_id, p in zip(pdf[id_col], pdf[payload_col]):
-                w, h, pixels = decode_png_rgb(bytes(p))
-                n = w * h
-                ids.append(doc_id)
-                ws.append(w)
-                hs.append(h)
-                mr.append(sum(pixels[0::3]) / n)
-                mg.append(sum(pixels[1::3]) / n)
-                mb.append(sum(pixels[2::3]) / n)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": ws,
-                    "height": hs,
-                    "mean_r": mr,
-                    "mean_g": mg,
-                    "mean_b": mb,
-                }
-            )
+    def stats(p):
+        w, h, pixels = decode_png_rgb(p)
+        n = w * h
+        return (w, h, *(sum(pixels[c::3]) / n for c in range(3)))
 
-    src = ensure_min_partitions(df.select(id_col, payload_col))
-    return src.mapInPandas(process, PNG_RGB_STATS_SCHEMA)
+    return _decode_rows(df, id_col, payload_col, stats, PNG_RGB_STATS_SCHEMA)
 
 
 WAV_STATS_SCHEMA = StructType(
@@ -549,9 +484,6 @@ def attach_wav_payload(
     stdlib ``wave`` writer (``functions.wav``), so the bytes are
     standards-compliant RIFF/PCM any audio tool opens.
     """
-    from gcp_food_delivery_data_pipeline_spark.functions.wav import (
-        encode_wav_pcm16,
-    )
 
     out_schema = StructType(
         [
@@ -562,40 +494,16 @@ def attach_wav_payload(
         ]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads, rates, sizes = [], [], [], []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                n, rate, c = i % 50 + 10, 8000 + (i % 3) * 4000, i % 1000
-                wav = encode_wav_pcm16([c + k for k in range(n)], rate)
-                ids.append(i)
-                payloads.append(wav)
-                rates.append(rate)
-                sizes.append(len(wav))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "sample_rate": rates,
-                    "n_bytes": sizes,
-                }
-            )
+    def row(doc_id):
+        i = int(doc_id)
+        n, rate, c = i % 50 + 10, 8000 + (i % 3) * 4000, i % 1000
+        wav = encode_wav_pcm16([c + k for k in range(n)], rate)
+        return [(i, wav, rate, len(wav))]
 
-    flat = ensure_min_partitions(documents.select(id_col)).mapInPandas(
-        gen, out_schema
-    )
-    return flat.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.lit("wav").alias("format"),
-            F.col("sample_rate").alias("width"),
-            F.lit(1).alias("height"),
-            "n_bytes",
-        ).alias("meta"),
-    )
+    flat = _map_rows(documents, (id_col,), row, out_schema)
+    width = F.col("sample_rate").alias("width")
+    height = F.lit(1).alias("height")
+    return _with_meta(flat, "audio", "wav", width, height, "n_bytes")
 
 
 def decode_wav_stats(
@@ -607,30 +515,12 @@ def decode_wav_stats(
     sum_samples)`` — the audio twin of ``decode_png_stats``, same
     Arrow batching, same payload-drop-before-shuffle shape.
     """
-    from gcp_food_delivery_data_pipeline_spark.functions.wav import (
-        decode_wav_pcm16,
-    )
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rates, counts, sums = [], [], [], []
-            for doc_id, p in zip(pdf[id_col], pdf[payload_col]):
-                rate, n, samples = decode_wav_pcm16(bytes(p))
-                ids.append(doc_id)
-                rates.append(rate)
-                counts.append(n)
-                sums.append(sum(samples))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "sample_rate": rates,
-                    "n_samples": counts,
-                    "sum_samples": sums,
-                }
-            )
+    def stats(p):
+        rate, n, samples = decode_wav_pcm16(p)
+        return rate, n, sum(samples)
 
-    src = ensure_min_partitions(df.select(id_col, payload_col))
-    return src.mapInPandas(process, WAV_STATS_SCHEMA)
+    return _decode_rows(df, id_col, payload_col, stats, WAV_STATS_SCHEMA)
 
 
 GIF_STATS_SCHEMA = StructType(
@@ -640,6 +530,17 @@ GIF_STATS_SCHEMA = StructType(
         StructField("width", IntegerType()),
         StructField("height", IntegerType()),
         StructField("mean_px", DoubleType()),
+    ]
+)
+
+_GIF_FLAT_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("payload", BinaryType()),
+        StructField("n_frames", IntegerType()),
+        StructField("width", IntegerType()),
+        StructField("height", IntegerType()),
+        StructField("n_bytes", LongType()),
     ]
 )
 
@@ -654,67 +555,20 @@ def attach_gif_payload(
     wrap). Bytes are standards-compliant GIF89a any viewer animates;
     the arithmetic construction is what lets the oracle pin decode
     stats in closed form."""
-    from gcp_food_delivery_data_pipeline_spark.functions.gif import (
-        encode_gif_gray,
-    )
 
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-            StructField("n_frames", IntegerType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("n_bytes", LongType()),
+    def row(doc_id):
+        i = int(doc_id)
+        nf, w, h, c = i % 5 + 1, i % 10 + 1, i % 7 + 1, i % 150
+        frames = [
+            bytes(c + 10 * f + x + y for y in range(h) for x in range(w))
+            for f in range(nf)
         ]
-    )
+        gif = encode_gif_gray(w, h, frames)
+        return [(i, gif, nf, w, h, len(gif))]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads, nfs, ws, hs, sizes = [], [], [], [], [], []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                nf, w, h, c = i % 5 + 1, i % 10 + 1, i % 7 + 1, i % 150
-                frames = [
-                    bytes(
-                        c + 10 * f + x + y
-                        for y in range(h)
-                        for x in range(w)
-                    )
-                    for f in range(nf)
-                ]
-                gif = encode_gif_gray(w, h, frames)
-                ids.append(i)
-                payloads.append(gif)
-                nfs.append(nf)
-                ws.append(w)
-                hs.append(h)
-                sizes.append(len(gif))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "n_frames": nfs,
-                    "width": ws,
-                    "height": hs,
-                    "n_bytes": sizes,
-                }
-            )
-
-    flat = ensure_min_partitions(documents.select(id_col)).mapInPandas(
-        gen, out_schema
-    )
-    return flat.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("video").alias("media_type"),
-            F.lit("gif").alias("format"),
-            "n_frames",
-            "width",
-            "height",
-            "n_bytes",
-        ).alias("meta"),
+    flat = _map_rows(documents, (id_col,), row, _GIF_FLAT_SCHEMA)
+    return _with_meta(
+        flat, "video", "gif", "n_frames", "width", "height", "n_bytes"
     )
 
 
@@ -726,34 +580,13 @@ def decode_gif_stats(
     ``(doc_id, n_frames, width, height, mean_px)`` where ``mean_px``
     averages over all frames' pixels — the working form of the
     frame-sampling stage ``sample_frames`` fakes."""
-    from gcp_food_delivery_data_pipeline_spark.functions.gif import (
-        decode_gif_gray,
-    )
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nfs, ws, hs, means = [], [], [], [], []
-            for doc_id, p in zip(pdf[id_col], pdf[payload_col]):
-                w, h, frames = decode_gif_gray(bytes(p))
-                ids.append(doc_id)
-                nfs.append(len(frames))
-                ws.append(w)
-                hs.append(h)
-                means.append(
-                    sum(sum(f) for f in frames) / (w * h * len(frames))
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_frames": nfs,
-                    "width": ws,
-                    "height": hs,
-                    "mean_px": means,
-                }
-            )
+    def stats(p):
+        w, h, frames = decode_gif_gray(p)
+        mean = sum(sum(f) for f in frames) / (w * h * len(frames))
+        return len(frames), w, h, mean
 
-    src = ensure_min_partitions(df.select(id_col, payload_col))
-    return src.mapInPandas(process, GIF_STATS_SCHEMA)
+    return _decode_rows(df, id_col, payload_col, stats, GIF_STATS_SCHEMA)
 
 
 def attach_gif_scene_payload(
@@ -768,56 +601,23 @@ def attach_gif_scene_payload(
     contract as ``attach_gif_payload``: the bytes are real GIF89a,
     and the cut schedule is pure doc_id arithmetic the oracle
     replays."""
-    from gcp_food_delivery_data_pipeline_spark.functions.gif import (
-        encode_gif_gray,
-    )
 
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-            StructField("n_frames", IntegerType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads, nfs, ws, hs = [], [], [], [], []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                nf, w, h = i % 6 + 2, i % 10 + 1, i % 7 + 1
-                base = i % 40
-                frames = []
-                for f in range(nf):
-                    if f > 0:
-                        base += 25 if (i + f) % 3 == 0 else 2
-                    frames.append(
-                        bytes(
-                            base + x + y
-                            for y in range(h)
-                            for x in range(w)
-                        )
-                    )
-                ids.append(i)
-                payloads.append(encode_gif_gray(w, h, frames))
-                nfs.append(nf)
-                ws.append(w)
-                hs.append(h)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "n_frames": nfs,
-                    "width": ws,
-                    "height": hs,
-                }
+    def row(doc_id):
+        i = int(doc_id)
+        nf, w, h = i % 6 + 2, i % 10 + 1, i % 7 + 1
+        base = i % 40
+        frames = []
+        for f in range(nf):
+            if f > 0:
+                base += 25 if (i + f) % 3 == 0 else 2
+            frames.append(
+                bytes(base + x + y for y in range(h) for x in range(w))
             )
+        return [(i, encode_gif_gray(w, h, frames), nf, w, h)]
 
-    return ensure_min_partitions(documents.select(id_col)).mapInPandas(
-        gen, out_schema
-    )
+    # the GIF producer's flat columns without n_bytes
+    schema = StructType(_GIF_FLAT_SCHEMA.fields[:-1])
+    return _map_rows(documents, (id_col,), row, schema)
 
 
 SCENE_CUT_SCHEMA = StructType(
@@ -850,38 +650,18 @@ def gif_scene_cuts(
     payloads stay inside their partition — only the 4-column stats
     frame ever shuffles.
     """
-    from gcp_food_delivery_data_pipeline_spark.functions.gif import (
-        decode_gif_gray,
-    )
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nfs, cuts, jumps = [], [], [], []
-            for doc_id, p in zip(pdf[id_col], pdf[payload_col]):
-                w, h, frames = decode_gif_gray(bytes(p))
-                sums = [sum(f) for f in frames]
-                deltas = [
-                    abs(b - a) for a, b in zip(sums, sums[1:])
-                ]
-                ids.append(doc_id)
-                nfs.append(len(frames))
-                cuts.append(
-                    sum(1 for d in deltas if d > threshold_px * w * h)
-                )
-                jumps.append(
-                    max(deltas) // (w * h) if deltas else 0
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_frames": nfs,
-                    "n_cuts": cuts,
-                    "max_jump": jumps,
-                }
-            )
+    def stats(p):
+        w, h, frames = decode_gif_gray(p)
+        sums = [sum(f) for f in frames]
+        deltas = [abs(b - a) for a, b in zip(sums, sums[1:])]
+        return (
+            len(frames),
+            sum(1 for d in deltas if d > threshold_px * w * h),
+            max(deltas) // (w * h) if deltas else 0,
+        )
 
-    src = ensure_min_partitions(df.select(id_col, payload_col))
-    return src.mapInPandas(process, SCENE_CUT_SCHEMA)
+    return _decode_rows(df, id_col, payload_col, stats, SCENE_CUT_SCHEMA)
 
 
 PHASH_SCHEMA = StructType(
@@ -912,40 +692,20 @@ def phash_png(
     batching and payload-drop-before-shuffle shape as the decode
     stats; downstream grouping shuffles only (id, hash).
     """
-    from gcp_food_delivery_data_pipeline_spark.functions.png import (
-        decode_png_gray,
-    )
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, hashes = [], [], [], []
-            for doc_id, p in zip(pdf[id_col], pdf[payload_col]):
-                w, h, pixels = decode_png_gray(bytes(p))
-                xs = [(i * w) // 7 for i in range(7)]
-                ys = [(j * h) // 7 for j in range(7)]
-                samples = [
-                    pixels[y * w + x] for x in xs for y in ys
-                ]  # k = 7*i + j order
-                total = sum(samples)
-                hv = 0
-                for k, s in enumerate(samples):
-                    if 49 * s > total:
-                        hv |= 1 << k
-                ids.append(doc_id)
-                ws.append(w)
-                hs.append(h)
-                hashes.append(hv)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": ws,
-                    "height": hs,
-                    "phash": pd.Series(hashes, dtype="int64"),
-                }
-            )
+    def stats(p):
+        w, h, pixels = decode_png_gray(p)
+        xs = [(i * w) // 7 for i in range(7)]
+        ys = [(j * h) // 7 for j in range(7)]
+        samples = [pixels[y * w + x] for x in xs for y in ys]  # k = 7*i + j
+        total = sum(samples)
+        hv = 0
+        for k, s in enumerate(samples):
+            if 49 * s > total:
+                hv |= 1 << k
+        return w, h, hv
 
-    src = ensure_min_partitions(df.select(id_col, payload_col))
-    return src.mapInPandas(process, PHASH_SCHEMA)
+    return _decode_rows(df, id_col, payload_col, stats, PHASH_SCHEMA)
 
 
 def phash_groups(phashed: DataFrame) -> DataFrame:
@@ -998,42 +758,21 @@ def audio_frame_features(
     ``decode_wav_stats``: payload bytes never cross a shuffle, one
     output row per clip.
     """
-    from gcp_food_delivery_data_pipeline_spark.functions.wav import (
-        decode_wav_pcm16,
-    )
 
     if frame_size < 1:
         raise ValueError(
             f"audio_frame_features: frame_size must be >= 1, got {frame_size}"
         )
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nfr, mx, tot = [], [], [], []
-            for doc_id, p in zip(pdf[id_col], pdf[payload_col]):
-                _rate, n, samples = decode_wav_pcm16(bytes(p))
-                full = n // frame_size
-                if not full:
-                    continue
-                energies = [
-                    sum(
-                        v * v
-                        for v in samples[f * frame_size : (f + 1) * frame_size]
-                    )
-                    for f in range(full)
-                ]
-                ids.append(doc_id)
-                nfr.append(full)
-                mx.append(max(energies))
-                tot.append(sum(energies))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_frames": pd.Series(nfr, dtype="int32"),
-                    "max_frame_energy": pd.Series(mx, dtype="int64"),
-                    "total_energy": pd.Series(tot, dtype="int64"),
-                }
-            )
+    def stats(p):
+        _rate, n, samples = decode_wav_pcm16(p)
+        full = n // frame_size
+        if not full:
+            return None
+        energies = [
+            sum(v * v for v in samples[f * frame_size : (f + 1) * frame_size])
+            for f in range(full)
+        ]
+        return full, max(energies), sum(energies)
 
-    src = ensure_min_partitions(df.select(id_col, payload_col))
-    return src.mapInPandas(process, AUDIO_FRAME_SCHEMA)
+    return _decode_rows(df, id_col, payload_col, stats, AUDIO_FRAME_SCHEMA)

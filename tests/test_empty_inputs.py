@@ -376,3 +376,49 @@ def test_blocked_linkage_salted_on_empty(spark):
     assert blocked_linkage_salted(
         blk, blk, block_cols=["blk"], id_col="id", val_col="name"
     ).count() == 0
+
+
+def test_multimodal_ops_on_empty(spark, empty_docs):
+    """All 15 Arrow kernels of ``operators.multimodal`` give zero rows
+    with their declared schema on a zero-row input."""
+    import gcp_food_delivery_data_pipeline_spark.operators.multimodal as mm
+
+    meta = (
+        "meta:struct<media_type:string,format:string,{}width:int,"
+        "height:int,n_bytes:bigint>"
+    )
+    media = "struct<doc_id:bigint,payload:binary," + meta + ">"
+    image, video = media.format(""), media.format("n_frames:int,")
+    fake = mm.attach_fake_payload(empty_docs)
+    png = mm.attach_png_payload(empty_docs)
+    rgb = mm.attach_png_rgb_payload(empty_docs)
+    wav = mm.attach_wav_payload(empty_docs)
+    gif = mm.attach_gif_payload(empty_docs)
+    scene = mm.attach_gif_scene_payload(empty_docs)
+    cases = [
+        (mm.extract_features(fake), mm.FEATURE_SCHEMA.simpleString()),
+        (mm.resize_payload(fake, 4, 2), image),
+        (mm.sample_frames(fake), mm.FRAME_SCHEMA.simpleString()),
+        (png, image),
+        (mm.decode_png_stats(png), mm.PNG_STATS_SCHEMA.simpleString()),
+        (rgb, image),
+        (mm.decode_png_rgb_stats(rgb), mm.PNG_RGB_STATS_SCHEMA.simpleString()),
+        (wav, image),
+        (mm.decode_wav_stats(wav), mm.WAV_STATS_SCHEMA.simpleString()),
+        (gif, video),
+        (mm.decode_gif_stats(gif), mm.GIF_STATS_SCHEMA.simpleString()),
+        (
+            scene,
+            "struct<doc_id:bigint,payload:binary,n_frames:int,width:int,"
+            "height:int>",
+        ),
+        (mm.gif_scene_cuts(scene), mm.SCENE_CUT_SCHEMA.simpleString()),
+        (mm.phash_png(png), mm.PHASH_SCHEMA.simpleString()),
+        (
+            mm.audio_frame_features(wav),
+            mm.AUDIO_FRAME_SCHEMA.simpleString(),
+        ),
+    ]
+    for df, schema in cases:
+        assert df.schema.simpleString() == schema
+        assert df.count() == 0, schema

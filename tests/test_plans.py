@@ -965,9 +965,9 @@ def test_bounded_subtree_rule_rejects_join_smuggled_aggregate(spark):
 def test_plan_normalizer_drops_session_ids(plans):
     """PLANS.md is written through ``tools/gen_plans.normalize_plan``:
     two builds of one query in one session differ in their ids
-    (expression ids, ``plan_id``, checkpoint ``RDD[n]``) but normalize
-    to the same text, so a regeneration's diff shows only plans that
-    really changed."""
+    (expression ids, ``plan_id``, checkpoint ``RDD[n]``, lambda-variable
+    numbers) but normalize to the same text, so a regeneration's diff
+    shows only plans that really changed."""
     from tools.gen_plans import normalize_plan
 
     for name in ("q3_top_revenue", "d_containment"):
@@ -975,3 +975,12 @@ def test_plan_normalizer_drops_session_ids(plans):
         assert first != second, name
         assert normalize_plan(first) == normalize_plan(second), name
     assert "RDD[N]" in normalize_plan(plans("d_containment"))
+    # lambda variables are numbered by a process-wide counter, so a
+    # key's numbers shift whenever another lambda-bearing plan is built
+    # first; the normalizer writes them as x_N
+    first = plans("d_near_dup_pairs")
+    plans("d_span_dedup")
+    second = plans("d_near_dup_pairs")
+    assert "lambda x_" in first and first != second
+    assert normalize_plan(first) == normalize_plan(second)
+    assert "lambda x_N#N" in normalize_plan(first)

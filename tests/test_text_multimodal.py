@@ -416,6 +416,66 @@ def test_audio_frame_features_rejects_bad_frame_size(spark):
         audio_frame_features(df, frame_size=0)
 
 
+def test_decoders_keep_null_payload_rows_with_null_stats(spark):
+    """One NULL-payload rule for the seven decoders: a NULL payload
+    keeps its doc_id (and passthrough columns) with NULL stats next to
+    a decoded row, instead of failing the job."""
+    import gcp_food_delivery_data_pipeline_spark.operators.multimodal as mm
+
+    docs = spark.createDataFrame([(10,)], "doc_id long")  # 20 wav samples
+    null_row = spark.createDataFrame(
+        [(2, None, "missing")], "doc_id long, payload binary, kind string"
+    )
+
+    def with_null(media):
+        media = media.select("doc_id", "payload", F.lit("png").alias("kind"))
+        return media.unionByName(null_row)
+
+    cases = [
+        (mm.decode_png_stats, mm.attach_png_payload),
+        (mm.decode_png_rgb_stats, mm.attach_png_rgb_payload),
+        (mm.decode_wav_stats, mm.attach_wav_payload),
+        (mm.decode_gif_stats, mm.attach_gif_payload),
+        (mm.gif_scene_cuts, mm.attach_gif_scene_payload),
+        (mm.phash_png, mm.attach_png_payload),
+        (mm.audio_frame_features, mm.attach_wav_payload),
+    ]
+    for decode, attach in cases:
+        out = decode(with_null(attach(docs))).collect()
+        rows = {r[0]: tuple(r)[1:] for r in out}
+        assert set(rows) == {10, 2}, decode.__name__
+        assert all(v is not None for v in rows[10]), decode.__name__
+        assert all(v is None for v in rows[2]), decode.__name__
+
+    carried = mm.decode_png_stats(
+        with_null(mm.attach_png_payload(docs)), passthrough=("kind",)
+    )
+    rows = {r.doc_id: tuple(r) for r in carried.collect()}
+    assert rows[2] == (2, None, None, None, "missing")
+    assert rows[10][-1] == "png"
+
+
+def test_map_rows_keeps_bigints_exact_next_to_nulls(spark):
+    """``_map_rows`` builds each batch object-typed: a NULL and 2**60+1
+    in one bigint column come back exact (a float64 column would round
+    the value to 1.152921504606847e18)."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from gcp_food_delivery_data_pipeline_spark.operators.multimodal import (
+        _map_rows,
+    )
+
+    big = 2**60 + 1
+    schema = StructType(
+        [StructField("k", LongType()), StructField("v", LongType())]
+    )
+    df = spark.createDataFrame([(1,)], "k long")
+    # both tuples come from one input row, so they share one batch
+    out = _map_rows(df, ("k",), lambda k: [(k, big), (k, None)], schema)
+    assert sorted(
+        (r.v is None, r.v) for r in out.collect()
+    ) == [(False, big), (True, None)]
+
 def test_distinctive_terms_golden(spark):
     """A term concentrated in one source must rank first there with
     the hand-computed smoothed rate ratio; terms below min_count are

@@ -5,8 +5,9 @@ Usage: python tools/gen_plans.py [sf_dir]
 
 Plans are written through ``normalize_plan``, which replaces the ids a
 plan gets from the session that built it (expression ids, ``plan_id=``,
-``RDD[n]``, explain operator and codegen-stage numbers) with ``N``, so
-a regeneration's diff shows only plans that really changed.
+``RDD[n]``, explain operator and codegen-stage numbers, lambda-variable
+numbers) with ``N``, so a regeneration's diff shows only plans that
+really changed.
 """
 
 from __future__ import annotations
@@ -160,6 +161,8 @@ _RUN_IDS = [
     (re.compile(r"(operator id ?[:=] ?)\d+"), r"\1N"),
     (re.compile(r"\*\(\d+\)"), "*(N)"),
     (re.compile(r"codegen id : \d+"), "codegen id : N"),
+    # lambda variables take a process-wide counter: "lambda x_36#N"
+    (re.compile(r"(lambda [A-Za-z]+)_\d+\b"), r"\1_N"),
 ]
 
 
@@ -181,7 +184,8 @@ def main() -> None:
         "is the",
         "evidence for the corresponding SCALE.md claim. Session-dependent "
         "ids (expression",
-        "ids, `plan_id`, `RDD[n]`, operator and codegen numbers) are "
+        "ids, `plan_id`, `RDD[n]`, operator, codegen and lambda-variable "
+        "numbers) are",
         "written as `N`, the",
         "scale-factor directory as `$SF_DIR`.\n",
     ]
