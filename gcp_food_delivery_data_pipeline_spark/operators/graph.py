@@ -16,10 +16,17 @@ Scale notes (100 TB / 1000 executors):
   map-side combinable. Rank state is one row per node. Measured at
   sf0.1: 10 PageRank rounds 10.8 s → 5.2 s from this plus the
   skip-redundant-copy rule below, identical ranks.
+* ``pagerank`` and ``personalized_pagerank`` run ONE recursion,
+  ``_rank_loop`` (per round: ``base + damping * coalesce(in-flow, 0)``
+  per node, where ``base`` is a literal for PageRank and a per-node
+  seed column for PPR), over the static tables ``_rank_inputs``
+  builds. Both drop an edge with a NULL endpoint, as
+  ``label_propagation`` does: a NULL id is not a node, so it neither
+  holds rank nor votes.
 * Lineage cuts (``localCheckpoint(eager=True)``) bound plan depth and
   memory, and each costs at least one Spark job, so their cadence
   follows how often a round reads the loop state. State read ONCE
-  per round (``pagerank`` / ``personalized_pagerank`` ranks,
+  per round (``_rank_loop`` ranks,
   ``label_propagation`` labels) is cut every 3rd round and the last
   (``hits_bipartite``, two join+agg layers per round: every 2nd);
   state read more than once per round (``kcore`` edges, the
@@ -35,19 +42,16 @@ Scale notes (100 TB / 1000 executors):
   (result-identical by construction; pinned by
   tests/test_checkpoint_modes.py).
 * When the caller hands in an ALREADY-materialized edge list (a
-  narrow projection over a checkpointed RDD — e.g. a memoized shared
-  edge table), ``_materialize`` skips the redundant second copy under
-  ``'local'``: re-deriving a projection of a materialized RDD is free,
-  copying millions of edge rows again is not. Under ``'reliable'`` the
-  skip is off: a caller-materialized view's blocks may be
-  executor-local, and the deployment asked for every cut to be
-  durable, which costs one copy.
+  narrow view over a checkpointed RDD — e.g. a memoized shared edge
+  table), ``_materialize`` skips the redundant second copy under
+  ``'local'``: re-deriving a view of a materialized RDD is free,
+  copying millions of edge rows again is not.
 * No driver-side collection: the driver holds loop control only.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gcp_food_delivery_data_pipeline_spark.checkpointing import (
@@ -109,6 +113,85 @@ def _reads_materialized_blocks(df: DataFrame) -> bool:
     return True
 
 
+def _rank_inputs(
+    name: str,
+    edges: DataFrame,
+    damping: float,
+    iterations: int,
+    src: str,
+    dst: str,
+    weight: str | None,
+) -> tuple[DataFrame, DataFrame]:
+    """Validate a rank call and build its two static tables, each
+    checkpointed hash-partitioned on its per-round join key: the
+    fraction table ``(_src, _dst, _frac)`` (edge weight over the
+    source's total out-weight) and the node table ``(node)``."""
+    if not 0.0 < damping < 1.0:
+        raise ValueError(f"{name}: damping must be in (0,1), got {damping}")
+    if iterations < 1:
+        raise ValueError(f"{name}: need at least one iteration")
+    w = F.col(weight).cast("double") if weight else F.lit(1.0)
+    e = edges.select(
+        F.col(src).alias("_src"), F.col(dst).alias("_dst"), w.alias("_w")
+    ).dropna(subset=["_src", "_dst"])
+    # One edge copy before deriving frac and nodes, or each eager
+    # derivation re-runs the caller's edge pipeline (profiled at 2x a
+    # co-occurrence self-join). The NULL drop is a narrow Filter, so a
+    # caller's already-materialized edge view still skips the copy.
+    e = _materialize(e)
+    out_w = e.groupBy("_src").agg(F.sum("_w").alias("_out"))
+    # partitioned on the per-round join key: localCheckpoint preserves
+    # the hash partitioning, so no round ever exchanges the edge side
+    frac = _ckpt(
+        e.join(out_w, "_src")
+        .select("_src", "_dst", (F.col("_w") / F.col("_out")).alias("_frac"))
+        .repartition("_src")
+    )
+    nodes = _ckpt(
+        e.select(F.col("_src").alias("node"))
+        .unionByName(e.select(F.col("_dst").alias("node")))
+        .distinct()
+        .repartition("node")
+    )
+    return frac, nodes
+
+
+def _rank_loop(
+    frac: DataFrame,
+    nodes: DataFrame,
+    base: Column,
+    ranks: DataFrame,
+    damping: float,
+    iterations: int,
+) -> DataFrame:
+    """The module's one PageRank recursion: each round every node of
+    ``nodes`` gets ``base + damping * in-flow``, the in-flow summing
+    ``_frac * rank`` over its in-edges — one join of the static
+    fraction table with the rank frame plus one combinable
+    aggregation. ``base`` is a column of ``nodes`` (or a literal);
+    ``ranks`` holds the start ``(node, rank)``. State is cut every 3rd
+    round (a sweep measured 2/3/5 within noise; no cut at all was
+    slower from plan depth); the last round comes back UNCUT so the
+    caller can filter before its final pin."""
+    for it in range(iterations):
+        contribs = (
+            frac.join(ranks, frac["_src"] == ranks["node"])
+            .select(
+                F.col("_dst").alias("node"),
+                (F.col("_frac") * F.col("rank")).alias("_c"),
+            )
+            .groupBy("node")
+            .agg(F.sum("_c").alias("_in"))
+        )
+        rank = base + F.lit(damping) * F.coalesce("_in", F.lit(0.0))
+        ranks = nodes.join(contribs, "node", "left").select(
+            "node", rank.alias("rank")
+        )
+        if it % 3 == 2 and it < iterations - 1:
+            ranks = _ckpt(ranks)
+    return ranks
+
+
 def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
@@ -120,77 +203,31 @@ def pagerank(
     """Weighted PageRank with a fixed iteration count. Returns
     ``(node, rank)`` where ranks sum to ~1 over the node set (exactly
     1 when every node has at least one out-edge — true for symmetric
-    edge lists).
+    edge lists). An edge with a NULL endpoint is dropped.
 
-    Contribution fractions (edge weight over the source's total
-    out-weight) are precomputed ONCE and reused every round, so the
-    per-iteration work is one join + one aggregation. A fixed
-    ``iterations`` (rather than a convergence test) keeps the result
-    a pure function of the input — which is what lets an unrolled SQL
-    oracle reproduce it.
+    The rounds are ``_rank_loop``'s. A fixed ``iterations`` (rather
+    than a convergence test) keeps the result a pure function of the
+    input — which is what lets an unrolled SQL oracle reproduce it.
     """
-    if not 0.0 < damping < 1.0:
-        raise ValueError(f"pagerank: damping must be in (0,1), got {damping}")
-    if iterations < 1:
-        raise ValueError("pagerank: need at least one iteration")
-    w = F.col(weight).cast("double") if weight else F.lit(1.0)
-    e = edges.select(
-        F.col(src).alias("_src"), F.col(dst).alias("_dst"), w.alias("_w")
-    )
-    # Materialize the edge list ONCE before deriving frac and nodes:
-    # both derive from e, and without this checkpoint each eager
-    # derivation re-runs the caller's (possibly expensive) edge
-    # pipeline — profiled at 2x a full co-occurrence self-join here.
-    # (_materialize skips the copy when the caller's edges are
-    # already a view over a checkpointed RDD.)
-    e = _materialize(e)
-    out_w = e.groupBy("_src").agg(F.sum("_w").alias("_out"))
-    frac = (
-        e.join(out_w, "_src")
-        .select("_src", "_dst", (F.col("_w") / F.col("_out")).alias("_frac"))
-    )
-    # cache the (static) fraction table ALREADY PARTITIONED on the
-    # per-round join key: localCheckpoint preserves the hash
-    # partitioning, so no iteration ever exchanges the edge side
-    frac = _ckpt(frac.repartition("_src"))
-    nodes = _ckpt(
-        e.select(F.col("_src").alias("node"))
-        .unionByName(e.select(F.col("_dst").alias("node")))
-        .distinct()
-        .repartition("node")
+    frac, nodes = _rank_inputs(
+        "pagerank", edges, damping, iterations, src, dst, weight
     )
     n = nodes.count()
-    base = (1.0 - damping) / n
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    for it in range(iterations):
-        contribs = (
-            frac.join(ranks, frac["_src"] == ranks["node"])
-            .select(
-                F.col("_dst").alias("node"),
-                (F.col("_frac") * F.col("rank")).alias("_c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("_c").alias("_in"))
-        )
-        ranks = nodes.join(contribs, "node", "left").select(
-            "node",
-            (
-                F.lit(base)
-                + F.lit(damping) * F.coalesce("_in", F.lit(0.0))
-            ).alias("rank"),
-        )
-        # Checkpoint every 3rd round (and the last): lineage stays
-        # bounded at <= 3 join+agg rounds, but the loop pays a third
-        # of the materializations of the original per-round eager
-        # checkpoint (round-5 profiling: 10x checkpoint cost dominated
-        # the wall time at small SF; cadence sweep this round measured
-        # 2/3/5 within noise of each other and 10 — no checkpoints
-        # until the end — slower again from plan-depth analysis cost).
-        # Checkpoint frequency never changes the arithmetic — only
-        # where the plan is cut.
-        if it % 3 == 2 or it == iterations - 1:
-            ranks = _ckpt(ranks)
-    return ranks
+    base = F.lit((1.0 - damping) / n)
+    return _ckpt(_rank_loop(frac, nodes, base, ranks, damping, iterations))
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Canonical undirected edges ``(_a, _b)`` with ``_a < _b``: each
+    pair once whichever direction(s) it arrived in, self-loops
+    dropped."""
+    a, b = F.col(src), F.col(dst)
+    return (
+        edges.select(F.least(a, b).alias("_a"), F.greatest(a, b).alias("_b"))
+        .filter(F.col("_a") != F.col("_b"))
+        .distinct()
+    )
 
 
 def triangle_count(
@@ -212,14 +249,7 @@ def triangle_count(
     (noted here because id-ordering is what the oracle mirrors).
     All three joins are keyed equi-joins; nothing is all-pairs.
     """
-    a, b = F.col(src), F.col(dst)
-    e = (
-        edges.select(
-            F.least(a, b).alias("_a"), F.greatest(a, b).alias("_b")
-        )
-        .filter(F.col("_a") != F.col("_b"))
-        .distinct()
-    )
+    e = _undirected(edges, src, dst)
     wedges = (
         e.alias("e1")
         .join(e.alias("e2"), F.col("e1._b") == F.col("e2._a"))
@@ -455,15 +485,7 @@ def link_prediction_scores(
     production refinement (degree-capped middle nodes) drops hubs
     that contribute O(deg²) wedges of near-zero jaccard.
     """
-    a, b = F.col(src), F.col(dst)
-    e = (
-        edges.select(
-            F.least(a, b).alias("_a"), F.greatest(a, b).alias("_b")
-        )
-        .filter(F.col("_a") != F.col("_b"))
-        .distinct()
-    )
-    e = _ckpt(e)
+    e = _ckpt(_undirected(edges, src, dst))
     # symmetric adjacency (node, neighbor) for wedges + degrees
     adj = e.select(
         F.col("_a").alias("node"), F.col("_b").alias("nb")
@@ -614,39 +636,14 @@ def personalized_pagerank(
     one-column DataFrame of node ids; ranks start at 1/|S| on seeds
     (0 elsewhere) and every round adds (1-damping)/|S| to seeds only.
     Nodes unreachable from the seed set stay at exactly 0.0 and are
-    dropped from the output.
+    dropped from the output. An edge with a NULL endpoint is dropped.
 
-    Same fixed-iteration / unrolled-oracle contract and the same
-    per-round shape as ``pagerank``: one keyed join of the static
-    fraction table with the rank frame + one combinable aggregation;
-    the seed base joins in keyed on node (the seed frame is tiny and
-    broadcasts). ``localCheckpoint`` cadence bounds lineage.
+    The same recursion as ``pagerank`` (``_rank_loop``) with a
+    per-node teleport base: seeding every node gives ``pagerank``'s
+    ranks bit for bit.
     """
-    if not 0.0 < damping < 1.0:
-        raise ValueError(
-            f"personalized_pagerank: damping must be in (0,1), got {damping}"
-        )
-    if iterations < 1:
-        raise ValueError("personalized_pagerank: need at least one iteration")
-    w = F.col(weight).cast("double") if weight else F.lit(1.0)
-    e = _materialize(
-        edges.select(
-            F.col(src).alias("_src"), F.col(dst).alias("_dst"), w.alias("_w")
-        )
-    )
-    out_w = e.groupBy("_src").agg(F.sum("_w").alias("_out"))
-    # static tables checkpointed pre-partitioned on their per-round
-    # join keys (see module docstring) — no edge-side exchange per round
-    frac = _ckpt(
-        e.join(out_w, "_src")
-        .select("_src", "_dst", (F.col("_w") / F.col("_out")).alias("_frac"))
-        .repartition("_src")
-    )
-    nodes = _ckpt(
-        e.select(F.col("_src").alias("node"))
-        .unionByName(e.select(F.col("_dst").alias("node")))
-        .distinct()
-        .repartition("node")
+    frac, nodes = _rank_inputs(
+        "personalized_pagerank", edges, damping, iterations, src, dst, weight
     )
     seed_nodes = _ckpt(seeds.toDF("node").join(nodes, "node"))
     n_seeds = seed_nodes.count()
@@ -655,48 +652,21 @@ def personalized_pagerank(
             "personalized_pagerank: no seed is a node of the graph"
         )
     base = (1.0 - damping) / n_seeds
-    seed_base = seed_nodes.select("node", F.lit(base).alias("_base"))
-    # Fold the (static) per-node teleport base into the checkpointed
-    # node table ONCE instead of broadcast-joining seed_base in every
-    # round: the loop's rank update becomes the same single keyed
-    # left join as plain pagerank's, and the folded table keeps the
-    # node hash-partitioning. Arithmetic identical — the round still
-    # computes coalesced_base + damping * coalesced_in.
+    # Fold the static per-node teleport base and start rank into the
+    # checkpointed node table ONCE: the round's rank update stays one
+    # keyed left join, and the folded table keeps the node
+    # hash-partitioning.
+    seed_cols = seed_nodes.select(
+        "node", F.lit(base).alias("_base"), F.lit(1.0 / n_seeds).alias("_r0")
+    )
     nodes_b = _ckpt(
-        nodes.join(F.broadcast(seed_base), "node", "left")
-        .select(
-            "node", F.coalesce("_base", F.lit(0.0)).alias("_base")
-        )
+        nodes.join(F.broadcast(seed_cols), "node", "left")
+        .fillna(0.0, subset=["_base", "_r0"])
         .repartition("node")
     )
-    ranks = nodes_b.join(
-        seed_nodes.select("node", F.lit(1.0 / n_seeds).alias("_r")),
-        "node",
-        "left",
-    ).select("node", F.coalesce("_r", F.lit(0.0)).alias("rank"))
-    for it in range(iterations):
-        contribs = (
-            frac.join(ranks, frac["_src"] == ranks["node"])
-            .select(
-                F.col("_dst").alias("node"),
-                (F.col("_frac") * F.col("rank")).alias("_c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("_c").alias("_in"))
-        )
-        ranks = nodes_b.join(contribs, "node", "left").select(
-            "node",
-            (
-                F.col("_base")
-                + F.lit(damping) * F.coalesce("_in", F.lit(0.0))
-            ).alias("rank"),
-        )
-        last = it == iterations - 1
-        if last:
-            # Drop unreachable nodes BEFORE the final pin: the pin
-            # then materializes strictly fewer rows, and the frame
-            # the caller holds is the pin itself.
-            ranks = ranks.filter(F.col("rank") > 0.0)
-        if it % 3 == 2 or last:
-            ranks = _ckpt(ranks)
-    return ranks
+    r0 = nodes_b.select("node", F.col("_r0").alias("rank"))
+    ranks = _rank_loop(frac, nodes_b, F.col("_base"), r0, damping, iterations)
+    # Drop unreachable nodes BEFORE the final pin: the pin then
+    # materializes strictly fewer rows, and the frame the caller
+    # holds is the pin itself.
+    return _ckpt(ranks.filter(F.col("rank") > 0.0))

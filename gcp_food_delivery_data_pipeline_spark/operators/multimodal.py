@@ -251,7 +251,8 @@ def resize_payload(
     target-determined, content is source-determined. Output payload
     size is FIXED per call — downstream batch sizing
     (maxRecordsPerFile, Arrow batch bytes) can rely on it, which is the
-    property a real thumbnailing stage is deployed for at scale.
+    property a real thumbnailing stage is deployed for at scale. A NULL
+    ``meta`` keeps its row, with NULL ``media_type`` and ``format``.
     """
     n_out = width * height
 
@@ -260,7 +261,9 @@ def resize_payload(
             resized = bytes(n_out)
         else:
             resized = (bytes(p) * (n_out // len(p) + 1))[:n_out]
-        kind, fmt = meta["media_type"], meta["format"]
+        kind, fmt = (None, None) if meta is None else (
+            meta["media_type"], meta["format"]
+        )
         return [(doc_id, resized, kind, fmt, width, height, n_out)]
 
     flat = _map_rows(df, (id_col, "payload", "meta"), row, RESIZE_FLAT_SCHEMA)

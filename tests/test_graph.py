@@ -486,6 +486,85 @@ def test_personalized_pagerank_validates_seeds(spark):
         personalized_pagerank(edges, no_seed)
 
 
+def test_rank_operators_drop_edges_with_a_null_endpoint(spark):
+    """A NULL id is not a node: ``pagerank`` and
+    ``personalized_pagerank`` over edges with NULL endpoints return the
+    ranks of the same graph without those edges — no ``node=NULL``
+    row, and PageRank's ranks still sum to 1."""
+    from gcp_food_delivery_data_pipeline_spark.operators.graph import (
+        personalized_pagerank,
+    )
+
+    pairs = [(1, 2), (2, 1), (2, 3), (3, 2)]
+    schema = "src long, dst long"
+    dirty = spark.createDataFrame(pairs + [(3, None), (None, 1)], schema)
+    clean = spark.createDataFrame(pairs, schema)
+    seeds = spark.createDataFrame([(1,)], "node long")
+
+    def ranks(df):
+        return {r.node: r.rank for r in df.collect()}
+
+    got = ranks(pagerank(dirty))
+    assert set(got) == {1, 2, 3}
+    assert got == ranks(pagerank(clean))
+    assert abs(sum(got.values()) - 1.0) < 1e-12
+    got = ranks(personalized_pagerank(dirty, seeds))
+    assert set(got) == {1, 2, 3}
+    assert got == ranks(personalized_pagerank(clean, seeds))
+
+
+def test_personalized_pagerank_seeded_everywhere_is_pagerank(spark):
+    """PPR is PageRank's recursion with a per-node teleport base:
+    seeded with every node, its ranks equal ``pagerank``'s row for row
+    in exact doubles. Each node has at most two in-edges, so every
+    round's in-flow sum is independent of summation order."""
+    from gcp_food_delivery_data_pipeline_spark.operators.graph import (
+        personalized_pagerank,
+    )
+
+    e = spark.createDataFrame(
+        [(1, 2, 1.0), (2, 1, 2.0), (2, 3, 1.0), (3, 1, 1.0), (4, 3, 3.0),
+         (3, 4, 0.5)],
+        "src long, dst long, w double",
+    )
+    every = e.select(F.col("src").alias("node")).distinct()
+    pr = sorted(pagerank(e, iterations=8, weight="w").collect())
+    ppr = personalized_pagerank(e, every, iterations=8, weight="w")
+    assert sorted(ppr.collect()) == pr
+    assert len(pr) == 4
+
+
+def test_rank_operators_lineage_cuts_are_pinned(spark, monkeypatch):
+    """The shared rank loop adds no cut: ``pagerank(iterations=10)``
+    cuts 7 times (edge copy, fractions, nodes, rounds 3/6/9 and the
+    last) and ``personalized_pagerank(iterations=8)`` 8 times (edge
+    copy, fractions, nodes, seeds, the seed-folded node table, rounds
+    3/6 and the last). An edge view over already-materialized blocks
+    skips the edge copy, NULL-endpoint filter included."""
+    from gcp_food_delivery_data_pipeline_spark.operators import graph
+
+    calls = []
+    real_ckpt = graph._ckpt
+
+    def counting_ckpt(df):
+        calls.append(1)
+        return real_ckpt(df)
+
+    monkeypatch.setattr(graph, "_ckpt", counting_ckpt)
+    e = spark.createDataFrame(
+        [(1, 2), (2, 1), (2, 3), (3, 1)], "src long, dst long"
+    )
+    seeds = spark.createDataFrame([(1,)], "node long")
+    graph.pagerank(e, iterations=10).count()
+    assert len(calls) == 7
+    calls.clear()
+    graph.personalized_pagerank(e, seeds, iterations=8).count()
+    assert len(calls) == 8
+    calls.clear()
+    graph.pagerank(real_ckpt(e).select("src", "dst"), iterations=10).count()
+    assert len(calls) == 6
+
+
 def test_materialize_verifies_rdd_state_not_node_type(spark):
     """A LogicalRDD leaf alone must NOT skip the checkpoint: frames
     built via spark.createDataFrame / df.rdd round-trips analyze to

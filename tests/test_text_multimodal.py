@@ -177,6 +177,31 @@ def test_resize_payload_cycles_bytes(multimodal):
     assert out[1].meta.media_type == "image"
 
 
+def test_resize_payload_keeps_null_meta_row(multimodal):
+    """A NULL ``meta`` keeps its row next to a normal one: the payload
+    is resized as usual, the target size is filled in, and
+    ``media_type`` / ``format`` come back NULL."""
+    from gcp_food_delivery_data_pipeline_spark.operators.multimodal import (
+        resize_payload,
+    )
+
+    null_meta = multimodal.filter(F.col("doc_id") == 1).select(
+        F.lit(99).cast("long").alias("doc_id"),
+        "payload",
+        F.lit(None).cast(multimodal.schema["meta"].dataType).alias("meta"),
+    )
+    out = {
+        r.doc_id: r
+        for r in resize_payload(multimodal.unionByName(null_meta), 4, 2)
+        .collect()
+    }
+    assert bytes(out[99].payload) == bytes(out[1].payload)
+    m = out[99].meta
+    assert (m.media_type, m.format) == (None, None)
+    assert (m.width, m.height, m.n_bytes) == (4, 2, 8)
+    assert out[1].meta.media_type == "image"
+
+
 def test_sample_frames_even_split(multimodal):
     from gcp_food_delivery_data_pipeline_spark.operators.multimodal import (
         sample_frames,
