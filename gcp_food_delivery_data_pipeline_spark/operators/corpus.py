@@ -18,6 +18,20 @@ between "deduplicated documents" and "token stream on the trainer":
                           fixed-token-budget training bins (cumulative
                           sum over a deterministic order)
 
+The quota-sampling family — ``temperature_mix``, ``upsample_epochs``,
+``token_budget_mix`` and ``neyman_sample`` — is deterministic through
+three shared rules, defined once in two helpers:
+
+* ``_apportion``    — the key-sorted left-fold share normalizer and
+                      largest-remainder integer quotas (remainder DESC,
+                      key ASC); when every share is 0, quotas are
+                      proportional to the rows per key
+* ``_stable_order`` — the engine-stable per-key ``(md5(id), id)`` row
+                      order that picks the survivors (also used by
+                      ``resample_source_mix`` and ``length_buckets``)
+
+``__spark_entry__._quota_sql`` is ``_apportion``'s DuckDB twin.
+
 Everything is Column expressions over DataFrames: chunking explodes
 JVM-side, packing is a window aggregation, contamination is an
 equi-join — each shape survives a 1000-executor corpus. No UDFs.
@@ -25,7 +39,7 @@ equi-join — each shape survives a 1000-executor corpus. No UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from gcp_food_delivery_data_pipeline_spark.checkpointing import (
@@ -434,6 +448,108 @@ def pack_sequences(
     )
 
 
+# ---------------------------------------------------------------------------
+# quota sampling: one stable rank, one apportionment
+# ---------------------------------------------------------------------------
+
+
+def _stable_order(key_col: str, id_col: str) -> WindowSpec:
+    """Per-key engine-stable row order ``(md5(id), id)``: content-
+    independent, partition-layout-free and identical in DuckDB, which
+    writes it ``ORDER BY md5(CAST(id AS VARCHAR)), id``."""
+    return Window.partitionBy(key_col).orderBy(
+        F.md5(F.col(id_col).cast("string")), F.col(id_col)
+    )
+
+
+def _temperature(op: str, alpha: float) -> Column:
+    """The n^alpha share of ``_ns``, after checking alpha is in [0, 1].
+    alpha = 0.5 uses ``sqrt``: IEEE requires it correctly rounded,
+    while ``pow`` may differ in the last ulp across libm builds."""
+    if not 0.0 <= alpha <= 1.0:
+        raise ValueError(f"{op}: alpha must be in [0,1], got {alpha}")
+    n = F.col("_ns").cast("double")
+    return F.sqrt(n) if alpha == 0.5 else F.pow(n, F.lit(alpha))
+
+
+def _apportion(
+    counts: DataFrame, key_col: str, share: Column, rows: Column, total: Column
+) -> DataFrame:
+    """Integer quotas of ``total`` over ``counts`` (one row per key):
+    ``counts``' columns plus ``_quota``. ``share`` and ``rows`` are
+    per-key columns; ``total`` is evaluated once over ``counts``
+    (a literal or an aggregate such as ``sum(_ns) div 2``).
+
+    The normalizer S folds the key-SORTED share list left to right
+    JVM-side (one summation order, so DuckDB's ordered ``list_reduce``
+    reproduces the doubles bit for bit). Targets are total * share / S,
+    or total * rows / sum(rows) when every share is 0. Quotas are the
+    targets' floors, plus one for the first (total - sum of floors)
+    keys by (remainder DESC, key). ``__spark_entry__._quota_sql`` is
+    the SQL twin."""
+    shared = counts.withColumn("_sh", share).withColumn("_nr", rows)
+    norm = shared.agg(
+        F.aggregate(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.struct(F.col(key_col), F.col("_sh")))
+                ),
+                lambda s: s["_sh"],
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ).alias("_S"),
+        F.sum("_nr").alias("_N"),
+        total.cast("long").alias("_total"),
+    )
+    t = F.col("_total").cast("double")
+    tgt = F.when(F.col("_S") > 0.0, t * F.col("_sh") / F.col("_S")).otherwise(
+        t * F.col("_nr") / F.col("_N")
+    )
+    based = (
+        shared.crossJoin(F.broadcast(norm))
+        .withColumn("_tgt", tgt)
+        .select(
+            *counts.columns,
+            "_total",
+            F.floor("_tgt").cast("long").alias("_base"),
+            (F.col("_tgt") - F.floor("_tgt")).alias("_rem"),
+        )
+    )
+    leftover = based.agg(
+        (F.first("_total") - F.sum("_base")).cast("long").alias("_left")
+    )
+    w_rem = Window.orderBy(F.col("_rem").desc(), F.col(key_col))
+    return (
+        based.withColumn("_rr", F.row_number().over(w_rem))
+        .crossJoin(F.broadcast(leftover))
+        .select(
+            *counts.columns,
+            (
+                F.col("_base")
+                + (F.col("_rr") <= F.col("_left")).cast("long")
+            ).alias("_quota"),
+        )
+    )
+
+
+def _keep_quota(
+    df: DataFrame, quotas: DataFrame, key_col: str, id_col: str, cap: str
+) -> DataFrame:
+    """``df``'s rows whose stable rank within their key is at most
+    min(``_quota``, ``cap``): no replacement, and a capped surplus is
+    not redistributed (the quota is a contract per key)."""
+    q = quotas.select(key_col, F.least("_quota", cap).alias("_quota"))
+    return (
+        df.withColumn(
+            "_rk", F.row_number().over(_stable_order(key_col, id_col))
+        )
+        .join(F.broadcast(q), key_col)
+        .filter(F.col("_rk") <= F.col("_quota"))
+        .drop("_rk", "_quota")
+    )
+
+
 def resample_source_mix(
     df: DataFrame,
     weights: dict[str, int],
@@ -496,11 +612,10 @@ def resample_source_mix(
         )
         .agg(F.min(F.floor(F.col("_ns") / F.col("_w"))).alias("_m"))
     )
-    w_rank = Window.partitionBy(source_col).orderBy(
-        F.md5(F.col(id_col).cast("string")), F.col(id_col)
-    )
     return (
-        weighted.withColumn("_rk", F.row_number().over(w_rank))
+        weighted.withColumn(
+            "_rk", F.row_number().over(_stable_order(source_col, id_col))
+        )
         .crossJoin(F.broadcast(m_units))
         .filter(F.col("_rk") <= F.col("_w") * F.col("_m"))
         .drop("_w", "_rk", "_m")
@@ -577,12 +692,9 @@ def length_buckets(
     staged = df.select(
         F.col(id_col), nt.cast("int").alias("n_tokens"), bucket.alias("bucket")
     )
-    w = Window.partitionBy("bucket").orderBy(
-        F.md5(F.col(id_col).cast("string")), F.col(id_col)
-    )
+    rk = F.row_number().over(_stable_order("bucket", id_col))
     return staged.withColumn(
-        "batch_id",
-        F.floor((F.row_number().over(w) - 1) / batch_size).cast("long"),
+        "batch_id", F.floor((rk - 1) / batch_size).cast("long")
     )
 
 
@@ -711,46 +823,6 @@ def sample_negatives(
     )
 
 
-def _largest_remainder_quotas(
-    targets: DataFrame,
-    key_col: str,
-    tgt_col: str = "_tgt",
-    total_col: str = "_total",
-) -> DataFrame:
-    """Integer apportionment of a scalar total over fractional
-    per-key targets by largest remainder — deterministic tie-break
-    (remainder DESC, key ASC). ``targets`` carries one row per key
-    with the fractional target and the SAME total on every row; the
-    result keeps every other input column and appends ``_quota``.
-    Shared by the mixture family (``temperature_mix``,
-    ``upsample_epochs``, ``token_budget_mix``) and ``neyman_sample``;
-    each oracle unrolls this exact CTE shape."""
-    passthrough = [
-        c for c in targets.columns if c not in (tgt_col, total_col)
-    ]
-    based = targets.select(
-        *passthrough,
-        F.col(total_col),
-        F.floor(tgt_col).cast("long").alias("_base"),
-        (F.col(tgt_col) - F.floor(tgt_col)).alias("_rem"),
-    )
-    leftover = based.agg(
-        (F.first(total_col) - F.sum("_base")).cast("long").alias("_left")
-    )
-    w_rem = Window.orderBy(F.col("_rem").desc(), F.col(key_col))
-    return (
-        based.withColumn("_rr", F.row_number().over(w_rem))
-        .crossJoin(F.broadcast(leftover))
-        .select(
-            *passthrough,
-            (
-                F.col("_base")
-                + (F.col("_rr") <= F.col("_left")).cast("long")
-            ).alias("_quota"),
-        )
-    )
-
-
 def temperature_mix(
     df: DataFrame,
     total: int,
@@ -762,70 +834,21 @@ def temperature_mix(
     with per-source quotas proportional to n_s^alpha — the
     multilingual-LM sampling rule (XLM-R / mT5: alpha < 1 upweights
     low-resource domains relative to their raw share; alpha = 1 is
-    proportional, alpha = 0 uniform). Fractional targets become
-    integer quotas by largest-remainder apportionment (deterministic
-    tie-break: remainder DESC, source ASC), each capped at n_s (no
-    replacement; capped surplus is NOT redistributed — the quota is a
-    contract per source). WHICH documents survive is the same
-    engine-stable (md5(id), id) rank ``resample_source_mix`` uses.
-
-    Everything stays in-plan: per-source counts are a tiny groupBy,
-    the share normalizer folds the SORTED share list left-to-right
-    JVM-side (one fixed summation order, so any engine folding the
-    same order reproduces the doubles bit-for-bit), apportionment is
-    a window over the #sources-row frame, and quotas broadcast back
-    to the ranked corpus. alpha = 0.5 uses ``sqrt`` explicitly — IEEE
-    requires correctly-rounded sqrt, while ``pow`` may differ in the
-    last ulp across libm implementations (other alphas use ``pow``
-    and carry that caveat).
+    proportional, alpha = 0 uniform). Quotas are ``_apportion``'s,
+    each capped at n_s; the survivors are each source's first
+    documents in the stable rank.
 
     Scale shape: identical to ``resample_source_mix`` — the window
     rank partitioned by source is the only corpus-sized work.
     """
     if total < 1:
         raise ValueError(f"temperature_mix: total must be >= 1, got {total}")
-    if not 0.0 <= alpha <= 1.0:
-        raise ValueError(f"temperature_mix: alpha must be in [0,1], got {alpha}")
+    share = _temperature("temperature_mix", alpha)
     counts = df.groupBy(source_col).agg(
         F.count(F.lit(1)).cast("long").alias("_ns")
     )
-    share = (
-        F.sqrt(F.col("_ns").cast("double"))
-        if alpha == 0.5
-        else F.pow(F.col("_ns").cast("double"), F.lit(alpha))
-    )
-    shared = counts.withColumn("_sh", share)
-    norm = shared.agg(
-        F.aggregate(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col(source_col), F.col("_sh")))
-                ),
-                lambda s: s["_sh"],
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("_S")
-    )
-    targets = shared.crossJoin(F.broadcast(norm)).select(
-        source_col,
-        "_ns",
-        F.lit(total).cast("long").alias("_total"),
-        (F.lit(float(total)) * F.col("_sh") / F.col("_S")).alias("_tgt"),
-    )
-    quotas = _largest_remainder_quotas(targets, source_col).select(
-        source_col,
-        F.least(F.col("_quota"), F.col("_ns")).alias("_quota"),
-    )
-    w_rank = Window.partitionBy(source_col).orderBy(
-        F.md5(F.col(id_col).cast("string")), F.col(id_col)
-    )
-    return (
-        df.withColumn("_rk", F.row_number().over(w_rank))
-        .join(F.broadcast(quotas), source_col)
-        .filter(F.col("_rk") <= F.col("_quota"))
-        .drop("_rk", "_quota")
-    )
+    quotas = _apportion(counts, source_col, share, F.col("_ns"), F.lit(total))
+    return _keep_quota(df, quotas, source_col, id_col, "_ns")
 
 
 def dataset_card(
@@ -921,64 +944,31 @@ def upsample_epochs(
     ``temperature_mix`` when low-resource sources must be repeated
     (fractional epochs), not just kept. Every document in source s
     appears ``quota_s div n_s`` times, and the first
-    ``quota_s mod n_s`` documents by the engine-stable (md5(id), id)
-    rank appear once more — so the output hits each quota EXACTLY
-    (never in expectation), deterministically, with max repeat spread
-    of 1 within a source (no doc repeats twice before every doc
-    repeats once: the round-robin epoch discipline training loaders
-    expect). Emits ``(id, source, epoch)`` with epoch 0-based.
-
-    Quota arithmetic is ``temperature_mix``'s largest-remainder
-    apportionment minus the n_s cap (upsampling's whole point is
-    quota > n_s), same sorted left-fold share normalizer, same
-    deterministic tie-breaks.
+    ``quota_s mod n_s`` documents by the stable rank appear once
+    more — so the output hits each quota EXACTLY (never in
+    expectation), with max repeat spread of 1 within a source (no doc
+    repeats twice before every doc repeats once: the round-robin
+    epoch discipline training loaders expect). Emits
+    ``(id, source, epoch)`` with epoch 0-based. Quotas are
+    ``_apportion``'s, uncapped (upsampling's whole point is
+    quota > n_s).
 
     Scale shape: the per-source rank window is the only corpus-sized
-    work (parallel per-key sorts); quotas are a #sources-row frame
-    broadcast back; the repeat expansion is a per-row
-    ``explode(sequence(...))`` — no join, no shuffle, output rows ∝
-    ``total``.
+    work; the repeat expansion is a per-row ``explode(sequence(...))``
+    — no join, no shuffle, output rows ∝ ``total``.
     """
     if total < 1:
         raise ValueError(f"upsample_epochs: total must be >= 1, got {total}")
-    if not 0.0 <= alpha <= 1.0:
-        raise ValueError(
-            f"upsample_epochs: alpha must be in [0,1], got {alpha}"
-        )
+    share = _temperature("upsample_epochs", alpha)
     counts = df.groupBy(source_col).agg(
         F.count(F.lit(1)).cast("long").alias("_ns")
     )
-    share = (
-        F.sqrt(F.col("_ns").cast("double"))
-        if alpha == 0.5
-        else F.pow(F.col("_ns").cast("double"), F.lit(alpha))
-    )
-    shared = counts.withColumn("_sh", share)
-    norm = shared.agg(
-        F.aggregate(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col(source_col), F.col("_sh")))
-                ),
-                lambda s: s["_sh"],
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("_S")
-    )
-    targets = shared.crossJoin(F.broadcast(norm)).select(
-        source_col,
-        "_ns",
-        F.lit(total).cast("long").alias("_total"),
-        (F.lit(float(total)) * F.col("_sh") / F.col("_S")).alias("_tgt"),
-    )
-    quotas = _largest_remainder_quotas(targets, source_col)
-    w_rank = Window.partitionBy(source_col).orderBy(
-        F.md5(F.col(id_col).cast("string")), F.col(id_col)
-    )
+    quotas = _apportion(counts, source_col, share, F.col("_ns"), F.lit(total))
     ranked = (
         df.select(id_col, source_col)
-        .withColumn("_rk", F.row_number().over(w_rank))
+        .withColumn(
+            "_rk", F.row_number().over(_stable_order(source_col, id_col))
+        )
         .join(F.broadcast(quotas), source_col)
     )
     n_rep = (
@@ -1009,21 +999,19 @@ def token_budget_mix(
     """Temperature-scaled mixture by TOKEN budget: apportion a total
     token budget across sources proportional to (source token
     count)^alpha, then keep the longest prefix of each source's
-    engine-stable (md5(id), id) order whose cumulative token count
-    fits its quota. Doc-count quotas (``temperature_mix``) overweight
-    sources with long documents; training mixtures are specified in
-    tokens, so the quota must be too. ``total_tokens=None`` budgets
-    half the corpus (computed in-plan — no driver count).
+    stable rank whose cumulative token count fits its quota.
+    Doc-count quotas (``temperature_mix``) overweight sources with
+    long documents; training mixtures are specified in tokens, so the
+    quota must be too. ``total_tokens=None`` budgets half the corpus
+    (computed in-plan — no driver count). When every source has 0
+    tokens, the budget is split by document count and every
+    (zero-token) document is kept.
 
     The keep rule is the strict PREFIX rule: the first doc that
     overflows the quota stops its source (no skip-ahead best-fit) —
     deterministic, one keyed window, and order-stable when the
-    corpus grows.
-
-    Reproducibility: token counts, cumulative sums, quotas, and the
-    budget are all exact integers; the only doubles are the n^alpha
-    shares, folded in sorted-source order (the ``temperature_mix``
-    normalizer contract).
+    corpus grows. Token counts, cumulative sums, quotas and the
+    budget are exact integers.
 
     Scale shape: one token-count projection, one per-source window
     cumsum (parallel per-key sorts), a #sources-row quota frame
@@ -1033,70 +1021,28 @@ def token_budget_mix(
         raise ValueError(
             f"token_budget_mix: total_tokens must be >= 1, got {total_tokens}"
         )
-    if not 0.0 <= alpha <= 1.0:
-        raise ValueError(
-            f"token_budget_mix: alpha must be in [0,1], got {alpha}"
-        )
+    share = _temperature("token_budget_mix", alpha)
     toks = df.select(
         id_col,
         source_col,
         token_count(F.col(text_col)).cast("long").alias("n_tokens"),
     )
     counts = toks.groupBy(source_col).agg(
-        F.sum("n_tokens").alias("_ns")
+        F.sum("n_tokens").alias("_ns"), F.count(F.lit(1)).alias("_nd")
     )
-    if total_tokens is None:
-        budget = counts.agg(
-            F.expr("sum(_ns) div 2").cast("long").alias("_budget")
-        )
-    else:
-        budget = counts.sparkSession.range(1).select(
-            F.lit(total_tokens).cast("long").alias("_budget")
-        )
-    share = (
-        F.sqrt(F.col("_ns").cast("double"))
-        if alpha == 0.5
-        else F.pow(F.col("_ns").cast("double"), F.lit(alpha))
+    budget = (
+        F.expr("sum(_ns) div 2")
+        if total_tokens is None
+        else F.lit(total_tokens)
     )
-    shared = counts.withColumn("_sh", share)
-    norm = shared.agg(
-        F.aggregate(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col(source_col), F.col("_sh")))
-                ),
-                lambda s: s["_sh"],
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("_S")
-    )
-    targets = (
-        shared.crossJoin(F.broadcast(norm))
-        .crossJoin(F.broadcast(budget))
-        .select(
-            source_col,
-            "_budget",
-            (
-                F.col("_budget").cast("double")
-                * F.col("_sh")
-                / F.col("_S")
-            ).alias("_tgt"),
-        )
-    )
-    quotas = _largest_remainder_quotas(
-        targets, source_col, total_col="_budget"
-    )
-    w_rank = Window.partitionBy(source_col).orderBy(
-        F.md5(F.col(id_col).cast("string")), F.col(id_col)
-    )
-    cum = (
-        toks.withColumn(
-            "cum_tokens",
-            F.sum("n_tokens").over(
-                w_rank.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
+    quotas = _apportion(counts, source_col, share, F.col("_nd"), budget)
+    cum = toks.withColumn(
+        "cum_tokens",
+        F.sum("n_tokens").over(
+            _stable_order(source_col, id_col).rowsBetween(
+                Window.unboundedPreceding, 0
+            )
+        ),
     )
     return (
         cum.join(F.broadcast(quotas), source_col)
@@ -1120,14 +1066,12 @@ def neyman_sample(
     what you do without variance information; this is what you do
     with it.
 
-    Quotas are integers via the shared largest-remainder apportioner
-    (capped at N_h); WHICH rows survive is the engine-stable
-    (md5(id), id) rank — the same determinism contract as the mixture
-    family. sigma_h is the population standard deviation rounded to 6
-    decimals BEFORE the share arithmetic, and the share normalizer is
-    the sorted left-fold, so the allocation is engine-reproducible.
-    All-zero-variance inputs fall back to proportional allocation
-    (share N_h) rather than dividing by zero.
+    Quotas are ``_apportion``'s, capped at N_h; the survivors are each
+    stratum's first rows in the stable rank. sigma_h is the population
+    standard deviation rounded to 6 decimals BEFORE the share
+    arithmetic, so the allocation is engine-reproducible. All-zero-
+    variance inputs fall back to proportional allocation (the shared
+    zero-share rule).
 
     Scale shape: one combinable per-stratum moment pass, a
     #strata-row quota frame broadcast back, one per-stratum rank
@@ -1140,44 +1084,5 @@ def neyman_sample(
         F.round(F.stddev_pop(value_col), 6).alias("_sd"),
     )
     share = F.col("_nh") * F.col("_sd")
-    shared = stats.withColumn("_sh", share)
-    norm = shared.agg(
-        F.aggregate(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col(stratum_col), F.col("_sh"))
-                    )
-                ),
-                lambda s: s["_sh"],
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("_S"),
-        F.sum("_nh").alias("_N"),
-    )
-    tgt = F.when(
-        F.col("_S") > 0.0,
-        F.lit(float(total)) * F.col("_sh") / F.col("_S"),
-    ).otherwise(
-        F.lit(float(total)) * F.col("_nh") / F.col("_N")
-    )
-    targets = shared.crossJoin(F.broadcast(norm)).select(
-        stratum_col,
-        "_nh",
-        F.lit(total).cast("long").alias("_total"),
-        tgt.alias("_tgt"),
-    )
-    quotas = _largest_remainder_quotas(targets, stratum_col).select(
-        stratum_col,
-        F.least(F.col("_quota"), F.col("_nh")).alias("_quota"),
-    )
-    w_rank = Window.partitionBy(stratum_col).orderBy(
-        F.md5(F.col(id_col).cast("string")), F.col(id_col)
-    )
-    return (
-        df.withColumn("_rk", F.row_number().over(w_rank))
-        .join(F.broadcast(quotas), stratum_col)
-        .filter(F.col("_rk") <= F.col("_quota"))
-        .drop("_rk", "_quota")
-    )
+    quotas = _apportion(stats, stratum_col, share, F.col("_nh"), F.lit(total))
+    return _keep_quota(df, quotas, stratum_col, id_col, "_nh")

@@ -633,8 +633,9 @@ def personalized_pagerank(
     returns to the SEED set instead of everywhere — rank concentrates
     around the seeds, which is the similarity/recommendation reading
     of PageRank ("parts related to THESE parts"). ``seeds`` is a
-    one-column DataFrame of node ids; ranks start at 1/|S| on seeds
-    (0 elsewhere) and every round adds (1-damping)/|S| to seeds only.
+    one-column DataFrame of node ids (a repeated id counts once);
+    ranks start at 1/|S| on seeds (0 elsewhere) and every round adds
+    (1-damping)/|S| to seeds only.
     Nodes unreachable from the seed set stay at exactly 0.0 and are
     dropped from the output. An edge with a NULL endpoint is dropped.
 
@@ -645,7 +646,7 @@ def personalized_pagerank(
     frac, nodes = _rank_inputs(
         "personalized_pagerank", edges, damping, iterations, src, dst, weight
     )
-    seed_nodes = _ckpt(seeds.toDF("node").join(nodes, "node"))
+    seed_nodes = _ckpt(seeds.toDF("node").distinct().join(nodes, "node"))
     n_seeds = seed_nodes.count()
     if n_seeds == 0:
         raise ValueError(

@@ -486,6 +486,66 @@ def test_token_budget_mix_validates(spark):
         token_budget_mix(df, alpha=2.0)
 
 
+def test_token_budget_mix_keeps_an_all_blank_corpus(spark):
+    """Every document has 0 tokens, so every share is 0: the budget is
+    split by document count (the shared zero-share rule) instead of
+    dividing by zero, and each doc is kept with cum_tokens 0."""
+    from gcp_food_delivery_data_pipeline_spark.operators.corpus import (
+        token_budget_mix,
+    )
+
+    rows = [(1, "a", ""), (2, "a", "   "), (3, "b", ""), (4, "c", "\t")]
+    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    for budget in (None, 10):
+        out = token_budget_mix(df, total_tokens=budget).collect()
+        assert sorted((r.doc_id, r.n_tokens, r.cum_tokens) for r in out) == [
+            (1, 0, 0), (2, 0, 0), (3, 0, 0), (4, 0, 0)
+        ]
+
+
+@pytest.mark.parametrize(
+    "counts,total",
+    [
+        # every share 0: quotas proportional to rows (3:1 of 8)
+        ([("a", 0.0, 3), ("b", 0.0, 1)], 8),
+        # three equal remainders (1/3 each): the key order breaks ties
+        ([("c", 1.0, 5), ("a", 1.0, 5), ("b", 1.0, 5)], 7),
+        # one key takes the whole total
+        ([("only", 2.5, 4)], 9),
+        # total below the number of keys: some keys get 0
+        ([("a", 1.0, 2), ("b", 2.0, 2), ("c", 3.0, 2), ("d", 0.5, 2)], 2),
+    ],
+)
+def test_apportion_matches_its_sql_twin(spark, counts, total):
+    """``_apportion`` in Spark and ``_quota_sql`` in DuckDB give the
+    same integer quota per key, and the quotas sum to ``total``."""
+    import duckdb
+
+    from __spark_entry__ import _quota_sql
+    from gcp_food_delivery_data_pipeline_spark.operators.corpus import (
+        _apportion,
+    )
+
+    df = spark.createDataFrame(counts, "k string, sh double, n long")
+    got = {
+        r.k: r._quota
+        for r in _apportion(
+            df, "k", F.col("sh"), F.col("n"), F.lit(total)
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE c (k VARCHAR, sh DOUBLE, n BIGINT)")
+    con.executemany("INSERT INTO c VALUES (?, ?, ?)", counts)
+    want = dict(
+        con.execute(
+            "WITH " + _quota_sql("c", "k", "sh", "n", str(total))
+            + " SELECT k, quota FROM q"
+        ).fetchall()
+    )
+    assert got == want
+    assert sum(got.values()) == total
+
+
 def test_neyman_sample_allocates_by_variance(spark):
     """Two equal-size strata, one constant and one volatile: Neyman
     pushes (almost) the whole budget to the volatile stratum, exact

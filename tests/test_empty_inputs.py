@@ -293,6 +293,8 @@ def test_round6_stats_ops_on_empty(spark):
 
 def test_round6_mixture_and_join_ops_on_empty(spark, empty_docs):
     from gcp_food_delivery_data_pipeline_spark.operators.corpus import (
+        neyman_sample,
+        temperature_mix,
         token_budget_mix,
         upsample_epochs,
     )
@@ -305,6 +307,11 @@ def test_round6_mixture_and_join_ops_on_empty(spark, empty_docs):
 
     assert token_budget_mix(empty_docs).count() == 0
     assert upsample_epochs(empty_docs, total=10).count() == 0
+    assert temperature_mix(empty_docs, total=10).count() == 0
+    ev = spark.createDataFrame(
+        [], "event_id long, event_type string, value double"
+    )
+    assert neyman_sample(ev, "event_type", "value", "event_id", 10).count() == 0
     assert edit_distance_join(empty_docs, "text", "doc_id").count() == 0
     edges = spark.createDataFrame([], "src long, dst long")
     assert hits_bipartite(edges).count() == 0

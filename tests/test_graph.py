@@ -513,6 +513,28 @@ def test_rank_operators_drop_edges_with_a_null_endpoint(spark):
     assert got == ranks(personalized_pagerank(clean, seeds))
 
 
+def test_personalized_pagerank_counts_a_repeated_seed_once(spark):
+    """Seeds ``[1, 1]`` are the seed set {1}: one row per node, the
+    same ranks as seeds ``[1]``, summing to 1 on this leak-free
+    graph."""
+    from gcp_food_delivery_data_pipeline_spark.operators.graph import (
+        personalized_pagerank,
+    )
+
+    e = spark.createDataFrame(
+        [(1, 2), (2, 1), (2, 3), (3, 2)], "src long, dst long"
+    )
+    once = spark.createDataFrame([(1,)], "node long")
+    twice = spark.createDataFrame([(1,), (1,)], "node long")
+    rows = personalized_pagerank(e, twice).collect()
+    assert sorted(r.node for r in rows) == [1, 2, 3]
+    got = {r.node: r.rank for r in rows}
+    assert got == {
+        r.node: r.rank for r in personalized_pagerank(e, once).collect()
+    }
+    assert abs(sum(got.values()) - 1.0) < 1e-12
+
+
 def test_personalized_pagerank_seeded_everywhere_is_pagerank(spark):
     """PPR is PageRank's recursion with a per-node teleport base:
     seeded with every node, its ranks equal ``pagerank``'s row for row
