@@ -30,6 +30,9 @@ three shared rules, defined once in two helpers:
                       order that picks the survivors (also used by
                       ``resample_source_mix`` and ``length_buckets``)
 
+``_quota_join`` brings the quotas back to the rows on a NULL-safe key
+match, so a NULL key is a key like any other.
+
 ``__spark_entry__._quota_sql`` is ``_apportion``'s DuckDB twin.
 
 Everything is Column expressions over DataFrames: chunking explodes
@@ -456,7 +459,8 @@ def pack_sequences(
 def _stable_order(key_col: str, id_col: str) -> WindowSpec:
     """Per-key engine-stable row order ``(md5(id), id)``: content-
     independent, partition-layout-free and identical in DuckDB, which
-    writes it ``ORDER BY md5(CAST(id AS VARCHAR)), id``."""
+    writes it ``ORDER BY md5(CAST(id AS VARCHAR)), id``
+    (``__spark_entry__._stable_rank_sql``)."""
     return Window.partitionBy(key_col).orderBy(
         F.md5(F.col(id_col).cast("string")), F.col(id_col)
     )
@@ -485,14 +489,22 @@ def _apportion(
     reproduces the doubles bit for bit). Targets are total * share / S,
     or total * rows / sum(rows) when every share is 0. Quotas are the
     targets' floors, plus one for the first (total - sum of floors)
-    keys by (remainder DESC, key). ``__spark_entry__._quota_sql`` is
-    the SQL twin."""
+    keys by (remainder DESC, key). A NULL key sorts first in both
+    orders, pinned explicitly because DuckDB's default puts it last.
+    ``__spark_entry__._quota_sql`` is the SQL twin; ``_quota_join``
+    joins the quotas back null-safely."""
     shared = counts.withColumn("_sh", share).withColumn("_nr", rows)
     norm = shared.agg(
         F.aggregate(
             F.transform(
                 F.array_sort(
-                    F.collect_list(F.struct(F.col(key_col), F.col("_sh")))
+                    F.collect_list(
+                        F.struct(
+                            F.col(key_col).isNotNull(),
+                            F.col(key_col),
+                            F.col("_sh"),
+                        )
+                    )
                 ),
                 lambda s: s["_sh"],
             ),
@@ -519,7 +531,9 @@ def _apportion(
     leftover = based.agg(
         (F.first("_total") - F.sum("_base")).cast("long").alias("_left")
     )
-    w_rem = Window.orderBy(F.col("_rem").desc(), F.col(key_col))
+    w_rem = Window.orderBy(
+        F.col("_rem").desc(), F.col(key_col).asc_nulls_first()
+    )
     return (
         based.withColumn("_rr", F.row_number().over(w_rem))
         .crossJoin(F.broadcast(leftover))
@@ -533,6 +547,17 @@ def _apportion(
     )
 
 
+def _quota_join(df: DataFrame, quotas: DataFrame, key_col: str) -> DataFrame:
+    """``df`` joined to its key's row of the broadcast ``quotas``, laid
+    out as ``df.join(quotas, key_col)`` would be, but on a NULL-safe
+    key match so a NULL key keeps its quota."""
+    q = quotas.withColumnRenamed(key_col, "_qk")
+    rest = [c for c in df.columns + q.columns if c not in (key_col, "_qk")]
+    return df.join(
+        F.broadcast(q), F.col(key_col).eqNullSafe(F.col("_qk"))
+    ).select(key_col, *rest)
+
+
 def _keep_quota(
     df: DataFrame, quotas: DataFrame, key_col: str, id_col: str, cap: str
 ) -> DataFrame:
@@ -540,11 +565,11 @@ def _keep_quota(
     min(``_quota``, ``cap``): no replacement, and a capped surplus is
     not redistributed (the quota is a contract per key)."""
     q = quotas.select(key_col, F.least("_quota", cap).alias("_quota"))
+    ranked = df.withColumn(
+        "_rk", F.row_number().over(_stable_order(key_col, id_col))
+    )
     return (
-        df.withColumn(
-            "_rk", F.row_number().over(_stable_order(key_col, id_col))
-        )
-        .join(F.broadcast(q), key_col)
+        _quota_join(ranked, q, key_col)
         .filter(F.col("_rk") <= F.col("_quota"))
         .drop("_rk", "_quota")
     )
@@ -964,12 +989,12 @@ def upsample_epochs(
         F.count(F.lit(1)).cast("long").alias("_ns")
     )
     quotas = _apportion(counts, source_col, share, F.col("_ns"), F.lit(total))
-    ranked = (
-        df.select(id_col, source_col)
-        .withColumn(
+    ranked = _quota_join(
+        df.select(id_col, source_col).withColumn(
             "_rk", F.row_number().over(_stable_order(source_col, id_col))
-        )
-        .join(F.broadcast(quotas), source_col)
+        ),
+        quotas,
+        source_col,
     )
     n_rep = (
         F.expr("_quota div _ns")
@@ -1045,7 +1070,7 @@ def token_budget_mix(
         ),
     )
     return (
-        cum.join(F.broadcast(quotas), source_col)
+        _quota_join(cum, quotas, source_col)
         .filter(F.col("cum_tokens") <= F.col("_quota"))
         .select(id_col, source_col, "n_tokens", "cum_tokens")
     )

@@ -1,20 +1,28 @@
 """Similarity search over an embedding column (``array<float>``).
 
-Three tiers, same result contract (top-k neighbors per query):
+Seven top-k tiers, one result contract (top-k neighbors per query,
+self-matches excluded, ranked by cosine DESC then neighbor_id):
 
-* ``topk_exact``     — brute-force cosine top-k. The oracle-verifiable
-  baseline: queries are broadcast (small side), candidates stream
-  through one codegen stage, and the per-query top-k is a ranked
-  window. O(N·Q) similarity computations, but shuffle-thin: the ranked
-  window's partial ``WindowGroupLimit`` (pushed below the exchange by
-  Spark's ``InferWindowGroupLimit``, pinned in tests) shrinks N·Q
-  candidate rows to ~partitions·Q·k before they cross the wire. This
-  is the shape that survives 100 TB: the wide shuffle carries only
-  local winners.
-* ``lsh_bucketed_topk`` — approximate: sign-random-projection LSH
-  (Charikar 2002) buckets; only same-bucket pairs are scored. Probe
-  multiple hyperplane tables to trade recall for cost. Recall is
-  validated in tests against the exact baseline.
+* ``topk_exact``        — brute-force cosine; the oracle baseline.
+* ``truncated_topk``    — exact cosine over a Matryoshka prefix.
+* ``lsh_bucketed_topk`` — sign-random-projection LSH buckets
+  (Charikar 2002); only pairs sharing a bucket are scored.
+* ``ivf_topk``          — inverted-file index: each query scores only
+  its ``n_probe`` nearest k-means cells.
+* ``pq_topk``           — product-quantization ADC prune, exact re-rank.
+* ``ivf_pq_topk``       — IVF cells + PQ ADC prune, exact re-rank.
+* ``binary_topk``       — sign-bit hamming prune, exact re-rank.
+
+Every tier runs the same recipe, one helper per step: project both
+sides (``_sides``), broadcast the queries onto the candidates as a
+cross join or on an index key and drop self-matches (``_probe``;
+``_ivf_probe`` for the IVF cells), optionally prune each query to
+``rerank`` rows (``_rerank_cut``; ``_adc_rerank`` for the PQ tiers),
+and rank by cosine (``_rank_topk``). The rank window's partial
+``WindowGroupLimit`` (pushed below the exchange by Spark's
+``InferWindowGroupLimit``, pinned in tests) shrinks N·Q candidate rows
+to ~partitions·Q·k before they cross the wire — the shape that
+survives 100 TB: the wide shuffle carries only local winners.
 
 Vector arithmetic is ``zip_with``+``aggregate`` (functions/vectors.py)
 — JVM-side, no Python in the hot path.
@@ -32,35 +40,42 @@ from gcp_food_delivery_data_pipeline_spark.functions.vectors import (
 )
 
 
-def _scored(
-    candidates: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Broadcast cross join query×candidate with cosine similarity.
-
-    Self-match rows (query_id == candidate id) are excluded.
-    """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
-    )
+def _sides(
+    candidates: DataFrame, queries: DataFrame, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The candidate side ``(neighbor_id, _cvec)`` and the query side
+    ``(query_id, _qvec)`` every tier searches."""
     c = candidates.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec")
     )
-    return (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_similarity("_qvec", "_cvec").alias("_sim"),
-        )
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
     )
+    return c, q
 
 
-def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Deterministic top-k per query: (sim DESC, neighbor_id) order."""
+def _probe(
+    c: DataFrame, q: DataFrame, on: str | list[str] | None = None
+) -> DataFrame:
+    """Broadcast the queries onto the candidates — a cross join, or an
+    equi-join on the index key ``on`` — and drop self-matches
+    (query_id == neighbor_id)."""
+    joined = (
+        c.crossJoin(F.broadcast(q)) if on is None else c.join(F.broadcast(q), on)
+    )
+    return joined.filter(F.col("neighbor_id") != F.col("query_id"))
+
+
+def _rank_topk(pairs: DataFrame, k: int, *keep: str) -> DataFrame:
+    """Deterministic cosine top-k per query over ``_qvec``/``_cvec``
+    pairs: (sim DESC, neighbor_id) order, ``keep`` columns carried
+    between neighbor_id and cosine_sim."""
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        *keep,
+        cosine_similarity("_qvec", "_cvec").alias("_sim"),
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("_sim").desc(), F.col("neighbor_id")
     )
@@ -71,6 +86,7 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
             "query_id",
             "rank",
             "neighbor_id",
+            *keep,
             F.round(F.col("_sim"), 6).alias("cosine_sim"),
         )
     )
@@ -91,7 +107,7 @@ def topk_exact(
     shuffle carries ≤ partitions·|Q|·k rows (pinned in
     tests/test_plans.py, so a regression of the pushdown is caught).
     """
-    return _rank_topk(_scored(candidates, queries, id_col, vec_col), k)
+    return _rank_topk(_probe(*_sides(candidates, queries, id_col, vec_col)), k)
 
 
 def _rerank_cut(approx: DataFrame, order_col: str, rerank: int) -> DataFrame:
@@ -278,6 +294,21 @@ def _nearest_cells(vec: str, cents: list[list[float]], n: int) -> Column:
     return F.slice(F.transform(ranked, lambda s: s["cell"]), 1, n)
 
 
+def _ivf_probe(
+    c: DataFrame, q: DataFrame, cents: list[list[float]], n_probe: int
+) -> DataFrame:
+    """The IVF probe: each candidate joins under its one nearest cell,
+    each query under its ``n_probe`` nearest, on the broadcast (cell)
+    equi-join of ``_probe``."""
+    indexed = c.withColumn(
+        "_cell", F.explode(_nearest_cells("_cvec", cents, 1))
+    )
+    probed = q.withColumn(
+        "_cells", _nearest_cells("_qvec", cents, n_probe)
+    ).select(*q.columns, F.explode("_cells").alias("_cell"))
+    return _probe(indexed, probed, "_cell")
+
+
 def ivf_topk(
     candidates: DataFrame,
     queries: DataFrame,
@@ -305,23 +336,8 @@ def ivf_topk(
     cents = train_ivf_centroids(
         candidates, n_clusters, vec_col=vec_col, id_col=id_col, seed=seed
     )
-    indexed = candidates.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec")
-    ).withColumn("_cell", F.explode(_nearest_cells("_cvec", cents, 1)))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
-    ).withColumn("_cells", _nearest_cells("_qvec", cents, n_probe))
-    probed = q.select("query_id", "_qvec", F.explode("_cells").alias("_cell"))
-    scored = (
-        indexed.join(F.broadcast(probed), "_cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_similarity("_qvec", "_cvec").alias("_sim"),
-        )
-    )
-    return _rank_topk(scored, k)
+    c, q = _sides(candidates, queries, id_col, vec_col)
+    return _rank_topk(_ivf_probe(c, q, cents, n_probe), k)
 
 
 def lsh_bucketed_topk(
@@ -347,52 +363,51 @@ def lsh_bucketed_topk(
     bounded; on real clustered embeddings the same machinery prunes
     orders of magnitude. Tests pin recall ≥ 0.5 @ 8 tables × 3 bits.
     """
-    cb = _with_lsh_tables(
-        candidates.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec")
-        ),
-        tables,
-        "_cvec",
-    )
-    qb = _with_lsh_tables(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
-        ),
-        tables,
-        "_qvec",
-    )
+    c, q = _sides(candidates, queries, id_col, vec_col)
+    cb = _with_lsh_tables(c, tables, "_cvec")
+    qb = _with_lsh_tables(q, tables, "_qvec")
     pairs = (
-        cb.select("neighbor_id", "table", "bucket")
-        .join(
-            F.broadcast(qb.select("query_id", "table", "bucket")),
+        _probe(
+            cb.select("neighbor_id", "table", "bucket"),
+            qb.select("query_id", "table", "bucket"),
             ["table", "bucket"],
         )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = (
-        pairs.join(
-            candidates.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec")
-            ),
-            "neighbor_id",
-        )
-        .join(
-            F.broadcast(
-                queries.select(
-                    F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
-                )
-            ),
-            "query_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_similarity("_qvec", "_cvec").alias("_sim"),
-        )
+    return _rank_topk(
+        pairs.join(c, "neighbor_id").join(F.broadcast(q), "query_id"), k
     )
-    return _rank_topk(scored, k)
+
+
+def _int8_grid(df: DataFrame, vec_col: str) -> tuple[Column, Column, Column]:
+    """The per-dimension int8 grid of ``vec_col``: collects the d-row
+    (min, max) stats table once and returns ``(mins, scales, centered)``
+    — the mins and scale = (max-min)/255 as plan literals, and the
+    vector minus its per-dim mins."""
+    stats = (
+        df.select(F.posexplode(vec_col).alias("dim", "x"))
+        .groupBy("dim")
+        .agg(F.min(F.col("x").cast("double")).alias("mn"),
+             F.max(F.col("x").cast("double")).alias("mx"))
+        .orderBy("dim")
+        .collect()
+    )
+    mins = dense_lit([float(r.mn) for r in stats], "array<double>")
+    scales = dense_lit(
+        [(float(r.mx) - float(r.mn)) / 255.0 for r in stats],
+        "array<double>",
+    )
+    centered = F.zip_with(
+        F.col(vec_col), mins, lambda x, mn: x.cast("double") - mn
+    )
+    return mins, scales, centered
+
+
+def _int8_level(d: Column, sc: Column) -> Column:
+    """The dequantized offset of centered coordinate ``d`` on a grid of
+    step ``sc``: round(d/sc) clamped to [0, 255], times ``sc``."""
+    return F.least(F.greatest(F.round(d / sc), F.lit(0.0)), F.lit(255.0)) * sc
 
 
 def quantize_embeddings_int8(
@@ -418,31 +433,12 @@ def quantize_embeddings_int8(
     combined to partitions×d rows. Constant dims (max == min) carry
     zero error by convention.
     """
-    stats = (
-        df.select(F.posexplode(vec_col).alias("dim", "x"))
-        .groupBy("dim")
-        .agg(F.min(F.col("x").cast("double")).alias("mn"),
-             F.max(F.col("x").cast("double")).alias("mx"))
-        .orderBy("dim")
-        .collect()
-    )
-    mins = dense_lit([float(r.mn) for r in stats], "array<double>")
-    scales = dense_lit(
-        [(float(r.mx) - float(r.mn)) / 255.0 for r in stats],
-        "array<double>",
-    )
-    centered = F.zip_with(
-        F.col(vec_col), mins, lambda x, mn: x.cast("double") - mn
-    )
+    _, scales, centered = _int8_grid(df, vec_col)
     err = F.zip_with(
         centered,
         scales,
         lambda d, sc: F.when(sc == 0.0, F.lit(0.0)).otherwise(
-            F.abs(
-                F.least(F.greatest(F.round(d / sc), F.lit(0.0)), F.lit(255.0))
-                * sc
-                - d
-            )
+            F.abs(_int8_level(d, sc) - d)
         ),
     )
     staged = df.select(F.col(id_col), err.alias("_err"))
@@ -473,28 +469,12 @@ def with_dequantized_embeddings(
     measures the REAL retrieval cost of the 4x memory saving (recall
     against the float baseline), not just per-coordinate error.
     """
-    stats = (
-        df.select(F.posexplode(vec_col).alias("dim", "x"))
-        .groupBy("dim")
-        .agg(F.min(F.col("x").cast("double")).alias("mn"),
-             F.max(F.col("x").cast("double")).alias("mx"))
-        .orderBy("dim")
-        .collect()
-    )
-    mins = dense_lit([float(r.mn) for r in stats], "array<double>")
-    scales = dense_lit(
-        [(float(r.mx) - float(r.mn)) / 255.0 for r in stats],
-        "array<double>",
-    )
-    centered = F.zip_with(
-        F.col(vec_col), mins, lambda x, mn: x.cast("double") - mn
-    )
+    mins, scales, centered = _int8_grid(df, vec_col)
     quant = F.zip_with(
         centered,
         scales,
         lambda d, sc: F.when(sc == 0.0, F.lit(0.0)).otherwise(
-            F.least(F.greatest(F.round(d / sc), F.lit(0.0)), F.lit(255.0))
-            * sc
+            _int8_level(d, sc)
         ),
     )
     deq = F.zip_with(quant, mins, lambda q, mn: q + mn)
@@ -711,6 +691,40 @@ def with_pq_codes(
     return df.withColumn(code_col, F.array(*codes))
 
 
+def _with_adc(
+    c: DataFrame, q: DataFrame, books: list[list[list[float]]]
+) -> tuple[DataFrame, DataFrame]:
+    """The ADC sides: candidates with their ``pq_code`` and queries with
+    their lookup table ``_dtab[s][c] = ||q_s - book[s][c]||^2``, computed
+    once per query row and broadcast with it."""
+    sub_d = len(books[0][0])
+    dtab = F.array(
+        *[
+            _pq_book_dists(_pq_sub("_qvec", s, sub_d), book)
+            for s, book in enumerate(books)
+        ]
+    )
+    return with_pq_codes(c, books, "_cvec"), q.withColumn("_dtab", dtab)
+
+
+def _adc_rerank(pairs: DataFrame, k: int, rerank: int) -> DataFrame:
+    """Cosine top-k of the ``rerank`` pairs per query with the smallest
+    asymmetric distance: the ``_dtab`` entries at the candidate's
+    ``pq_code``, summed left to right."""
+    adist = F.aggregate(
+        F.zip_with(
+            F.col("_dtab"),
+            F.col("pq_code"),
+            lambda tab, code: F.element_at(tab, code + 1),
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    return _rank_topk(
+        _rerank_cut(pairs.withColumn("_adist", adist), "_adist", rerank), k
+    )
+
+
 def pq_topk(
     candidates: DataFrame,
     queries: DataFrame,
@@ -738,46 +752,8 @@ def pq_topk(
     books = train_pq_codebooks(
         candidates, n_subspaces, n_codes, vec_col, id_col
     )
-    sub_d = len(books[0][0])
-    coded = with_pq_codes(candidates, books, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cvec"),
-        "pq_code",
-    )
-    # per-query ADC lookup table: dtab[s][c] = ||q_s - book[s][c]||^2
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
-    )
-    dtab = F.array(
-        *[
-            _pq_book_dists(_pq_sub("_qvec", s, sub_d), books[s])
-            for s in range(len(books))
-        ]
-    )
-    q = q.withColumn("_dtab", dtab)
-    approx = (
-        coded.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "_adist",
-            F.aggregate(
-                F.zip_with(
-                    F.col("_dtab"),
-                    F.col("pq_code"),
-                    lambda tab, code: F.element_at(tab, code + 1),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-        )
-    )
-    survivors = _rerank_cut(approx, "_adist", rerank)
-    scored = survivors.select(
-        "query_id",
-        "neighbor_id",
-        cosine_similarity("_qvec", "_cvec").alias("_sim"),
-    )
-    return _rank_topk(scored, k)
+    c, q = _with_adc(*_sides(candidates, queries, id_col, vec_col), books)
+    return _adc_rerank(_probe(c, q), k, rerank)
 
 
 def truncated_topk(
@@ -809,7 +785,7 @@ def truncated_topk(
     cut = F.slice(F.col(vec_col), 1, prefix_dim)
     c = candidates.select(F.col(id_col), cut.alias(vec_col))
     q = queries.select(F.col(id_col), cut.alias(vec_col))
-    return _rank_topk(_scored(c, q, id_col, vec_col), k)
+    return _rank_topk(_probe(*_sides(c, q, id_col, vec_col)), k)
 
 
 def _sign_words(
@@ -875,51 +851,20 @@ def binary_topk(
     N·|Q| — and the window's map-side partial limit (``_rerank_cut``)
     keeps the global rank's shuffle to ~partitions·|Q|·rerank rows.
     """
-    words = _sign_words(vec_col, dim)
-    n_words = len(words)
-    c = candidates.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cvec"),
-        *[w.alias(f"_cb{i}") for i, w in enumerate(words)],
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qvec"),
-        *[w.alias(f"_qb{i}") for i, w in enumerate(words)],
-    )
+    c, q = _sides(candidates, queries, id_col, vec_col)
+    c_words = _sign_words("_cvec", dim)
+    q_words = _sign_words("_qvec", dim)
+    c = c.select(*c.columns, *[w.alias(f"_cb{i}") for i, w in enumerate(c_words)])
+    q = q.select(*q.columns, *[w.alias(f"_qb{i}") for i, w in enumerate(q_words)])
     hamming = sum(
         (
             F.bit_count(F.col(f"_cb{i}").bitwiseXOR(F.col(f"_qb{i}")))
-            for i in range(n_words)
+            for i in range(len(c_words))
         ),
         F.lit(0),
     ).cast("int")
-    paired = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("hamming", hamming)
-    )
-    survivors = _rerank_cut(paired, "hamming", rerank)
-    scored = survivors.select(
-        "query_id",
-        "neighbor_id",
-        "hamming",
-        cosine_similarity("_qvec", "_cvec").alias("_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "rank",
-            "neighbor_id",
-            "hamming",
-            F.round(F.col("_sim"), 6).alias("cosine_sim"),
-        )
-    )
+    paired = _probe(c, q).withColumn("hamming", hamming)
+    return _rank_topk(_rerank_cut(paired, "hamming", rerank), k, "hamming")
 
 
 def ndcg_at_k(
@@ -1068,11 +1013,11 @@ def ivf_pq_topk(
     KiB) — candidate cell-assignment and encoding are zero-shuffle
     maps; the probe is a (cell) equi-join against broadcast queries;
     the rerank cut rides the same map-side-limited window as
-    ``topk_exact`` (``_rerank_cut``). Deterministic end to
-    end (bounded-sample
-    Lloyd coarse quantizer — ``train_ivf_centroids``, a pure function
-    of the seed-keyed hash-sampled draw — md5-sampled codebooks,
-    (dist, id) tie-breaks).
+    ``topk_exact`` (``_rerank_cut``). Deterministic end to end:
+    a bounded-sample Lloyd coarse quantizer (``train_ivf_centroids``,
+    a pure function of the seed-keyed md5-sampled draw), codebooks
+    trained on the id-ordered prefix (``train_pq_codebooks``), and
+    (dist, id) tie-breaks.
     """
     cents = train_ivf_centroids(
         candidates, n_clusters, vec_col=vec_col, id_col=id_col, seed=seed
@@ -1080,52 +1025,5 @@ def ivf_pq_topk(
     books = train_pq_codebooks(
         candidates, n_subspaces, n_codes, vec_col, id_col
     )
-    sub_d = len(books[0][0])
-    coded = with_pq_codes(
-        candidates.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_cvec"),
-        ).withColumn("_cell", F.explode(_nearest_cells("_cvec", cents, 1))),
-        books,
-        "_cvec",
-    )
-    probe_cells = _nearest_cells("_qvec", cents, n_probe)
-    dtab = F.array(
-        *[
-            _pq_book_dists(_pq_sub("_qvec", s, sub_d), books[s])
-            for s in range(len(books))
-        ]
-    )
-    probed = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
-        )
-        .withColumn("_dtab", dtab)
-        .withColumn("_cells", probe_cells)
-        .select(
-            "query_id", "_qvec", "_dtab", F.explode("_cells").alias("_cell")
-        )
-    )
-    approx = (
-        coded.join(F.broadcast(probed), "_cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "_adist",
-            F.aggregate(
-                F.zip_with(
-                    F.col("_dtab"),
-                    F.col("pq_code"),
-                    lambda tab, code: F.element_at(tab, code + 1),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-        )
-    )
-    survivors = _rerank_cut(approx, "_adist", rerank)
-    scored = survivors.select(
-        "query_id",
-        "neighbor_id",
-        cosine_similarity("_qvec", "_cvec").alias("_sim"),
-    )
-    return _rank_topk(scored, k)
+    c, q = _with_adc(*_sides(candidates, queries, id_col, vec_col), books)
+    return _adc_rerank(_ivf_probe(c, q, cents, n_probe), k, rerank)

@@ -514,6 +514,9 @@ def test_token_budget_mix_keeps_an_all_blank_corpus(spark):
         ([("only", 2.5, 4)], 9),
         # total below the number of keys: some keys get 0
         ([("a", 1.0, 2), ("b", 2.0, 2), ("c", 3.0, 2), ("d", 0.5, 2)], 2),
+        # a NULL key ties 'a' and 'b' on remainder: it sorts first on
+        # both engines, so NULL and 'a' take the two leftover units
+        ([("b", 1.0, 2), (None, 1.0, 2), ("a", 1.0, 2)], 2),
     ],
 )
 def test_apportion_matches_its_sql_twin(spark, counts, total):
@@ -544,6 +547,34 @@ def test_apportion_matches_its_sql_twin(spark, counts, total):
     )
     assert got == want
     assert sum(got.values()) == total
+
+
+def test_quota_samplers_keep_a_null_key_quota(spark):
+    """A NULL stratum or source is a key like any other: its quota is
+    joined back null-safely instead of silently dropping its rows."""
+    from gcp_food_delivery_data_pipeline_spark.operators.corpus import (
+        neyman_sample,
+        token_budget_mix,
+        upsample_epochs,
+    )
+
+    strata = spark.createDataFrame(
+        [(1, None, 1.0), (2, None, 3.0), (3, "b", 2.0), (4, "b", 5.0)],
+        "event_id long, event_type string, value double",
+    )
+    out = neyman_sample(strata, "event_type", "value", "event_id", total=2)
+    assert sorted((r.event_type or "") for r in out.collect()) == ["", "b"]
+
+    docs = spark.createDataFrame(
+        [(1, None, "x y"), (2, None, "x y"), (3, "b", "x y"), (4, "b", "x y")],
+        "doc_id long, source string, text string",
+    )
+    ups = upsample_epochs(docs, total=8).collect()
+    assert sorted((r.doc_id, r.epoch) for r in ups) == [
+        (d, e) for d in (1, 2, 3, 4) for e in (0, 1)
+    ]
+    kept = token_budget_mix(docs, total_tokens=8).collect()
+    assert sorted(r.doc_id for r in kept) == [1, 2, 3, 4]
 
 
 def test_neyman_sample_allocates_by_variance(spark):

@@ -396,24 +396,35 @@ def test_binary_topk_sign_words_pack_correctly(spark):
     assert row.w1 == (1 << 0) | (1 << 31)  # dims 32 and 63
 
 
-def test_binary_topk_full_rerank_matches_exact(embeddings):
-    """With rerank >= corpus size the hamming prune drops nothing, so
-    binary_topk must return exactly the exact top-k neighbor lists."""
+@pytest.mark.parametrize("tier", ["binary", "pq", "ivf_pq"])
+def test_full_rerank_tier_matches_exact(embeddings, tier):
+    """With rerank >= corpus size (and, for IVF-PQ, every cell probed)
+    the prune drops nothing, so the tier must return exactly the exact
+    top-k ranked neighbor lists — this pins the shared ``_rerank_cut``
+    and, for the PQ tiers, ``_adc_rerank``."""
     from gcp_food_delivery_data_pipeline_spark.operators.similarity import (
         binary_topk,
+        ivf_pq_topk,
+        pq_topk,
     )
 
     queries = embeddings.filter(F.col("vec_id") < 3)
     n = embeddings.count()
+    ann = {
+        "binary": lambda: binary_topk(embeddings, queries, k=5, rerank=n),
+        "pq": lambda: pq_topk(embeddings, queries, k=5, rerank=n),
+        "ivf_pq": lambda: ivf_pq_topk(
+            embeddings, queries, n_clusters=4, n_probe=4, k=5, rerank=n
+        ),
+    }[tier]()
     exact = topk_exact(embeddings, queries, k=5)
-    bitq = binary_topk(embeddings, queries, k=5, rerank=n)
     a = sorted(
         (r.query_id, r.rank, r.neighbor_id, r.cosine_sim)
         for r in exact.collect()
     )
     b = sorted(
         (r.query_id, r.rank, r.neighbor_id, r.cosine_sim)
-        for r in bitq.collect()
+        for r in ann.collect()
     )
     assert a == b
 
@@ -558,24 +569,6 @@ def test_ivf_pq_recall_floor_and_shape(embeddings):
     a_pairs = {(r.query_id, r.neighbor_id) for r in rows}
     recall = len(a_pairs & e_pairs) / len(e_pairs)
     assert recall >= 0.6, recall
-
-
-def test_ivf_pq_full_probe_full_rerank_is_exact(embeddings):
-    """n_probe == n_clusters and rerank >= corpus: the composite
-    degrades to exact search — neighbor sets must equal topk_exact."""
-    from gcp_food_delivery_data_pipeline_spark.operators.similarity import (
-        ivf_pq_topk,
-    )
-
-    q = embeddings.filter(F.col("vec_id") < 3)
-    n = embeddings.count()
-    ann = ivf_pq_topk(
-        embeddings, q, n_clusters=4, n_probe=4, k=5, rerank=n
-    )
-    exact = topk_exact(embeddings, q, k=5)
-    a = {(r.query_id, r.rank, r.neighbor_id) for r in ann.collect()}
-    e = {(r.query_id, r.rank, r.neighbor_id) for r in exact.collect()}
-    assert a == e
 
 
 _WARM_SESSION_IVFPQ = """
